@@ -723,10 +723,10 @@ def q_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         settings={name: None for name in _ROLLUP_FEATURES},
         id_cols=("user_id", "event_type"),
         base_step_seconds=3600,
-        base_impl="compact",
     )
-    # compact base (1 shuffle; byte-identical to the window-function path,
-    # tests/test_rollup.py::test_compact_base_tier_bitexact) + narrow split
+    # base (1 shuffle; byte-identical to the gapfill window operators,
+    # tests/test_rollup.py::test_compact_base_tier_bitexact) +
+    # narrow split
     base = eng.compute_base(points)
     # with_payload=False: this query discards the payload column, so the
     # cascade must not pay the per-window Gorilla re-encode (guide §1.2);

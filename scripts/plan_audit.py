@@ -192,7 +192,6 @@ def run_audit(
         settings={"length": None, "mean": None},
         id_cols=("user_id", "event_type"),
         base_step_seconds=3600,
-        base_impl="compact",
     )
     pts = em._events_long(spark, sf_dir).select(
         "user_id",

@@ -232,6 +232,21 @@ def test_rfft_one_slot_cache_semantics():
     clear_rfft_cache()
 
 
+def test_rfft_cache_keys_on_dtype():
+    """Two series with the same bytes but different dtypes are different
+    series: the second must not get the first one's cached spectrum."""
+    import numpy as np
+
+    from tsfresh_spark.kernels.spectral import _rfft_cached, clear_rfft_cache
+
+    ints = np.arange(8)
+    floats = ints.view(np.float64)
+    clear_rfft_cache()
+    assert np.array_equal(_rfft_cached(ints), np.fft.rfft(ints))
+    assert np.array_equal(_rfft_cached(floats), np.fft.rfft(floats))
+    clear_rfft_cache()
+
+
 def test_linregress_arange_bitequal_to_general():
     """Round-6: linregress_arange uses exact closed forms for the x-side
     moments of x = arange(n).  Must be BIT-equal to linregress_np on the

@@ -179,38 +179,92 @@ def test_wider_than_day_tier_uses_regroup_path(spark, raw_points, tmp_path_facto
             ), (k, got[k], direct[k])
 
 
+def _gapfill_reference_base(raw_points, step, method):
+    """The base tier rebuilt from the public window-function operators:
+    last point per bucket, a ``sequence()`` grid from the first to the last
+    bucket, ``fill_forward``/``fill_linear``, then day chunks encoded on the
+    driver.  Returns {(doc_id, source, window_start): (n_points, payload)}."""
+    from tsfresh_spark.functions.codec import encode_series
+    from tsfresh_spark.operators.gapfill import fill_forward, fill_linear
+
+    idc = ["doc_id", "source"]
+    observed = raw_points.withColumn(
+        "bucket", (F.col("ts") - F.pmod("ts", F.lit(step))).cast("long")
+    ).groupBy(*idc, "bucket").agg(F.max_by("value", "ts").alias("value"))
+    bounds = observed.groupBy(*idc).agg(
+        F.min("bucket").alias("_a"), F.max("bucket").alias("_b")
+    )
+    grid = bounds.select(
+        *idc, F.explode(F.sequence("_a", "_b", F.lit(step))).alias("bucket")
+    ).join(observed, [*idc, "bucket"], "left")
+    fill = {"ffill": fill_forward, "linear": fill_linear}[method]
+    filled = fill(grid, id_cols=idc, order_col="bucket", value_col="value")
+    pdf = filled.filter(F.col("value").isNotNull()).toPandas()
+    pdf["day"] = pdf.bucket - pdf.bucket % DAY
+    ref = {}
+    for (doc, source, day), g in pdf.sort_values("bucket").groupby(
+        ["doc_id", "source", "day"]
+    ):
+        ts = g.bucket.to_numpy(np.int64)
+        ref[(doc, source, int(day))] = (
+            len(ts), encode_series(ts, g.value.to_numpy(np.float64)),
+        )
+    return ref
+
+
 @pytest.mark.parametrize("method", ["ffill", "linear"])
-def test_compact_base_tier_bitexact(spark, raw_points, tmp_path_factory, method):
-    """The one-shuffle compact base tier must reproduce the window-function
-    path byte-for-byte (payloads included)."""
-    eng_kwargs = dict(
-        settings=minimal_settings(), base_step_seconds=300, gap_method=method,
-        range_partitions=2,
+def test_compact_base_tier_bitexact(spark, raw_points, method):
+    """The one-shuffle base tier must reproduce the public gapfill window
+    operators over a sequence() grid byte-for-byte (payloads included)."""
+    eng = RollupEngine(
+        spark, "/tmp/rollup_base_ab_unused", settings=minimal_settings(),
+        base_step_seconds=300, gap_method=method,
     )
-    a = RollupEngine(spark, str(tmp_path_factory.mktemp("bw")), **eng_kwargs)
-    b = RollupEngine(
-        spark, str(tmp_path_factory.mktemp("bc")), base_impl="compact", **eng_kwargs
-    )
-    pa = a._base_tier(raw_points).toPandas()
-    pb = b._base_tier_compact(raw_points).toPandas()
-    key = ["doc_id", "source", "window_start"]
-    pa = pa.sort_values(key).reset_index(drop=True)
-    pb = pb.sort_values(key).reset_index(drop=True)
-    assert len(pa) == len(pb)
-    for ra, rb in zip(pa.itertuples(), pb.itertuples()):
-        assert (ra.doc_id, ra.source, ra.window_start) == (
-            rb.doc_id, rb.source, rb.window_start,
-        )
-        assert ra.n_points == rb.n_points
-        assert bytes(ra.payload) == bytes(rb.payload), (
-            ra.doc_id, ra.window_start, method,
-        )
-    # and the compact plan has exactly one exchange
+    base = eng.compute_base(raw_points)
+    got = {
+        (r.doc_id, r.source, r.window_start): (r.n_points, bytes(r.payload))
+        for r in base.toPandas().itertuples()
+    }
+    want = _gapfill_reference_base(raw_points, 300, method)
+    assert got.keys() == want.keys()
+    for key in want:
+        assert got[key] == want[key], (key, method)
+    # and the base plan (of a frame not yet run) has exactly one exchange
     plan = (
-        b._base_tier_compact(raw_points)
-        ._jdf.queryExecution().executedPlan().toString()
+        eng.compute_base(raw_points)._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1
+
+
+def test_base_tier_tied_timestamps_deterministic(spark, tmp_path_factory):
+    """A bucket whose last timestamp is tied keeps the point the raw tier
+    stores last in (ts, value) order, whatever order the points arrive in."""
+    schema = "doc_id string, source string, ts long, value double"
+    a = spark.createDataFrame(
+        [("d1", "web", 10, 1.0), ("d1", "web", 50, 5.0), ("d1", "web", 130, 3.0)],
+        schema,
+    )
+    b = spark.createDataFrame(
+        [("d1", "web", 50, 2.0), ("d1", "web", 170, 4.0), ("d1", "web", 170, 0.5)],
+        schema,
+    )
+    expected = sorted((r.ts, r.value) for r in a.union(b).collect())
+    payloads = {}
+    for order, points in [("ab", a.union(b)), ("ba", b.union(a))]:
+        eng = RollupEngine(
+            spark, str(tmp_path_factory.mktemp(f"ties_{order}")),
+            settings=minimal_settings(), base_step_seconds=60, tiers=[],
+        )
+        paths = eng.run(points.coalesce(1), job_id=f"job-ties-{order}")
+        (raw,) = spark.read.parquet(paths["raw"]).collect()
+        ts, vals = decode_series(bytes(raw.payload))
+        assert list(zip(ts.tolist(), vals.tolist())) == expected
+        (base,) = spark.read.parquet(paths["base"]).collect()
+        payloads[order] = bytes(base.payload)
+    assert payloads["ab"] == payloads["ba"]
+    ts, vals = decode_series(payloads["ab"])
+    assert ts.tolist() == [0, 60, 120]
+    assert vals.tolist() == [5.0, 5.0, 4.0]
 
 
 def test_retention_ages_out_old_windows(spark, raw_points, tmp_path_factory):
@@ -254,7 +308,6 @@ def test_tier_without_payload_matches_with_payload(spark, raw_points):
         settings=minimal_settings(),
         id_cols=("doc_id", "source"),
         base_step_seconds=60,
-        base_impl="compact",
     )
     base = eng.compute_base(raw_points)
     with_p = eng.compute_tier(base, 3600).toPandas()

@@ -129,14 +129,13 @@ def test_windowed_stream_equals_rollup_tier_bitexact(spark, tmp_path_factory):
     got = spark.sql("select * from feat_stream_rollup").toPandas()
     got = got[got.window_start < cutoff]
 
-    # batch plane: the real rollup engine (compact base, codec, cascade)
+    # batch plane: the real rollup engine (base tier, codec, cascade)
     eng = RollupEngine(
         spark,
         src + "-tiers",
         settings=settings,
         id_cols=("doc_id", "source"),
         base_step_seconds=step,
-        base_impl="compact",
     )
     points = spark.read.parquet(src).select(
         "doc_id",

@@ -18,9 +18,9 @@ from tsfresh_spark.kernels.registry import kernel
 # one-slot cross-kernel cache: fft_coefficient and fft_aggregated both
 # take the rfft of the SAME series inside one extraction plan — the second
 # call reuses the first call's spectrum (the identical array object, so
-# sharing is bit-exact by construction).  Keyed by the raw series bytes;
-# cleared per series by compute_series_features.
-_RFFT_CACHE: list = [None]  # (key_bytes, spectrum)
+# sharing is bit-exact by construction).  Keyed by the series dtype and
+# raw bytes; cleared per series by compute_series_features.
+_RFFT_CACHE: list = [None]  # ((dtype_str, key_bytes), spectrum)
 
 
 def clear_rfft_cache() -> None:
@@ -30,7 +30,7 @@ def clear_rfft_cache() -> None:
 
 def _rfft_cached(x) -> np.ndarray:
     arr = np.asarray(x)
-    key = arr.tobytes()
+    key = (arr.dtype.str, arr.tobytes())
     hit = _RFFT_CACHE[0]
     if hit is not None and hit[0] == key:
         return hit[1]

@@ -11,14 +11,19 @@ Tier cascade over a corpus of (doc_id, source) series:
             the base-grid points inside the window, plus the compressed
             point payload.
 
-Feature tiers read the BASE tier's compressed day-chunks, never the raw
-input: day-aligned windows split each payload inside a narrow ``mapInPandas``
-(zero shuffle); wider windows decode + regroup (one shuffle).  The codec is
-bit-exact, so "cascade" and "direct" produce identical features (asserted in
-tests).  Every tier write is range-laid-out
-(repartitionByRange on doc_id, sorted within partitions) and recorded in the
-manifest with per-file row/byte metrics and a COMMIT record; a re-run of the
-same job_id skips committed tiers (resume from checkpoint).
+Each tier has one physical path.  Raw groups the points per (series, day)
+(one shuffle).  Base groups them per series (one shuffle) and buckets,
+grids, fills and day-chunks each series in numpy inside one
+``applyInPandas`` call.  Feature tiers read the BASE tier's compressed
+day-chunks, never the raw input: day-aligned windows split each payload
+inside a narrow ``mapInPandas`` (zero shuffle); wider windows decode +
+regroup (one shuffle).  Every tier row comes from one window-row builder
+(:func:`_window_rows`) under one stored schema.  The codec is bit-exact, so
+"cascade" and "direct" produce identical features (asserted in tests).
+Every tier write is range-laid-out (repartitionByRange on doc_id, sorted
+within partitions) and recorded in the manifest with per-file row/byte
+metrics and a COMMIT record; a re-run of the same job_id skips committed
+tiers (resume from checkpoint).
 
 Timestamps are epoch seconds (int64) throughout the engine — integer window
 arithmetic (``ts - ts % step``) is exact, codegen-friendly, and avoids
@@ -65,7 +70,6 @@ class RollupEngine:
     gap_method: str = "ffill"
     tiers: list[TierSpec] = field(default_factory=lambda: list(DEFAULT_TIERS))
     range_partitions: int | None = None
-    base_impl: str = "windows"  # "windows" (documented op) | "compact" (1 shuffle)
 
     def __post_init__(self):
         self.manifest = Manifest(self.spark, self.base_path)
@@ -91,18 +95,14 @@ class RollupEngine:
 
     def _chunk_points(self, points: DataFrame, window_seconds: int) -> DataFrame:
         """points (id..., ts long, value double) → one row per window with
-        sorted ts/value arrays (exact order by ts)."""
+        its ``ts``/``value`` arrays in (ts, value) order."""
         idc = list(self.id_cols)
         bucketed = points.withColumn(
             "window_start", (F.col("ts") - F.pmod("ts", F.lit(window_seconds))).cast("long")
         )
         return bucketed.groupBy(*idc, "window_start").agg(
             F.array_sort(F.collect_list(F.struct("ts", "value"))).alias("pts")
-        )
-
-    def _decode_tier_points(self, tier: str) -> DataFrame:
-        """Read a committed tier and decode its payloads back to points."""
-        return self.decode_points(self.spark.read.parquet(self.tier_path(tier)))
+        ).select(*idc, F.col("pts.ts").alias("ts"), F.col("pts.value").alias("value"))
 
     def decode_points(self, stored: DataFrame) -> DataFrame:
         """Decode a tier frame's payload column back to (id..., ts, value)."""
@@ -122,79 +122,90 @@ class RollupEngine:
             F.explode(F.arrays_zip("ts_arr", "val_arr")).alias("p"),
         ).select(*idc, F.col("p.ts_arr").alias("ts"), F.col("p.val_arr").alias("value"))
 
+    def _tier_schema(self, frame: DataFrame) -> str:
+        """The stored schema every tier shares: id_cols (typed as in
+        ``frame``) + window_start, n_points, features, payload."""
+        id_field_types = ", ".join(
+            f"{f.name} {f.dataType.simpleString()}"
+            for f in frame.schema.fields
+            if f.name in self.id_cols
+        )
+        return (
+            f"{id_field_types}, window_start long, n_points long, "
+            "features map<string,double>, payload binary"
+        )
+
+    def _map_windows(
+        self,
+        frame: DataFrame,
+        window_seconds: int,
+        *,
+        with_features: bool,
+        with_payload: bool = True,
+    ) -> DataFrame:
+        """Narrow map: each row of ``frame`` (id_cols + either ``ts``/``value``
+        arrays or a ``payload`` decoded here) becomes one tier row per
+        ``window_seconds`` window its points fall in — no shuffle."""
+        from tsfresh_spark.functions.codec import decode_series
+
+        idc = list(self.id_cols)
+        kind_col = self.id_cols[1]
+        settings = self.settings if with_features else None
+        encoded = "payload" in frame.columns
+
+        def run(batches):
+            for pdf in batches:
+                if encoded:
+                    series = (decode_series(bytes(p)) for p in pdf["payload"].values)
+                else:
+                    series = zip(pdf["ts"].values, pdf["value"].values)
+                rows = []
+                for (ts, values), *ids in zip(series, *(pdf[c].values for c in idc)):
+                    id_map = dict(zip(idc, ids))
+                    rows += _window_rows(
+                        id_map, ts, values, window_seconds,
+                        kind=str(id_map[kind_col]), settings=settings,
+                        with_payload=with_payload,
+                    )
+                if rows:
+                    yield pd.DataFrame(rows)
+
+        cols = ["payload"] if encoded else ["ts", "value"]
+        return frame.select(*idc, *cols).mapInPandas(run, self._tier_schema(frame))
+
     # ------------------------------------------------------- tier computation
 
     def _archive_tier(self, points: DataFrame) -> DataFrame:
         """raw archival: per-day compressed chunks, no features."""
-        chunks = self._chunk_points(points, DAY)
-        return self._apply_chunks(chunks, with_features=False)
+        return self._map_windows(self._chunk_points(points, DAY), DAY, with_features=False)
 
-    def _base_tier(self, points: DataFrame) -> DataFrame:
-        """gap-filled regular grid at base_step, stored per-day."""
-        from tsfresh_spark.operators.gapfill import fill_forward, fill_linear, regularize
+    def compute_base(self, points: DataFrame) -> DataFrame:
+        """Public: the gap-filled, payload-encoded base tier for raw
+        ``points`` (id_cols + ts:long epoch-seconds + value:double), without
+        touching tier storage — the building block ``run()`` persists.
 
-        idc = list(self.id_cols)
-        step = self.base_step_seconds
-        bucketed = points.withColumn(
-            "bucket", (F.col("ts") - F.pmod("ts", F.lit(step))).cast("long")
-        )
-        observed = bucketed.groupBy(*idc, "bucket").agg(
-            F.max_by("value", "ts").alias("value")
-        )
-        bounds = observed.groupBy(*idc).agg(
-            F.min("bucket").alias("_a"), F.max("bucket").alias("_b")
-        )
-        grid = bounds.select(
-            *idc,
-            F.explode(F.sequence("_a", "_b", F.lit(step))).alias("bucket"),
-        ).join(observed, [*idc, "bucket"], "left")
-        if self.gap_method == "ffill":
-            filled = fill_forward(
-                grid, id_cols=idc, order_col="bucket", value_col="value"
-            )
-        elif self.gap_method == "linear":
-            filled = fill_linear(
-                grid, id_cols=idc, order_col="bucket", value_col="value"
-            )
-        else:
-            raise ValueError(f"unsupported gap_method {self.gap_method!r}")
-        pts = filled.filter(F.col("value").isNotNull()).select(
-            *idc, F.col("bucket").alias("ts"), "value"
-        )
-        chunks = self._chunk_points(pts, DAY)
-        return self._apply_chunks(chunks, with_features=False)
-
-    def _base_tier_compact(self, points: DataFrame) -> DataFrame:
-        """Single-shuffle base tier: one ``applyInPandas`` per series does
-        bucket → grid → fill → day-chunk → encode in numpy.
-
-        Bit-equal to :meth:`_base_tier` (asserted in tests): the grid spans
-        first..last observed bucket, so linear fill is interior-only
-        (np.interp) and ffill is a forward index scan.  The window-function
-        path remains the default/documented operator; this is the
-        one-exchange physical alternative for very large fleets.
+        One shuffle: the points are grouped per series and one
+        ``applyInPandas`` call does bucket → grid → fill → day-chunk →
+        encode in numpy.  Each ``base_step`` bucket keeps its last point in
+        (ts, value) order — the order the raw tier stores — so a tied last
+        timestamp resolves the same way whatever order the shuffle delivers.
+        The grid spans the first..last observed bucket, so linear fill is
+        interior-only and ffill is a forward index scan; both equal the
+        public ``gapfill`` operators over a ``sequence()`` grid byte for
+        byte (tests/test_rollup.py).
         """
         idc = list(self.id_cols)
         step = self.base_step_seconds
         method = self.gap_method
         if method not in ("ffill", "linear"):
             raise ValueError(f"unsupported gap_method {method!r}")
-        id_field_types = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in points.schema.fields
-            if f.name in idc
-        )
-        schema = (
-            f"{id_field_types}, window_start long, n_points long, "
-            "features map<string,double>, payload binary"
-        )
 
         def per_series(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            order = np.argsort(pdf["ts"].values, kind="mergesort")
+            order = np.lexsort((pdf["value"].values, pdf["ts"].values))
             ts = pdf["ts"].values[order].astype(np.int64)
             vals = pdf["value"].values[order].astype(np.float64)
             bucket = ts - ts % step
-            # last observation per bucket (by ts): in ts order the last
+            # last observation per bucket: in (ts, value) order the last
             # index of each bucket run wins
             change = np.concatenate([bucket[1:] != bucket[:-1], [True]])
             ub = bucket[change]
@@ -220,119 +231,16 @@ class RollupEngine:
                         grid - prev_t
                     ).astype(np.float64) / (next_t - prev_t).astype(np.float64)
                 filled = np.where(observed, prev_v, interp)
-            day_start = grid - grid % DAY
-            cuts = np.flatnonzero(np.diff(day_start)) + 1
-            starts = np.concatenate([[0], cuts])
-            ends = np.concatenate([cuts, [len(grid)]])
-            id_map = dict(zip(idc, key))
-            rows = [
-                {
-                    **id_map,
-                    "window_start": int(day_start[s]),
-                    "n_points": int(e - s),
-                    "features": None,
-                    "payload": encode_series(grid[s:e], filled[s:e]),
-                }
-                for s, e in zip(starts, ends)
-            ]
-            return pd.DataFrame(rows)
+            return pd.DataFrame(_window_rows(dict(zip(idc, key)), grid, filled, DAY))
 
         from tsfresh_spark.plans.partitioning import pin_group_partitions
 
         # pin the grouping shuffle: AQE byte-coalescing would run this
         # compute-bound stage on 1-2 cores for small-byte inputs
         pinned = pin_group_partitions(points, *idc)
-        return pinned.groupBy(*idc).applyInPandas(per_series, schema=schema)
-
-    def _feature_tier(self, points: DataFrame, window_seconds: int) -> DataFrame:
-        chunks = self._chunk_points(points, window_seconds)
-        return self._apply_chunks(chunks, with_features=True)
-
-    def _cascade_tier(
-        self,
-        stored: DataFrame,
-        window_seconds: int,
-        *,
-        with_payload: bool = True,
-    ) -> DataFrame:
-        """Feature tier as a NARROW map over a stored tier whose storage
-        chunks (per-day payloads) are window-aligned: each payload is
-        decoded and split at window boundaries inside the UDF — no explode,
-        no shuffle, no regroup.  Valid when DAY % window_seconds == 0 (every
-        window then lives inside exactly one day chunk).
-
-        ``with_payload=False`` skips re-encoding the per-window Gorilla
-        payloads (the column comes back NULL): a consumer that only reads
-        ``features``/``n_points`` — e.g. a report query — should not pay the
-        bit-packing cost for bytes it immediately discards (guide §1.2:
-        don't compute what you throw away).  Features and every other
-        column are identical either way (tests/test_rollup.py)."""
-        if DAY % window_seconds != 0:
-            raise ValueError("narrow cascade needs DAY-aligned windows")
-        from tsfresh_spark.functions.codec import decode_series
-
-        idc = list(self.id_cols)
-        kind_col = self.id_cols[1]
-        settings = self.settings
-        id_field_types = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in stored.schema.fields
-            if f.name in idc
+        return pinned.groupBy(*idc).applyInPandas(
+            per_series, schema=self._tier_schema(points)
         )
-        schema = (
-            f"{id_field_types}, window_start long, n_points long, "
-            "features map<string,double>, payload binary"
-        )
-
-        def run(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                rows = []
-                id_arrays = [pdf[c].values for c in idc]
-                for payload, kind, *ids in zip(
-                    pdf["payload"].values, pdf[kind_col].values, *id_arrays
-                ):
-                    ts, vals = decode_series(bytes(payload))
-                    if len(ts) == 0:
-                        continue
-                    w = ts - ts % window_seconds
-                    cuts = np.flatnonzero(np.diff(w)) + 1
-                    starts = np.concatenate([[0], cuts])
-                    ends = np.concatenate([cuts, [len(ts)]])
-                    id_map = dict(zip(idc, ids))
-                    for s, e in zip(starts, ends):
-                        sub_ts, sub_v = ts[s:e], vals[s:e]
-                        rows.append(
-                            {
-                                **id_map,
-                                "window_start": int(w[s]),
-                                "n_points": int(e - s),
-                                "features": dict(
-                                    compute_series_features(
-                                        sub_v, str(kind), settings
-                                    )
-                                ),
-                                "payload": (
-                                    encode_series(sub_ts, sub_v)
-                                    if with_payload
-                                    else None
-                                ),
-                            }
-                        )
-                yield pd.DataFrame(rows)
-
-        return stored.select(*idc, "payload").mapInPandas(run, schema)
-
-    # ------------------------------------------------- public tier entrypoints
-
-    def compute_base(self, points: DataFrame) -> DataFrame:
-        """Public: the gap-filled, payload-encoded base tier for raw
-        ``points`` (id_cols + ts:long epoch-seconds + value:double), using
-        the engine's configured physical strategy (``base_impl``) without
-        touching tier storage — the building block ``run()`` persists."""
-        fn = self._base_tier_compact if self.base_impl == "compact" else self._base_tier
-        return fn(points)
 
     def compute_tier(
         self,
@@ -343,64 +251,25 @@ class RollupEngine:
     ) -> DataFrame:
         """Public: one feature tier at ``window_seconds`` from a base-tier
         frame (as returned by :meth:`compute_base` or read back from tier
-        storage).  Picks the same physical strategy as ``run()``: the
-        zero-shuffle narrow payload split when windows are day-aligned,
-        otherwise decode + regroup (one shuffle).  ``with_payload=False``
-        (day-aligned path) skips the per-window payload re-encode for
-        consumers that discard the payload column — see
-        :meth:`_cascade_tier`."""
+        storage) — the same call ``run()`` persists.
+
+        Day-aligned windows (``DAY % window_seconds == 0``) live inside one
+        stored day chunk, so each payload is decoded and split at window
+        boundaries inside a narrow ``mapInPandas``: zero shuffle.  Wider
+        windows decode the points and regroup them per window (one
+        shuffle).  ``with_payload=False`` skips re-encoding the per-window
+        Gorilla payloads (the column comes back NULL): a consumer that only
+        reads ``features``/``n_points`` — e.g. a report query — should not
+        pay the bit-packing cost for bytes it immediately discards.
+        Features and every other column are identical either way
+        (tests/test_rollup.py)."""
         if DAY % window_seconds == 0:
-            return self._cascade_tier(
-                base, window_seconds, with_payload=with_payload
-            )
-        return self._feature_tier(self.decode_points(base), window_seconds)
-
-    def _apply_chunks(self, chunks: DataFrame, *, with_features: bool) -> DataFrame:
-        idc = list(self.id_cols)
-        settings = self.settings
-        kind_col = self.id_cols[1]
-        id_field_types = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in chunks.schema.fields
-            if f.name in idc
+            frame = base
+        else:
+            frame = self._chunk_points(self.decode_points(base), window_seconds)
+        return self._map_windows(
+            frame, window_seconds, with_features=True, with_payload=with_payload
         )
-        schema = (
-            f"{id_field_types}, window_start long, n_points long, "
-            "features map<string,double>, payload binary"
-        )
-
-        def run_batch(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                rows = []
-                id_arrays = [pdf[c].values for c in idc]
-                kinds = pdf[kind_col].values
-                for pts, window_start, kind, *ids in zip(
-                    pdf["pts"].values,
-                    pdf["window_start"].values,
-                    kinds,
-                    *id_arrays,
-                ):
-                    ts = np.array([p["ts"] for p in pts], dtype=np.int64)
-                    values = np.array([p["value"] for p in pts], dtype=np.float64)
-                    feats = (
-                        dict(compute_series_features(values, str(kind), settings))
-                        if with_features
-                        else None
-                    )
-                    rows.append(
-                        {
-                            **dict(zip(idc, ids)),
-                            "window_start": window_start,
-                            "n_points": len(ts),
-                            "features": feats,
-                            "payload": encode_series(ts, values),
-                        }
-                    )
-                yield pd.DataFrame(rows)
-
-        return chunks.mapInPandas(run_batch, schema=schema)
 
     # ------------------------------------------------------------- retention
 
@@ -489,29 +358,49 @@ class RollupEngine:
             return True
 
         do_tier("raw", lambda: self._archive_tier(raw_points), "raw<-input")
-        base_fn = (
-            self._base_tier_compact if self.base_impl == "compact" else self._base_tier
-        )
-        do_tier(
-            "base",
-            lambda: base_fn(raw_points),
-            f"base<-input(gapfill:{self.base_impl})",
-        )
-
+        do_tier("base", lambda: self.compute_base(raw_points), "base<-input(gapfill)")
         for spec in self.tiers:
-            if DAY % spec.window_seconds == 0:
-                # day-aligned windows: narrow payload split, zero shuffle
-                def compute(spec=spec):
-                    stored = self.spark.read.parquet(self.tier_path("base"))
-                    return self._cascade_tier(stored, spec.window_seconds)
-
-                lineage = f"{spec.name}<-base(narrow-split)"
-            else:
-                # wider-than-a-day windows: decode + regroup (one shuffle)
-                def compute(spec=spec):
-                    pts = self._decode_tier_points("base")
-                    return self._feature_tier(pts, spec.window_seconds)
-
-                lineage = f"{spec.name}<-base(decode+window)"
-            do_tier(spec.name, compute, lineage)
+            do_tier(
+                spec.name,
+                lambda spec=spec: self.compute_tier(
+                    self.spark.read.parquet(self.tier_path("base")), spec.window_seconds
+                ),
+                f"{spec.name}<-base",
+            )
         return out
+
+
+def _window_rows(
+    id_map: dict,
+    ts: np.ndarray,
+    values: np.ndarray,
+    window_seconds: int,
+    *,
+    kind: str | None = None,
+    settings: dict | None = None,
+    with_payload: bool = True,
+) -> list[dict]:
+    """Cut one series' sorted ``(ts, values)`` at ``window_seconds``
+    boundaries into tier rows: ids, window start, point count, the feature
+    map (when ``settings`` is given) and the encoded payload (when
+    ``with_payload``)."""
+    if len(ts) == 0:
+        return []
+    w = ts - ts % window_seconds
+    cuts = np.flatnonzero(np.diff(w)) + 1
+    starts = np.concatenate([[0], cuts])
+    ends = np.concatenate([cuts, [len(ts)]])
+    return [
+        {
+            **id_map,
+            "window_start": int(w[s]),
+            "n_points": int(e - s),
+            "features": (
+                None
+                if settings is None
+                else dict(compute_series_features(values[s:e], kind, settings))
+            ),
+            "payload": encode_series(ts[s:e], values[s:e]) if with_payload else None,
+        }
+        for s, e in zip(starts, ends)
+    ]
