@@ -63,32 +63,190 @@ def test_grouped_extraction_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange") == 1  # exactly the groupBy co-location
 
 
-def test_stage_profiler_captures_section_stages(spark):
-    from pyspark.sql import functions as F
+def _drain_listeners(spark) -> None:
+    """Wait until the status store has seen every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
 
+
+def _store_stage_list(spark):
+    store = spark.sparkContext._jsc.sc().statusStore()
+    defaults = [getattr(store, f"stageList$default${i}")() for i in range(2, 6)]
+    stages = store.stageList(spark._jvm.java.util.ArrayList(), *defaults)
+    return [stages.apply(i) for i in range(stages.size())]
+
+
+def _store_stage_ids(spark) -> set:
+    """Every stage id the status store holds (a full snapshot)."""
+    return {int(s.stageId()) for s in _store_stage_list(spark)}
+
+
+def _store_stages_since(spark, before: set) -> dict:
+    """Status-store diff: stage id → (tasks, run ms, cpu ms, shuffle read,
+    shuffle write) of every stored stage whose id is not in ``before``."""
+    out = {}
+    for s in _store_stage_list(spark):
+        if int(s.stageId()) not in before:
+            out[int(s.stageId())] = (
+                int(s.numTasks()),
+                int(s.executorRunTime()),
+                int(s.executorCpuTime()) // 1_000_000,
+                int(s.shuffleReadBytes()),
+                int(s.shuffleWriteBytes()),
+            )
+    return out
+
+
+def _ids(prof) -> set:
+    return {m.stage_id for m in prof.stages}
+
+
+def _group_sum(spark, n: int) -> None:
+    spark.range(n).groupBy((F.col("id") % 13).alias("k")).agg(F.sum("id")).collect()
+
+
+def test_stage_profiler_captures_section_stages(spark):
     from tsfresh_spark.plans.profiling import StageProfiler
 
     # outside-the-block job must not be attributed to the section
     spark.range(10000).groupBy((F.col("id") % 7).alias("k")).count().collect()
+    _drain_listeners(spark)
+    before = _store_stage_ids(spark)
     with StageProfiler(spark) as prof:
-        (
-            spark.range(200000)
-            .groupBy((F.col("id") % 13).alias("k"))
-            .agg(F.sum("id").alias("s"))
-            .collect()
-        )
+        _group_sum(spark, 200000)
+        _drain_listeners(spark)
     s = prof.summary()
     assert s["num_stages"] >= 2  # map + reduce side of the groupBy
     assert s["executor_run_time_ms"] >= 0
     assert s["shuffle_write_bytes"] > 0
     assert s["shuffle_read_bytes"] > 0
     assert all(m.stage_id >= 0 for m in prof.stages)
+    # the tag-scoped stages are exactly what a status-store diff sees
+    diff = _store_stages_since(spark, before)
+    assert _ids(prof) == set(diff)
+    tasks, run_ms, cpu_ms, shuffle_r, shuffle_w = (sum(c) for c in zip(*diff.values()))
+    assert s["num_tasks"] == tasks
+    assert s["executor_run_time_ms"] == run_ms
+    assert s["executor_cpu_time_ms"] == cpu_ms
+    assert s["shuffle_read_bytes"] == shuffle_r
+    assert s["shuffle_write_bytes"] == shuffle_w
     # a second profiled section sees only its own stages
     with StageProfiler(spark) as prof2:
         spark.range(100).count()
-    assert {m.stage_id for m in prof2.stages}.isdisjoint(
-        {m.stage_id for m in prof.stages}
-    )
+    assert _ids(prof2).isdisjoint(_ids(prof))
+
+
+def test_stage_profiler_ignores_other_threads(spark):
+    """Job tags are thread-local: a job another thread runs during the
+    block is not the block's, though a status-store diff would count it."""
+    import threading
+
+    from tsfresh_spark.plans.profiling import StageProfiler
+
+    other = []
+
+    def run_elsewhere():
+        with StageProfiler(spark) as p:
+            _group_sum(spark, 5000)
+        other.append(p)
+
+    _drain_listeners(spark)
+    before = _store_stage_ids(spark)
+    with StageProfiler(spark) as prof:
+        _group_sum(spark, 1000)
+        worker = threading.Thread(target=run_elsewhere)
+        worker.start()
+        worker.join()
+        _drain_listeners(spark)
+    diff = _store_stage_ids(spark) - before
+    (other_prof,) = other
+    assert _ids(other_prof) and _ids(prof)
+    assert _ids(other_prof) <= diff
+    assert _ids(prof).isdisjoint(_ids(other_prof))
+    assert _ids(prof) == diff - _ids(other_prof)
+
+
+def test_nested_stage_profilers(spark):
+    from tsfresh_spark.plans.profiling import StageProfiler
+
+    with StageProfiler(spark) as outer:
+        _group_sum(spark, 1000)
+        with StageProfiler(spark) as inner:
+            _group_sum(spark, 2000)
+    assert _ids(inner)
+    assert _ids(outer) > _ids(inner)
+    tags = spark.sparkContext.getJobTags()
+    assert outer.tag not in tags and inner.tag not in tags
+
+
+def test_stage_profiler_removes_tag_when_block_raises(spark):
+    from tsfresh_spark.plans.profiling import StageProfiler
+
+    prof = StageProfiler(spark)
+    with pytest.raises(ZeroDivisionError):
+        with prof:
+            assert prof.tag in spark.sparkContext.getJobTags()
+            spark.range(100).count()
+            1 / 0
+    assert prof.tag not in spark.sparkContext.getJobTags()
+    assert prof.stages  # the stages run before the error are still reported
+
+
+def test_stage_profiler_skips_evicted_stages(spark):
+    """Past ``spark.ui.retainedStages`` the status store evicts stages,
+    SKIPPED ones first, so a tagged job can name a stage the store no
+    longer holds: the profile leaves it out, as a store snapshot would."""
+    from tsfresh_spark.plans.profiling import StageProfiler
+
+    jvm = spark._jvm
+    kv = spark.sparkContext._jsc.sc().statusStore().store()
+    wrapper = jvm.java.lang.Class.forName("org.apache.spark.status.StageDataWrapper")
+    before = _store_stage_ids(spark)
+    with StageProfiler(spark) as prof:
+        _group_sum(spark, 1000)  # AQE: its final job lists a SKIPPED stage
+        _drain_listeners(spark)
+        skipped = [
+            s
+            for s in _store_stage_list(spark)
+            if int(s.stageId()) not in before and str(s.status().toString()) == "SKIPPED"
+        ]
+        assert skipped
+        for s in skipped:  # evict them, as the store's retention would
+            key = spark.sparkContext._gateway.new_array(jvm.int, 2)
+            key[0], key[1] = s.stageId(), s.attemptId()
+            kv.delete(wrapper, key)
+    evicted = {int(s.stageId()) for s in skipped}
+    assert _ids(prof) and _ids(prof).isdisjoint(evicted)
+    assert _ids(prof) == _store_stage_ids(spark) - before
+
+
+def test_stage_profiler_cost_is_bounded_by_block(spark, monkeypatch):
+    """However many jobs the session has run, exiting a profiled block
+    looks up exactly the block's stages."""
+    from tsfresh_spark.plans import profiling
+
+    for _ in range(300):
+        spark.range(1).collect()
+    looked_up = []
+    stage_metrics = profiling._stage_metrics
+
+    def counting(store, stage_id):
+        looked_up.append(stage_id)
+        return stage_metrics(store, stage_id)
+
+    monkeypatch.setattr(profiling, "_stage_metrics", counting)
+    _drain_listeners(spark)
+    before = _store_stage_ids(spark)
+    with profiling.StageProfiler(spark) as prof:
+        _group_sum(spark, 1000)
+        _drain_listeners(spark)
+    stored = _store_stage_ids(spark)
+    block = stored - before
+    assert _ids(prof) == block
+    assert len(looked_up) == len(set(looked_up))
+    # every lookup is one of the block's stages: stored ones are in the
+    # diff; a long session's store may already have evicted SKIPPED ones
+    assert set(looked_up) >= block
+    assert not (set(looked_up) - block) & stored
 
 
 def test_bucketed_join_has_no_exchange(spark, tmp_path):

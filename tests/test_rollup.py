@@ -289,6 +289,10 @@ def test_retention_ages_out_old_windows(spark, raw_points, tmp_path_factory):
     # the manifest carries the retention lineage with before->after counts
     metrics = eng.manifest.tier_metrics("job-ret", "1h")
     assert any("retention(cutoff=" in m["lineage"] for m in metrics)
+    # ... and only the latest commit's per-file rows: they add up to what
+    # is stored, not to the original plus the retention commit
+    assert all("retention(cutoff=" in m["lineage"] for m in metrics)
+    assert sum(m["row_count"] for m in metrics) == len(remaining)
     # untouched windows are byte-identical (payloads survive the rewrite)
     old_rows = tier_df[tier_df.window_start >= mid].sort_values(
         ["doc_id", "source", "window_start"]
@@ -320,3 +324,54 @@ def test_tier_without_payload_matches_with_payload(spark, raw_points):
         a.drop(columns=["payload"]), b.drop(columns=["payload"]),
         check_exact=True,
     )
+
+
+def test_commit_counts_come_from_footers(spark, raw_points, tmp_path_factory):
+    """Per-file manifest rows and COMMIT totals equal a read-back count per
+    file; zero-row part files are skipped; the COMMIT time is the wall
+    clock's (perfbench derives per-tier wall time from it)."""
+    import time
+
+    base = str(tmp_path_factory.mktemp("rollup_footers"))
+    # more range partitions than series
+    eng = RollupEngine(
+        spark, base, settings=minimal_settings(), base_step_seconds=3600,
+        tiers=[TierSpec("1d", DAY)], range_partitions=8,
+    )
+    eng.run(raw_points, job_id="job-F")
+    path = eng.tier_path("1d")
+    # Spark writes no file for an empty partition: add a zero-row part file
+    spark.read.parquet(path).limit(0).write.mode("append").parquet(path)
+    parts = [f for f in os.listdir(path) if f.startswith("part-")]
+    empty = [f for f in parts if spark.read.parquet(os.path.join(path, f)).count() == 0]
+    assert empty and len(empty) < len(parts)
+
+    eng.manifest.record_tier("job-F", "1d", path, "1d<-recount")
+    now = time.time()
+    for tier in ("raw", "base", "1d"):
+        per_file = (
+            spark.read.parquet(eng.tier_path(tier))
+            .groupBy(F.input_file_name().alias("file"))
+            .count()
+            .collect()
+        )
+        want = {r["file"].rsplit("/", 1)[-1]: r["count"] for r in per_file}
+        metrics = eng.manifest.tier_metrics("job-F", tier)
+        got = {m["lineage"].rsplit(" file=", 1)[1]: m["row_count"] for m in metrics}
+        assert got == want, tier
+        (commit,) = (
+            spark.read.parquet(eng.manifest.path)
+            .filter(
+                (F.col("job_id") == "job-F")
+                & (F.col("tier") == tier)
+                & (F.col("partition_id") == -1)
+            )
+            .orderBy(F.col("committed_at").desc())
+            .select("row_count", "lineage", F.col("committed_at").cast("double").alias("at"))
+            .take(1)
+        )
+        assert commit["row_count"] == sum(want.values()), tier
+        assert commit["lineage"].endswith(f"COMMIT files={len(want)}"), tier
+    assert set(empty).isdisjoint(got)
+    assert commit["lineage"].startswith("1d<-recount")
+    assert abs(commit["at"] - now) < 5

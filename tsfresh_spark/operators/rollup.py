@@ -282,14 +282,13 @@ class RollupEngine:
         forever.  Parquet backend rewrites the filtered tier (atomic via
         staging path + rename); on Iceberg this maps to a metadata-only
         ``DELETE WHERE window_start < cutoff``.  The manifest records the
-        cut with row counts before/after, so lineage shows what was aged
-        out and when.
+        cut with row counts before/after (read from the Parquet footers, no
+        count job), so lineage shows what was aged out and when.
         """
         cutoff = now_ts - keep_seconds
         path = self.tier_path(tier)
-        current = self.spark.read.parquet(path)
-        before = current.count()
-        kept = current.filter(F.col("window_start") >= F.lit(cutoff))
+        before = sum(n for _, n, _ in self.manifest.footer_counts(path))
+        kept = self.spark.read.parquet(path).filter(F.col("window_start") >= F.lit(cutoff))
         staging = f"{path}.retention-staging"
         kept.write.mode("overwrite").parquet(staging)
 
@@ -300,7 +299,7 @@ class RollupEngine:
         fs.delete(hpath, True)
         fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath)
 
-        after = self.spark.read.parquet(path).count()
+        after = sum(n for _, n, _ in self.manifest.footer_counts(path))
         self.manifest.record_tier(
             job_id, tier, path, f"retention(cutoff={cutoff}) {before}->{after}"
         )
@@ -324,35 +323,21 @@ class RollupEngine:
             if name in committed:
                 out[name] = self.tier_path(name)
                 return False
-            # profile the tier's stages (status-store snapshot, driver-side)
-            # and persist the summary with the COMMIT lineage — the per-tier
+            # profile the tier's stages (scoped by a job tag, so the cost is
+            # O(stages of this tier) and other threads' jobs stay out) and
+            # persist the summary with the COMMIT lineage — the per-tier
             # compute/shuffle/spill record the 100-TB tuning loop reads.
-            # The profiler reaches private status-store accessors via py4j;
-            # it must NEVER gate the manifest COMMIT — if the snapshot API
-            # differs on some Spark build, commit with the plain lineage
-            # (a recomputed-on-resume tier would be silent, a missing
-            # profile string is just informational).
-            try:
-                prof = StageProfiler(self.spark)
-                prof.__enter__()
-            except Exception:
-                prof = None
-            df = compute()
-            self._write(df, name)
-            if prof is not None:
-                try:
-                    prof.__exit__(None, None, None)
-                    s = prof.summary()
-                    lineage = (
-                        f"{lineage} profile(run_ms={s['executor_run_time_ms']},"
-                        f"cpu_ms={s['executor_cpu_time_ms']},"
-                        f"shuffle_w={s['shuffle_write_bytes']},"
-                        f"shuffle_r={s['shuffle_read_bytes']},"
-                        f"spill={s['memory_spilled_bytes'] + s['disk_spilled_bytes']},"
-                        f"stages={s['num_stages']},tasks={s['num_tasks']})"
-                    )
-                except Exception:
-                    pass
+            with StageProfiler(self.spark) as prof:
+                self._write(compute(), name)
+            s = prof.summary()
+            lineage = (
+                f"{lineage} profile(run_ms={s['executor_run_time_ms']},"
+                f"cpu_ms={s['executor_cpu_time_ms']},"
+                f"shuffle_w={s['shuffle_write_bytes']},"
+                f"shuffle_r={s['shuffle_read_bytes']},"
+                f"spill={s['memory_spilled_bytes'] + s['disk_spilled_bytes']},"
+                f"stages={s['num_stages']},tasks={s['num_tasks']})"
+            )
             self.manifest.record_tier(job_id, name, self.tier_path(name), lineage)
             out[name] = self.tier_path(name)
             return True

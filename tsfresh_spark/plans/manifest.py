@@ -16,11 +16,15 @@ Manifest row schema (FIXTURES.md F6):
 resume criterion.  Data is written before its commit record (write-ahead on
 data), so a crash between the two leaves a re-runnable, never a corrupt,
 tier.
+
+A commit costs O(files of the tier): per-file row counts come from the
+Parquet footers and byte counts from the file listing (Hadoop FS API, no
+read-back job), and the rows are appended from an Arrow-built local frame.
 """
 
 from __future__ import annotations
 
-import datetime as dt
+import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,6 +33,7 @@ MANIFEST_SCHEMA = (
     "job_id string, tier string, partition_id int, row_count long, "
     "byte_count long, committed_at timestamp, lineage string"
 )
+MANIFEST_COLUMNS = [field.split()[0] for field in MANIFEST_SCHEMA.split(", ")]
 
 COMMIT_PARTITION_ID = -1
 
@@ -63,65 +68,65 @@ class Manifest:
         return {r["tier"] for r in rows}
 
     def tier_metrics(self, job_id: str, tier: str) -> list[dict]:
+        """Per-file rows of the latest commit of ``(job_id, tier)`` — all
+        rows of one :meth:`record_tier` share its ``committed_at``."""
         df = self._read()
         if df is None:
             return []
+        rows = df.filter(
+            (F.col("job_id") == job_id) & (F.col("tier") == tier)
+        ).collect()
+        if not rows:
+            return []
+        latest = max(r["committed_at"] for r in rows)
         return [
             r.asDict()
-            for r in df.filter(
-                (F.col("job_id") == job_id)
-                & (F.col("tier") == tier)
-                & (F.col("partition_id") != COMMIT_PARTITION_ID)
-            ).collect()
+            for r in rows
+            if r["committed_at"] == latest
+            and r["partition_id"] != COMMIT_PARTITION_ID
         ]
 
     # -- write side --------------------------------------------------------
 
-    def _file_stats(self, data_path: str) -> list[tuple[str, int]]:
-        """(file, bytes) via the Hadoop FS API — works for any scheme."""
+    def footer_counts(self, data_path: str) -> list[tuple[str, int, int]]:
+        """``(file, rows, bytes)`` per non-empty part file of a written tier:
+        rows from the Parquet footer, bytes from the listing, both through
+        the Hadoop FS API, so any scheme works and no Spark job runs."""
         jvm = self.spark._jvm
         conf = self.spark._jsc.hadoopConfiguration()
         p = jvm.org.apache.hadoop.fs.Path(data_path)
-        fs = p.getFileSystem(conf)
         out = []
-        if not fs.exists(p):
-            return out
-        for status in fs.listStatus(p):
+        for status in p.getFileSystem(conf).listStatus(p):
             name = status.getPath().getName()
-            if status.isFile() and name.startswith("part-"):
-                # key by basename: input_file_name() and the FS API render
-                # the scheme differently (file:/// vs file:/)
-                out.append((name, int(status.getLen())))
-        return out
+            if not (status.isFile() and name.startswith("part-")):
+                continue
+            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+                jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+            )
+            try:
+                rows = int(reader.getRecordCount())
+            finally:
+                reader.close()
+            if rows:
+                out.append((name, rows, int(status.getLen())))
+        return sorted(out)
 
     def record_tier(
         self, job_id: str, tier: str, data_path: str, lineage: str
     ) -> None:
         """Append per-file partition metrics + the tier COMMIT record.
 
-        Reads the written tier back (metadata-only count per file) so the
-        recorded row counts are what is actually on storage, not what the
-        writing job believed.
+        Row counts come from the written files' Parquet footers, so they
+        are what is actually on storage, not what the writing job believed;
+        zero-row files get no record.  The rows go through an Arrow-built
+        local frame: one small write job, no Python worker.
         """
-        written = self.spark.read.parquet(data_path)
-        per_file = (
-            written.groupBy(F.input_file_name().alias("file"))
-            .count()
-            .collect()
-        )
-        sizes = dict(self._file_stats(data_path))
-        now = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+        files = self.footer_counts(data_path)
+        # tz-aware, so the stored instant is right whatever the session zone
+        now = pd.Timestamp.now(tz="UTC")
         rows = [
-            (
-                job_id,
-                tier,
-                idx,
-                int(r["count"]),
-                int(sizes.get(r["file"].rsplit("/", 1)[-1], 0)),
-                now,
-                f"{lineage} file={r['file'].rsplit('/', 1)[-1]}",
-            )
-            for idx, r in enumerate(per_file)
+            (job_id, tier, idx, n_rows, n_bytes, now, f"{lineage} file={name}")
+            for idx, (name, n_rows, n_bytes) in enumerate(files)
         ]
         total_rows = sum(r[3] for r in rows)
         total_bytes = sum(r[4] for r in rows)
@@ -133,11 +138,12 @@ class Manifest:
                 total_rows,
                 total_bytes,
                 now,
-                f"{lineage} COMMIT files={len(per_file)}",
+                f"{lineage} COMMIT files={len(files)}",
             )
         )
+        pdf = pd.DataFrame(rows, columns=MANIFEST_COLUMNS)
         (
-            self.spark.createDataFrame(rows, MANIFEST_SCHEMA)
+            self.spark.createDataFrame(pdf, MANIFEST_SCHEMA)
             .coalesce(1)
             .write.mode("append")
             .parquet(self.path)

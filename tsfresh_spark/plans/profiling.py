@@ -8,16 +8,24 @@ is compute-bound, shuffle-bound, or spilling — exactly the signals the
 100-TB tuning loop needs (partition sizing, salting decisions, AQE
 verification).
 
-:class:`StageProfiler` snapshots the status store around a code section and
-reports only the stages that ran inside it.  It reads the same data the
-Spark UI renders, so it works with ``spark.ui.enabled=false`` (this sandbox)
-and on any cluster without extra listeners.
+:class:`StageProfiler` scopes a code section with a unique SparkContext job
+tag.  On exit it asks the status tracker for that tag's jobs and reads only
+their stages (including SKIPPED ones) from the status store, so a profile
+costs O(stages of the section), not O(stages the session has retained).
+A stage the store has already evicted is left out, as a snapshot of the
+store would leave it out.
+Job tags are thread-local, so jobs other threads run meanwhile are not
+counted; profilers nest (an outer section's stages include the inner
+one's).  It reads the same data the Spark UI renders, so it works with
+``spark.ui.enabled=false`` and on any cluster without extra listeners.
 """
 
 from __future__ import annotations
 
+import uuid
 from dataclasses import asdict, dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import SparkSession
 
 
@@ -40,58 +48,62 @@ class StageMetrics:
         return asdict(self)
 
 
-def _stage_list(spark: SparkSession):
-    store = spark.sparkContext._jsc.sc().statusStore()
-    empty = spark._jvm.java.util.ArrayList()
-    defaults = [getattr(store, f"stageList$default${i}")() for i in range(2, 6)]
-    return store.stageList(empty, *defaults)
-
-
-def snapshot_stages(spark: SparkSession) -> list[StageMetrics]:
-    """All stages currently known to the app status store."""
-    out = []
-    sl = _stage_list(spark)
-    for i in range(sl.size()):
-        s = sl.apply(i)
-        out.append(
-            StageMetrics(
-                stage_id=int(s.stageId()),
-                name=str(s.name()),
-                status=str(s.status().toString()),
-                num_tasks=int(s.numTasks()),
-                executor_run_time_ms=int(s.executorRunTime()),
-                executor_cpu_time_ms=int(s.executorCpuTime()) // 1_000_000,
-                input_bytes=int(s.inputBytes()),
-                output_bytes=int(s.outputBytes()),
-                shuffle_read_bytes=int(s.shuffleReadBytes()),
-                shuffle_write_bytes=int(s.shuffleWriteBytes()),
-                memory_spilled_bytes=int(s.memoryBytesSpilled()),
-                disk_spilled_bytes=int(s.diskBytesSpilled()),
-            )
-        )
-    return out
+def _stage_metrics(store, stage_id: int) -> StageMetrics | None:
+    """The latest attempt of one stage, as the status store holds it, or
+    None once the store has evicted it (``spark.ui.retainedStages``; SKIPPED
+    stages go first)."""
+    try:
+        s = store.lastStageAttempt(stage_id)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() != "java.util.NoSuchElementException":
+            raise
+        return None
+    return StageMetrics(
+        stage_id=int(s.stageId()),
+        name=str(s.name()),
+        status=str(s.status().toString()),
+        num_tasks=int(s.numTasks()),
+        executor_run_time_ms=int(s.executorRunTime()),
+        executor_cpu_time_ms=int(s.executorCpuTime()) // 1_000_000,
+        input_bytes=int(s.inputBytes()),
+        output_bytes=int(s.outputBytes()),
+        shuffle_read_bytes=int(s.shuffleReadBytes()),
+        shuffle_write_bytes=int(s.shuffleWriteBytes()),
+        memory_spilled_bytes=int(s.memoryBytesSpilled()),
+        disk_spilled_bytes=int(s.diskBytesSpilled()),
+    )
 
 
 class StageProfiler:
     """``with StageProfiler(spark) as prof: <run jobs>`` → ``prof.stages``
-    holds the stages executed inside the block, ``prof.summary()`` the
-    aggregate totals."""
+    holds the stages of the jobs this thread ran inside the block,
+    ``prof.summary()`` the aggregate totals."""
 
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self.stages: list[StageMetrics] = []
-        self._before: set[int] = set()
+        self.tag = f"tsfresh_spark-profile-{uuid.uuid4().hex}"
 
     def __enter__(self) -> "StageProfiler":
-        self._before = {m.stage_id for m in snapshot_stages(self.spark)}
+        self.spark.sparkContext.addJobTag(self.tag)
         return self
 
     def __exit__(self, exc_type, exc, tb) -> None:
-        self.stages = [
-            m
-            for m in snapshot_stages(self.spark)
-            if m.stage_id not in self._before
-        ]
+        sc = self.spark.sparkContext
+        try:
+            jsc = sc._jsc.sc()
+            store = jsc.statusStore()
+            # mkString: one py4j call per job, not one per stage id
+            stage_ids = {
+                int(s)
+                for job_id in jsc.statusTracker().getJobIdsForTag(self.tag)
+                for s in str(store.job(job_id).stageIds().mkString(",")).split(",")
+                if s
+            }
+            found = (_stage_metrics(store, s) for s in sorted(stage_ids))
+            self.stages = [m for m in found if m is not None]
+        finally:
+            sc.removeJobTag(self.tag)
 
     def summary(self) -> dict:
         keys = (
