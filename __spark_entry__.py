@@ -65,7 +65,7 @@ def _tokens_groupby(ev: DataFrame) -> DataFrame:
     shuffle PINNED on the keys (round-6 fix): AQE's byte-based partition
     coalescing sees a sub-1MB aggregated frame and collapses the shuffle
     read to ONE partition (measured: the downstream compute-bound
-    mapInPandas kernel stage ran as a single task at sf0.1, ~1.5 effective
+    Arrow kernel stage ran as a single task at sf0.1, ~1.5 effective
     cores for ~30 queries).  An explicit keyed repartition is honored by
     AQE, the aggregate reuses its exchange (no extra shuffle), and the
     Arrow stage inherits the pinned width — the exact trap/fix already
@@ -90,7 +90,7 @@ def _events_tokens_longid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q01: kernel path (mapInPandas UDF) — exact integer features, long output
+# q01: kernel path (mapInArrow executor) — exact integer features, long output
 # ---------------------------------------------------------------------------
 
 _EXACT_KERNELS = [
@@ -117,10 +117,11 @@ def q_extract_kernels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_extract_long_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's own Spark-binding shape (bindings.py:164-265):
-    long frame → groupBy(id, kind).applyInPandas with in-UDF sort — the
-    grouped/shuffled sibling of the shuffle-free tokens path.  Shares the
-    tokens-path oracle because the two physical plans must produce
+    """The reference's own Spark-binding grouping (bindings.py:164-265):
+    long frame → one pinned groupBy(id, kind) shuffle that collects each
+    series into a sorted array → the shared ``mapInArrow`` kernel executor
+    — the grouped/shuffled sibling of the shuffle-free tokens path.  Shares
+    the tokens-path oracle because the two physical plans must produce
     IDENTICAL values (same kernels, same per-series order)."""
     _prep(spark)
     from tsfresh_spark.extract import extract_features_long

@@ -75,7 +75,7 @@ def run_audit(
         extract_features_tokens(toks, efficient_settings(), output="map"),
         [
             ("no Exchange anywhere (narrow map)", lambda p: "Exchange" not in p),
-            ("single Arrow stage (MapInPandas)", lambda p: p.count("MapInPandas") <= 2),
+            ("single Arrow stage (MapInArrow)", lambda p: p.count("MapInArrow") <= 2),
         ],
         "The north-star workload: each row is a complete series, so feature "
         "extraction is a narrow Arrow map — no shuffle at ANY corpus size.",
@@ -93,7 +93,7 @@ def run_audit(
         "extract_features_tokens (hybrid, fully covered, map output)",
         extract_features_tokens(toks, cov, engine="hybrid", output="map"),
         [
-            ("no python evaluation", lambda p: "MapInPandas" not in p and "ArrowEvalPython" not in p),
+            ("no python evaluation", lambda p: all(op not in p for op in ("MapInArrow", "MapInPandas", "ArrowEvalPython"))),
             ("no Exchange", lambda p: "Exchange" not in p),
             (
                 "bare projection over the scan (≤3 plan nodes)",
@@ -120,12 +120,19 @@ def run_audit(
         [
             ("exactly one Exchange (the group shuffle)", lambda p: len(re.findall(r"\bExchange\b", p.split("\n\n")[0])) == 1),
             (
-                "explicit round-robin/hash repartition pins the parallelism (AQE byte-coalescing would starve the compute-bound UDF stage)",
+                "explicit round-robin/hash repartition pins the parallelism (AQE byte-coalescing would starve the compute-bound kernel stage)",
                 lambda p: "REPARTITION_BY_NUM" in p or "RoundRobinPartitioning" in p or "hashpartitioning" in p,
             ),
+            (
+                "series collected by an aggregate feeding MapInArrow, no FlatMapGroupsInPandas",
+                lambda p: "ObjectHashAggregate" in p and "MapInArrow" in p and "FlatMapGroupsInPandas" not in p,
+            ),
         ],
-        "The reference's own Spark binding shape, with the shuffle pinned so "
-        "AQE cannot coalesce a compute-bound grouped-map stage onto 2 cores.",
+        "The reference's own Spark binding groups the same way: one shuffle "
+        "co-locates each (id, kind) series, an aggregate collects it into "
+        "one sorted array, and the shared Arrow executor evaluates the "
+        "arrays.  The shuffle is pinned so AQE cannot coalesce the "
+        "compute-bound kernel stage onto 2 cores.",
     )
 
     # 4. brute-force cosine top-k: broadcast the small query side

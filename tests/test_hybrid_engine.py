@@ -71,7 +71,7 @@ def test_hybrid_minimal_is_pure_jvm(spark, tokens_df):
     }
     df = extract_features_tokens(tokens_df, settings, engine="hybrid")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan
     assert "Exchange" not in plan
 
 
@@ -87,7 +87,8 @@ def test_hybrid_pure_catalyst_map_no_python(spark, tokens_df):
         tokens_df, settings, engine="hybrid", output="map"
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan and "ArrowEvalPython" not in plan
+    assert "MapInArrow" not in plan and "MapInPandas" not in plan
+    assert "ArrowEvalPython" not in plan
     assert "Exchange" not in plan
 
 

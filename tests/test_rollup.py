@@ -375,3 +375,34 @@ def test_commit_counts_come_from_footers(spark, raw_points, tmp_path_factory):
     assert set(empty).isdisjoint(got)
     assert commit["lineage"].startswith("1d<-recount")
     assert abs(commit["at"] - now) < 5
+
+
+def test_tier_features_equal_kernels_on_window_copies(spark):
+    """Each window's features equal the kernels on a fresh copy of that
+    window, bit for bit.  Every series starts mid-hour, so its first 1h
+    window is odd-length and the later windows start 8 bytes off a 16-byte
+    boundary of the decoded day — where a BLAS dot (abs_energy) would sum
+    in another order."""
+    settings = {"abs_energy": None, "mean": None}
+    rng = np.random.default_rng(11)
+    rows = []
+    for i in range(8):
+        start = 31 * 60 + i * 120  # first windows of 29, 27, ... points
+        for k in range(6 * 60):
+            rows.append((f"s{i}", "web", start + 60 * k, float(rng.normal())))
+    rows = pd.DataFrame(rows, columns=["doc_id", "source", "ts", "value"])
+    rows["value"] = rows.groupby("doc_id")["value"].cumsum()
+    points = spark.createDataFrame(rows, "doc_id string, source string, ts long, value double")
+    eng = RollupEngine(
+        spark, "/tmp/rollup_window_copies_unused", settings=settings, base_step_seconds=60
+    )
+    tier = eng.compute_tier(eng.compute_base(points), 3600).collect()
+    assert len(tier) == 8 * 7
+    for r in tier:
+        _, w_vals = decode_series(bytes(r["payload"]))
+        want = dict(compute_series_features(np.array(w_vals), r["source"], settings))
+        assert set(r["features"]) == set(want)
+        for name, value in want.items():
+            assert np.float64(r["features"][name]).tobytes() == np.float64(value).tobytes(), (
+                r["doc_id"], r["window_start"], name,
+            )

@@ -4,8 +4,9 @@ A from-scratch engine with the query & data-processing capabilities of
 blue-yonder/tsfresh, re-expressed Spark-first:
 
 * the 76-calculator feature library as vectorized numpy kernels evaluated
-  inside Arrow-batched pandas UDFs (``mapInPandas`` over pre-grouped token
-  arrays — shuffle-free — or ``groupBy().applyInPandas`` over long frames),
+  by one Arrow-native batch executor (``mapInArrow`` over pre-grouped token
+  arrays — shuffle-free — or over long frames collected per series into
+  sorted arrays by one ``groupBy`` shuffle),
 * rollup / downsample / retention tiers (raw → 1m → 1h → 1d) as continuous
   aggregates over ``F.window``,
 * explicit gap-fill (forward-fill / linear interpolation) via window

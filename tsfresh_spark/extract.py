@@ -1,18 +1,24 @@
 """Feature extraction operators.
 
-Two physical strategies, both Arrow-batched (never per-row Python):
+One per-series executor serves every extraction path: an Arrow batch of
+``(id, kind, values: list<…>[, timestamps])`` goes in, features come out as
+Arrow arrays — long triples or a ``map<string,double>`` — with no pandas
+frame on either side (:func:`_batch_features`).  Callers:
 
 * :func:`extract_features_tokens` — for the engine's primary input shape
   (BASELINE.json input_hint): one row already holds a whole series as an
-  ``array<int>`` column, so extraction is a **shuffle-free** ``mapInPandas``
+  ``array<int>`` column, so extraction is a **shuffle-free** ``mapInArrow``
   — a narrow transformation that scales linearly with partitions and never
   materializes a grouped shuffle.  This is the 100-TB path.
 
 * :func:`extract_features_long` — for the canonical long format
-  ``(id, kind, sort, value)``: ``groupBy(id, kind).applyInPandas`` with the
-  per-group sort applied inside the UDF.  Same physical plan as the
-  reference's own Spark binding
-  (/root/reference/tsfresh/convenience/bindings.py:164-265), generalized.
+  ``(id, kind, sort, value)``: ``groupBy(id, kind)`` collects each series
+  into one sorted array in Catalyst (the single grouping shuffle of the
+  reference's own Spark binding, bindings.py:164-265), then the same
+  ``mapInArrow`` executor runs over the arrays.
+
+* the hybrid engine's kernel remainder and the windowed stream call the
+  executor from a scalar ``arrow_udf``.
 
 The per-series evaluation loop mirrors ``_do_extraction_on_chunk``
 (/root/reference/tsfresh/feature_extraction/extraction.py:308-386): simple
@@ -28,6 +34,7 @@ from typing import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -144,7 +151,14 @@ def compute_series_features(
     show_warnings: bool = False,
 ) -> Iterator[tuple[str, float]]:
     """Evaluate every configured kernel on one series; yields
-    ``(feature_name, value)`` with values coerced to float64."""
+    ``(feature_name, value)`` with values coerced to float64.
+
+    Kernels get a freshly allocated copy of ``values``: BLAS reductions
+    (``abs_energy`` is ``np.dot(x, x)``) sum in a different order when
+    ``x`` starts 8 bytes off a 16-byte boundary, as slices of one buffer do,
+    so a view could differ from the same series in its own array by one
+    ulp."""
+    values = np.array(values)
     plan = _get_plan(settings, kind)
     try:
         yield from _run_plan(plan, values, timestamps, show_warnings)
@@ -197,6 +211,117 @@ def _run_plan(plan, values, timestamps, show_warnings):
 
 
 # ---------------------------------------------------------------------------
+# the batch executor: Arrow list columns in, Arrow feature arrays out
+# ---------------------------------------------------------------------------
+
+# cap the rows of one long-output batch: with ~800 features/series a full
+# Arrow batch would hold millions of rows before yielding
+FLUSH_ROWS = 200_000
+
+
+def _wall_times(timestamps: pa.ListArray) -> np.ndarray:
+    """The flat timestamps as naive session-local ``datetime64[ns]`` — the
+    wall times a pandas UDF sees (Arrow carries UTC instants tagged with
+    the session time zone)."""
+    child = timestamps.values
+    idx = pd.DatetimeIndex(child.to_numpy(zero_copy_only=False))
+    if child.type.tz:
+        idx = idx.tz_localize("UTC").tz_convert(child.type.tz).tz_localize(None)
+    return idx.as_unit("ns").values
+
+
+def _batch_features(
+    kinds: pa.Array,
+    values: pa.ListArray,
+    settings: dict,
+    kind_to_settings: dict | None = None,
+    *,
+    timestamps: pa.ListArray | None = None,
+    order_by: pa.ListArray | None = None,
+    dtype=None,
+    flush_rows: int | None = None,
+) -> Iterator[tuple[int, list[int], list[str], list[float]]]:
+    """The per-series executor.  Row ``i`` is one series: ``values[i]`` in
+    kind ``kinds[i]``.  ``timestamps`` (aligned with ``values``) become the
+    series' DatetimeIndex; ``order_by`` (aligned too) reorders each series
+    by a stable sort on its keys; ``dtype`` casts the values.  A series
+    holding NULLs converts like pandas: integers become float64 with NaN.
+
+    Yields ``(start, counts, names, feats)`` chunks: series ``start`` to
+    ``start + len(counts)``, ``counts[j]`` features each, their names and
+    values flat in series order.  A chunk closes once it holds
+    ``flush_rows`` features (never, when ``None``)."""
+    offsets = values.offsets.to_numpy()
+    child = values.values
+    times = _wall_times(timestamps) if timestamps is not None else None
+    keys = order_by.values.to_numpy(zero_copy_only=False) if order_by is not None else None
+    start, counts, names, feats = 0, [], [], []
+    for i, kind in enumerate(kinds.to_pylist()):
+        a, b = offsets[i], offsets[i + 1]
+        x = child.slice(a, b - a).to_numpy(zero_copy_only=False)
+        if dtype is not None:
+            x = x.astype(dtype)
+        if keys is not None:
+            x = x[np.argsort(keys[a:b], kind="stable")]
+        index = pd.DatetimeIndex(times[a:b]) if times is not None else None
+        fc = kind_to_settings.get(kind, settings) if kind_to_settings else settings
+        n = len(names)
+        for name, value in compute_series_features(x, str(kind), fc, timestamps=index):
+            names.append(name)
+            feats.append(value)
+        counts.append(len(names) - n)
+        if flush_rows and len(names) >= flush_rows:
+            yield start, counts, names, feats
+            start, counts, names, feats = i + 1, [], [], []
+    if counts:
+        yield start, counts, names, feats
+
+
+def _doubles(feats: list[float]) -> pa.Array:
+    # NaN leaves as NULL, as it did through a pandas frame
+    return pa.array(feats, pa.float64(), from_pandas=True)
+
+
+def _kind_strings(kinds: pa.Array) -> pa.Array:
+    """The output kind column: the same ``str(kind)`` the feature names
+    carry, NULL kinds staying NULL."""
+    if pa.types.is_string(kinds.type):
+        return kinds
+    return pa.array(
+        [None if k is None else str(k) for k in kinds.to_pylist()], pa.string()
+    )
+
+
+def _long_batches(
+    ids: pa.Array, kinds: pa.Array, values: pa.ListArray, key_names: list[str], settings: dict, **kw
+) -> Iterator[pa.RecordBatch]:
+    """Long output: one ``(id, kind, variable, value)`` row per feature, at
+    most about ``FLUSH_ROWS`` rows per batch; ``key_names`` names the id and
+    kind columns."""
+    kind_out = _kind_strings(kinds)
+    for start, counts, variables, feats in _batch_features(
+        kinds, values, settings, flush_rows=FLUSH_ROWS, **kw
+    ):
+        if not variables:
+            continue
+        rows = np.repeat(np.arange(start, start + len(counts)), counts)
+        yield pa.RecordBatch.from_arrays(
+            [ids.take(rows), kind_out.take(rows), pa.array(variables, pa.string()), _doubles(feats)],
+            names=[*key_names, "variable", "value"],
+        )
+
+
+def _feature_map(kinds: pa.Array, values: pa.ListArray, settings: dict, **kw) -> pa.MapArray:
+    """Map output: one ``map<string,double>`` of features per series."""
+    _, counts, variables, feats = next(
+        _batch_features(kinds, values, settings, **kw), (0, [], [], [])
+    )
+    offsets = np.zeros(len(counts) + 1, np.int32)
+    np.cumsum(counts, out=offsets[1:])
+    return pa.MapArray.from_arrays(offsets, pa.array(variables, pa.string()), _doubles(feats))
+
+
+# ---------------------------------------------------------------------------
 # tokens-table path: (doc_id, tokens, n_tok, source) — shuffle-free
 # ---------------------------------------------------------------------------
 
@@ -212,13 +337,14 @@ def extract_features_tokens(
     output: str = "long",
     engine: str = "kernels",
 ) -> DataFrame:
-    """Extract features from pre-grouped token-array rows via ``mapInPandas``.
+    """Extract features from pre-grouped token-array rows via ``mapInArrow``.
 
     No shuffle: each input row is a complete series, so this is a narrow
-    map over Arrow batches.  ``output`` is ``"long"`` (one row per feature —
-    id, kind, variable, value) or ``"map"`` (one row per series with a
-    ``map<string,double>`` of features, avoiding a 794-column wide plan; cf.
-    the reference's own advice in docs/text/large_data.rst:33-38).
+    map over Arrow batches.  Tokens reach the kernels as int64.  ``output``
+    is ``"long"`` (one row per feature — id, kind, variable, value) or
+    ``"map"`` (one row per series with a ``map<string,double>`` of features,
+    avoiding a 794-column wide plan; cf. the reference's own advice in
+    docs/text/large_data.rst:33-38).
 
     ``engine="hybrid"`` evaluates the SQL-coverable calculator subset as
     Catalyst expressions (zero Python) and routes only the remainder through
@@ -246,83 +372,36 @@ def extract_features_tokens(
             output=output,
         )
 
-    id_field = df.schema[id_col]
-    id_type = id_field.dataType.simpleString()
+    id_type = df.schema[id_col].dataType.simpleString()
+    kw = dict(kind_to_settings=kind_to_settings, dtype=np.int64)
 
-    # cap the long-form buffer: with ~800 features/series a full Arrow batch
-    # would hold millions of rows before yielding
-    FLUSH_ROWS = 200_000
-
-    def run_batch(pdf: pd.DataFrame) -> Iterator[pd.DataFrame]:
-        ids, kinds, variables, values = [], [], [], []
-        map_rows = []
-
-        def flush_long():
-            out = pd.DataFrame(
-                {
-                    id_col: ids,
-                    kind_col: kinds,
-                    "variable": variables,
-                    "value": np.asarray(values, dtype=np.float64),
-                }
-            )
-            ids.clear(), kinds.clear(), variables.clear(), values.clear()
-            return out
-
-        for doc_id, tokens, kind in zip(
-            pdf[id_col].values, pdf[tokens_col].values, pdf[kind_col].values
-        ):
-            # pandas would surface an integer value column as int64 — match it
-            x = np.asarray(tokens, dtype=np.int64)
-            fc = (
-                kind_to_settings.get(kind, settings)
-                if kind_to_settings
-                else settings
-            )
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids, tokens, kinds = batch.columns
             if output == "long":
-                for feature, value in compute_series_features(x, str(kind), fc):
-                    ids.append(doc_id)
-                    kinds.append(kind)
-                    variables.append(feature)
-                    values.append(value)
-                if len(ids) >= FLUSH_ROWS:
-                    yield flush_long()
+                yield from _long_batches(ids, kinds, tokens, [id_col, kind_col], settings, **kw)
             else:
-                feats = dict(compute_series_features(x, str(kind), fc))
-                map_rows.append((doc_id, kind, feats))
-        if output == "long":
-            if ids:
-                yield flush_long()
-        else:
-            yield pd.DataFrame(
-                map_rows, columns=[id_col, kind_col, "features"]
-            )
-
-    def run(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf):
-                yield from run_batch(pdf)
+                yield pa.RecordBatch.from_arrays(
+                    [ids, _kind_strings(kinds), _feature_map(kinds, tokens, settings, **kw)],
+                    names=[id_col, kind_col, "features"],
+                )
 
     if output == "long":
         schema = f"{id_col} {id_type}, {kind_col} string, variable string, value double"
     else:
         schema = f"{id_col} {id_type}, {kind_col} string, features map<string,double>"
-    return df.select(id_col, tokens_col, kind_col).mapInPandas(run, schema=schema)
+    return df.select(id_col, tokens_col, kind_col).mapInArrow(run, schema=schema)
 
 
 def _rest_map_udf(settings: dict):
     """Scalar Arrow UDF computing the kernel-remainder feature map per row —
     lets the hybrid map output stay a single narrow projection
     (covered Catalyst map ++ remainder map), zero shuffle."""
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("map<string,double>")
-    def _compute(tokens: pd.Series, kinds: pd.Series) -> pd.Series:
-        out = []
-        for toks, kind in zip(tokens.values, kinds.values):
-            x = np.asarray(toks, dtype=np.int64)
-            out.append(dict(compute_series_features(x, str(kind), settings)))
-        return pd.Series(out)
+    @arrow_udf("map<string,double>")
+    def _compute(tokens: pa.Array, kinds: pa.Array) -> pa.Array:
+        return _feature_map(kinds, tokens, settings, dtype=np.int64)
 
     return _compute
 
@@ -471,17 +550,28 @@ def extract_features_long(
     kind_to_settings: dict | None = None,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Extract features from a long frame via
-    ``groupBy(id, kind).applyInPandas`` — the reference's own Spark-binding
-    plan (bindings.py:164-265) with modern ``applyInPandas``.
+    """Extract features from a long frame: ``groupBy(id, kind)`` collects
+    each series into one sorted array in Catalyst, and the shared
+    ``mapInArrow`` executor evaluates the arrays.  The reference's own
+    Spark binding (bindings.py:164-265) groups the same way, with one pandas
+    frame per group; here no pandas frame crosses the boundary.  Output is
+    the long triple frame ``(id, kind, variable, value:double)``.
 
-    The per-group sort happens inside the UDF (bindings.py:30-31); Spark
-    only has to co-locate groups, never globally sort.  Output is the long
-    triple frame ``(id, kind, variable, value:double)``.
+    Each series is ordered by ``column_sort`` — one column or a list (a
+    composite key, e.g. ``["ts", "event_id"]``) — with NULL keys last, as
+    pandas ``sort_values`` orders them.  Points tied on every sort key are
+    ordered by value (``array_sort`` on ``struct(keys…, value)``), so ties
+    resolve deterministically.  ``column_sort=None`` keeps the arrival
+    order.  A single timestamp sort column also reaches the kernels as the
+    series' DatetimeIndex (session-local wall times, as pandas UDFs see
+    them), which engages ``linear_trend_timewise``.  Values keep their
+    type (integers stay integers); a series with NULL values gets float64
+    NaN in their place.
 
     The grouping shuffle is pinned with an explicit ``repartition`` on the
-    group keys (AQE honors user repartitions): grouped-map UDFs are
-    compute-bound, so AQE's byte-based partition coalescing misjudges them
+    group keys (AQE honors user repartitions, and the aggregate reuses its
+    hash distribution — still exactly one Exchange): the kernel stage is
+    compute-bound, so AQE's byte-based partition coalescing misjudges it
     badly — a few-MB long frame coalesces to 1-2 partitions and the whole
     kernel evaluation runs on 1-2 cores.  ``num_partitions`` overrides the
     default max(shuffle partitions, 2×parallelism); pass ``0`` to opt out
@@ -495,42 +585,43 @@ def extract_features_long(
             df, column_id, column_kind, num_partitions=num_partitions
         )
     id_type = df.schema[column_id].dataType.simpleString()
-    # column_sort may be a list of columns (composite order key, e.g.
-    # (ts, event_id) to break timestamp ties deterministically) — pandas
-    # sort_values takes either form; timestamp-index kernels only engage
-    # for a single timestamp-typed sort column
-    sort_is_timestamp = (
-        column_sort is not None
-        and isinstance(column_sort, str)
-        and df.schema[column_sort].dataType.simpleString().startswith("timestamp")
+    sort_cols = [] if column_sort is None else (
+        [column_sort] if isinstance(column_sort, str) else list(column_sort)
     )
+    # the struct keeps NULL values (collect_list drops bare NULLs); a
+    # leading isnull flag per key sorts NULL keys last
+    keys = [
+        field
+        for i, c in enumerate(sort_cols)
+        for field in (F.isnull(c).alias(f"n{i}"), F.col(c).alias(f"k{i}"))
+    ]
+    pts = F.collect_list(F.struct(*keys, F.col(column_value).alias("v")))
+    columns = [column_id, column_kind, F.col("pts.v")]
+    # timestamp-index kernels only engage for a single timestamp-typed sort
+    # column
+    if isinstance(column_sort, str) and (
+        df.schema[column_sort].dataType.simpleString().startswith("timestamp")
+    ):
+        columns.append(F.col("pts.k0"))
 
-    def run_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        if column_sort is not None:
-            pdf = pdf.sort_values(column_sort)
-        kind = pdf[column_kind].iloc[0]
-        sample_id = pdf[column_id].iloc[0]
-        values = pdf[column_value].values
-        timestamps = (
-            pd.DatetimeIndex(pdf[column_sort].values) if sort_is_timestamp else None
-        )
-        fc = kind_to_settings.get(kind, settings) if kind_to_settings else settings
-        feats = list(
-            compute_series_features(values, str(kind), fc, timestamps=timestamps)
-        )
-        return pd.DataFrame(
-            {
-                column_id: [sample_id] * len(feats),
-                column_kind: [kind] * len(feats),
-                "variable": [f for f, _ in feats],
-                "value": np.asarray([v for _, v in feats], dtype=np.float64),
-            }
-        )
+    def run(batches: Iterable[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            ids, kinds, values, *times = batch.columns
+            yield from _long_batches(
+                ids, kinds, values, [column_id, column_kind], settings,
+                kind_to_settings=kind_to_settings,
+                timestamps=times[0] if times else None,
+            )
 
     schema = (
         f"{column_id} {id_type}, {column_kind} string, variable string, value double"
     )
-    return df.groupBy(column_id, column_kind).applyInPandas(run_group, schema=schema)
+    return (
+        df.groupBy(column_id, column_kind)
+        .agg((F.array_sort(pts) if sort_cols else pts).alias("pts"))
+        .select(*columns)
+        .mapInArrow(run, schema=schema)
+    )
 
 
 def melt_wide(

@@ -7,11 +7,11 @@ aggregates whose aggregate values are feature vectors.
 Two shapes:
 
 * :func:`windowed_feature_stream` — watermark + tumbling-window
-  ``collect_list`` aggregation, then a scalar pandas UDF turns each
-  finalized window's points into the feature map.  Append-mode: a window
-  emits exactly once, after the watermark passes — late data inside the
-  watermark is included, later data is dropped (classic event-time
-  semantics).
+  ``collect_list`` aggregation, then a scalar Arrow UDF over the shared
+  batch executor turns each finalized window's points into the feature
+  map.  Append-mode: a window emits exactly once, after the watermark
+  passes — late data inside the watermark is included, later data is
+  dropped (classic event-time semantics).
 * :func:`stateful_feature_stream` — ``applyInPandasWithState`` keeps a
   bounded per-series buffer and emits a feature snapshot on every trigger:
   the "current value" view, updating continuously.
@@ -23,23 +23,23 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from tsfresh_spark.extract import compute_series_features
+from tsfresh_spark.extract import _feature_map, compute_series_features
 
 
-def _features_from_points_udf(settings: dict, kind_from: str):
-    @pandas_udf("map<string,double>")
-    def _compute(pts: pd.Series, kinds: pd.Series) -> pd.Series:
-        out = []
-        for points, kind in zip(pts, kinds):
-            ordered = sorted(points, key=lambda p: p["ts"])
-            values = np.array([p["value"] for p in ordered], dtype=np.float64)
-            out.append(dict(compute_series_features(values, str(kind), settings)))
-        return pd.Series(out)
+def _features_from_points_udf(settings: dict):
+    """Scalar Arrow UDF: each window's collected values, ordered by a
+    stable sort on their ``ts`` (ties keep collection order) → feature map,
+    through the shared batch executor."""
+
+    @arrow_udf("map<string,double>")
+    def _compute(values: pa.Array, ts: pa.Array, kinds: pa.Array) -> pa.Array:
+        return _feature_map(kinds, values, settings, order_by=ts)
 
     return _compute
 
@@ -81,12 +81,12 @@ def windowed_feature_stream(
             ).alias("pts")
         )
     )
-    features = _features_from_points_udf(settings, kind_col)
+    features = _features_from_points_udf(settings)
     return agg.select(
         *id_cols,
         F.col("w.start").alias("window_start"),
         F.size("pts").cast("long").alias("n_points"),
-        features(F.col("pts"), F.col(kind_col)).alias("features"),
+        features(F.col("pts.value"), F.col("pts.ts"), F.col(kind_col)).alias("features"),
     )
 
 
