@@ -215,9 +215,18 @@ def run_audit(
                 "single Exchange end-to-end (the base-tier group shuffle; the cascade itself adds none)",
                 lambda p: len(re.findall(r"\bExchange\b", p.split("\n\n")[0])) <= 2,
             ),
+            ("tiers built by the Arrow window map (MapInArrow)", lambda p: "MapInArrow" in p),
+            (
+                "no pandas map and no Arrow scalar UDF",
+                lambda p: not any(
+                    op in p for op in ("FlatMapGroupsInPandas", "MapInPandas", "ArrowEvalPython")
+                ),
+            ),
         ],
-        "Base tier = one applyInPandas shuffle; day-aligned feature tiers "
-        "decode + split payloads INSIDE the UDF — zero additional shuffle.",
+        "Base tier = one pinned groupBy that collects each series into a "
+        "sorted array, then the mapInArrow window map gap-fills and "
+        "day-chunks it; day-aligned feature tiers decode + split payloads "
+        "INSIDE the same window map — zero additional shuffle.",
     )
 
     if write_md:

@@ -141,42 +141,77 @@ def test_fresh_job_id_recomputes(spark, engine, raw_points):
     assert engine.manifest.committed_tiers("job-B") == set()
 
 
+def _base_points(spark, path):
+    """The stored base tier as {(doc_id, source): (ts, values)}, day chunks
+    concatenated in time order."""
+    chunks = {}
+    for row in spark.read.parquet(path).toPandas().sort_values("window_start").itertuples():
+        chunks.setdefault((row.doc_id, row.source), []).append(decode_series(bytes(row.payload)))
+    return {
+        key: (np.concatenate([t for t, _ in c]), np.concatenate([v for _, v in c]))
+        for key, c in chunks.items()
+    }
+
+
+def _same_feature(got, want) -> bool:
+    """Bit-for-bit; a NULL read back stands for NaN."""
+    if got is None:
+        return bool(np.isnan(want))
+    return np.float64(got).tobytes() == np.float64(want).tobytes()
+
+
 def test_wider_than_day_tier_uses_regroup_path(spark, raw_points, tmp_path_factory):
+    """Windows that do not divide a day — a multiple of it (7d) or neither
+    (36h) — decode the base payloads and regroup the points per window.
+    Each row holds exactly its slice of the base grid: point count, payload
+    and features bit for bit."""
     base = str(tmp_path_factory.mktemp("rollup7d"))
+    widths = {"7d": 7 * DAY, "36h": 36 * 3600}
     eng = RollupEngine(
         spark,
         base,
         settings=minimal_settings(),
         base_step_seconds=3600,
-        tiers=[TierSpec("7d", 7 * DAY)],
+        tiers=[TierSpec(name, w) for name, w in widths.items()],
         range_partitions=2,
     )
     paths = eng.run(raw_points, job_id="job-7d")
-    week = spark.read.parquet(paths["7d"]).toPandas()
-    assert len(week) >= 2  # both series produce at least one weekly window
-    assert (week.window_start % (7 * DAY) == 0).all()
-    # weekly features equal direct computation over the base grid
-    base_pts = {}
-    for _, row in spark.read.parquet(paths["base"]).toPandas().iterrows():
-        ts, vals = decode_series(bytes(row.payload))
-        key = (row.doc_id, row.source)
-        base_pts.setdefault(key, []).append((ts, vals))
-    for _, row in week.iterrows():
-        ts_all = np.concatenate(
-            [t for t, _ in sorted(base_pts[(row.doc_id, row.source)], key=lambda p: p[0][0])]
-        )
-        val_all = np.concatenate(
-            [v for _, v in sorted(base_pts[(row.doc_id, row.source)], key=lambda p: p[0][0])]
-        )
-        mask = (ts_all >= row.window_start) & (ts_all < row.window_start + 7 * DAY)
-        direct = dict(
-            compute_series_features(val_all[mask], row.source, minimal_settings())
-        )
-        got = dict(row.features)
-        for k in direct:
-            assert got[k] == direct[k] or (
-                np.isnan(got[k]) and np.isnan(direct[k])
-            ), (k, got[k], direct[k])
+    base_pts = _base_points(spark, paths["base"])
+    for name, width in widths.items():
+        tier = spark.read.parquet(paths[name]).toPandas()
+        assert len(tier) >= 2  # both series produce at least one window
+        assert (tier.window_start % width == 0).all()
+        for row in tier.itertuples():
+            ts_all, val_all = base_pts[(row.doc_id, row.source)]
+            mask = (ts_all >= row.window_start) & (ts_all < row.window_start + width)
+            assert row.n_points == mask.sum()
+            w_ts, w_vals = decode_series(bytes(row.payload))
+            assert np.array_equal(w_ts, ts_all[mask])
+            assert w_vals.tobytes() == val_all[mask].tobytes()
+            direct = dict(
+                compute_series_features(val_all[mask], row.source, minimal_settings())
+            )
+            got = dict(row.features)
+            assert got.keys() == direct.keys()
+            for k in direct:
+                assert _same_feature(got[k], direct[k]), (name, k, got[k], direct[k])
+        # every base point lands in exactly one window
+        n_points = tier.groupby(["doc_id", "source"]).n_points.sum()
+        assert n_points.to_dict() == {k: len(t) for k, (t, _) in base_pts.items()}
+
+
+def test_nan_feature_is_stored_as_null(spark):
+    """A window whose feature is NaN stores NULL in ``features``."""
+    rows = [("d1", "web", 60 * k, 0.0 if k < 60 else 2.0) for k in range(120)]
+    points = spark.createDataFrame(rows, "doc_id string, source string, ts long, value double")
+    eng = RollupEngine(
+        spark, "/tmp/rollup_nan_unused", settings={"variation_coefficient": None},
+        base_step_seconds=60,
+    )
+    tier = eng.compute_tier(eng.compute_base(points), 3600).orderBy("window_start").collect()
+    assert [r["features"] for r in tier] == [
+        {"web__variation_coefficient": None}, {"web__variation_coefficient": 0.0},
+    ]
 
 
 def _gapfill_reference_base(raw_points, step, method):
@@ -230,25 +265,32 @@ def test_compact_base_tier_bitexact(spark, raw_points, method):
     for key in want:
         assert got[key] == want[key], (key, method)
     # and the base plan (of a frame not yet run) has exactly one exchange
+    # and runs no pandas grouped map
     plan = (
         eng.compute_base(raw_points)._jdf.queryExecution().executedPlan().toString()
     )
     assert plan.count("Exchange") == 1
+    assert "FlatMapGroupsInPandas" not in plan
 
 
 def test_base_tier_tied_timestamps_deterministic(spark, tmp_path_factory):
     """A bucket whose last timestamp is tied keeps the point the raw tier
-    stores last in (ts, value) order, whatever order the points arrive in."""
+    stores last in (ts, value) order, whatever order the points arrive in.
+    A NULL value tied with a number is stored first, so the number stands
+    for its bucket."""
     schema = "doc_id string, source string, ts long, value double"
     a = spark.createDataFrame(
-        [("d1", "web", 10, 1.0), ("d1", "web", 50, 5.0), ("d1", "web", 130, 3.0)],
+        [("d1", "web", 10, 1.0), ("d1", "web", 50, 5.0), ("d1", "web", 130, 3.0),
+         ("d2", "web", 10, 1.0), ("d2", "web", 70, 2.0), ("d2", "web", 190, None)],
         schema,
     )
     b = spark.createDataFrame(
-        [("d1", "web", 50, 2.0), ("d1", "web", 170, 4.0), ("d1", "web", 170, 0.5)],
+        [("d1", "web", 50, 2.0), ("d1", "web", 170, 4.0), ("d1", "web", 170, 0.5),
+         ("d2", "web", 70, None), ("d2", "web", 130, 3.0)],
         schema,
     )
-    expected = sorted((r.ts, r.value) for r in a.union(b).collect())
+    d1 = a.union(b).filter("doc_id = 'd1'")
+    expected = sorted((r.ts, r.value) for r in d1.collect())
     payloads = {}
     for order, points in [("ab", a.union(b)), ("ba", b.union(a))]:
         eng = RollupEngine(
@@ -256,15 +298,22 @@ def test_base_tier_tied_timestamps_deterministic(spark, tmp_path_factory):
             settings=minimal_settings(), base_step_seconds=60, tiers=[],
         )
         paths = eng.run(points.coalesce(1), job_id=f"job-ties-{order}")
-        (raw,) = spark.read.parquet(paths["raw"]).collect()
-        ts, vals = decode_series(bytes(raw.payload))
+        raw = {
+            r.doc_id: decode_series(bytes(r.payload))
+            for r in spark.read.parquet(paths["raw"]).collect()
+        }
+        ts, vals = raw["d1"]
         assert list(zip(ts.tolist(), vals.tolist())) == expected
-        (base,) = spark.read.parquet(paths["base"]).collect()
-        payloads[order] = bytes(base.payload)
-    assert payloads["ab"] == payloads["ba"]
-    ts, vals = decode_series(payloads["ab"])
-    assert ts.tolist() == [0, 60, 120]
-    assert vals.tolist() == [5.0, 5.0, 4.0]
+        ts, vals = raw["d2"]
+        assert ts.tolist() == [10, 70, 70, 130, 190]
+        assert np.array_equal(vals, [1.0, np.nan, 2.0, 3.0, np.nan], equal_nan=True)
+        for r in spark.read.parquet(paths["base"]).collect():
+            payloads[order, r.doc_id] = bytes(r.payload)
+    for doc, want in [("d1", [5.0, 5.0, 4.0]), ("d2", [1.0, 2.0, 3.0, 3.0])]:
+        assert payloads["ab", doc] == payloads["ba", doc]
+        ts, vals = decode_series(payloads["ab", doc])
+        assert ts.tolist() == list(range(0, 60 * len(want), 60))
+        assert vals.tolist() == want, doc
 
 
 def test_retention_ages_out_old_windows(spark, raw_points, tmp_path_factory):
@@ -406,3 +455,21 @@ def test_tier_features_equal_kernels_on_window_copies(spark):
             assert np.float64(r["features"][name]).tobytes() == np.float64(value).tobytes(), (
                 r["doc_id"], r["window_start"], name,
             )
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"base_step_seconds": 0}, "base_step_seconds"),
+        ({"base_step_seconds": -60}, "base_step_seconds"),
+        ({"gap_method": "bfill"}, "gap_method"),
+        ({"tiers": [TierSpec("1h", 0)]}, "window_seconds"),
+        ({"tiers": [TierSpec("1h", 3600), TierSpec("1h", DAY)]}, "duplicate"),
+        ({"tiers": [TierSpec("raw", 3600)]}, "reserved"),
+        ({"tiers": [TierSpec("base", DAY)]}, "reserved"),
+    ],
+)
+def test_bad_settings_rejected_before_run(spark, kwargs, match):
+    """Bad settings fail when the engine is built, before any tier commits."""
+    with pytest.raises(ValueError, match=match):
+        RollupEngine(spark, "/tmp/rollup_invalid_unused", settings=minimal_settings(), **kwargs)

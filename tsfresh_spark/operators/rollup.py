@@ -11,19 +11,19 @@ Tier cascade over a corpus of (doc_id, source) series:
             the base-grid points inside the window, plus the compressed
             point payload.
 
-Each tier has one physical path.  Raw groups the points per (series, day)
-(one shuffle).  Base groups them per series (one shuffle) and buckets,
-grids, fills and day-chunks each series in numpy inside one
-``applyInPandas`` call.  Feature tiers read the BASE tier's compressed
-day-chunks, never the raw input: day-aligned windows split each payload
-inside a narrow ``mapInPandas`` (zero shuffle); wider windows decode +
-regroup (one shuffle).  Every tier row comes from one window-row builder
-(:func:`_window_rows`) under one stored schema.  The codec is bit-exact, so
-"cascade" and "direct" produce identical features (asserted in tests).
-Every tier write is range-laid-out (repartitionByRange on doc_id, sorted
-within partitions) and recorded in the manifest with per-file row/byte
-metrics and a COMMIT record; a re-run of the same job_id skips committed
-tiers (resume from checkpoint).
+Every tier is one ``mapInArrow`` window map over per-series arrays or
+stored payloads: it cuts a whole Arrow batch into windows in one pass and
+builds the tier's record batch directly, features from the shared executor
+(``extract._feature_map``).  Raw groups the points per (series, day), base
+per series (one shuffle each; base gap-fills in the map).  Feature tiers
+read the BASE tier's compressed day-chunks, never the raw input: day-aligned
+windows split each payload in the map (zero shuffle); wider windows decode
++ regroup (one shuffle).  The codec is bit-exact, so "cascade" and "direct"
+produce identical features (asserted in tests).  Every tier write is
+range-laid-out (repartitionByRange on doc_id, sorted within partitions) and
+recorded in the manifest with per-file row/byte metrics and a COMMIT
+record; a re-run of the same job_id skips committed tiers (resume from
+checkpoint).
 
 Timestamps are epoch seconds (int64) throughout the engine — integer window
 arithmetic (``ts - ts % step``) is exact, codegen-friendly, and avoids
@@ -35,23 +35,24 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from tsfresh_spark.extract import compute_series_features
-from tsfresh_spark.functions.codec import encode_series
+from tsfresh_spark.extract import _feature_map
+from tsfresh_spark.functions.codec import decode_series, encode_series
 from tsfresh_spark.plans.manifest import Manifest
 
 DAY = 86400
+_FEATURES = pa.map_(pa.string(), pa.float64())
+_TIER_COLUMNS = "window_start long, n_points long, features map<string,double>, payload binary"
 
 
 @dataclass
 class TierSpec:
     name: str
     window_seconds: int
-    compute_features: bool = True
 
 
 DEFAULT_TIERS = [
@@ -72,6 +73,19 @@ class RollupEngine:
     range_partitions: int | None = None
 
     def __post_init__(self):
+        # reject bad settings before run() commits any tier
+        if self.base_step_seconds <= 0:
+            raise ValueError(f"base_step_seconds must be positive, got {self.base_step_seconds}")
+        if self.gap_method not in ("ffill", "linear"):
+            raise ValueError(f"unsupported gap_method {self.gap_method!r}")
+        names = [spec.name for spec in self.tiers]
+        for spec in self.tiers:
+            if spec.window_seconds <= 0:
+                raise ValueError(f"tier {spec.name!r}: window_seconds must be positive")
+            if spec.name in ("raw", "base"):
+                raise ValueError(f"tier name {spec.name!r} is reserved for the tier it reads")
+            if names.count(spec.name) > 1:
+                raise ValueError(f"duplicate tier name {spec.name!r}")
         self.manifest = Manifest(self.spark, self.base_path)
 
     # ------------------------------------------------------------------ io
@@ -93,46 +107,31 @@ class RollupEngine:
 
     # ------------------------------------------------------- point shuttling
 
-    def _chunk_points(self, points: DataFrame, window_seconds: int) -> DataFrame:
-        """points (id..., ts long, value double) → one row per window with
-        its ``ts``/``value`` arrays in (ts, value) order."""
-        idc = list(self.id_cols)
-        bucketed = points.withColumn(
-            "window_start", (F.col("ts") - F.pmod("ts", F.lit(window_seconds))).cast("long")
-        )
-        return bucketed.groupBy(*idc, "window_start").agg(
+    def _chunk_points(self, points: DataFrame, *keys: str | Column) -> DataFrame:
+        """points (id..., ts long, value double) → one row per group of
+        ``keys`` with its ``ts``/``value`` arrays in (ts, value) order; a
+        NULL value sorts first among points tied on ``ts``."""
+        return points.groupBy(*keys).agg(
             F.array_sort(F.collect_list(F.struct("ts", "value"))).alias("pts")
-        ).select(*idc, F.col("pts.ts").alias("ts"), F.col("pts.value").alias("value"))
+        ).select(*self.id_cols, F.col("pts.ts").alias("ts"), F.col("pts.value").alias("value"))
+
+    def _id_schema(self, frame: DataFrame) -> str:
+        return ", ".join(f"{c} {frame.schema[c].dataType.simpleString()}" for c in self.id_cols)
 
     def decode_points(self, stored: DataFrame) -> DataFrame:
-        """Decode a tier frame's payload column back to (id..., ts, value)."""
-        from tsfresh_spark.functions.codec import (
-            decompress_timestamps_udf,
-            decompress_values_udf,
-        )
+        """Decode a tier frame's payload column back to (id..., ts, value)
+        rows — each payload once, in a narrow ``mapInArrow``."""
+        names = [*self.id_cols, "ts", "value"]
 
-        idc = list(self.id_cols)
-        arrays = stored.select(
-            *idc,
-            decompress_timestamps_udf()(F.col("payload")).alias("ts_arr"),
-            decompress_values_udf()(F.col("payload")).alias("val_arr"),
-        )
-        return arrays.select(
-            *idc,
-            F.explode(F.arrays_zip("ts_arr", "val_arr")).alias("p"),
-        ).select(*idc, F.col("p.ts_arr").alias("ts"), F.col("p.val_arr").alias("value"))
+        def run(batches):
+            for batch in batches:
+                offsets, ts, values = _decode(batch.column("payload"))
+                rows = np.repeat(np.arange(batch.num_rows), np.diff(offsets))
+                ids = [c.take(rows) for c in batch.columns[:-1]]
+                yield pa.RecordBatch.from_arrays([*ids, pa.array(ts), pa.array(values)], names)
 
-    def _tier_schema(self, frame: DataFrame) -> str:
-        """The stored schema every tier shares: id_cols (typed as in
-        ``frame``) + window_start, n_points, features, payload."""
-        id_field_types = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in frame.schema.fields
-            if f.name in self.id_cols
-        )
-        return (
-            f"{id_field_types}, window_start long, n_points long, "
-            "features map<string,double>, payload binary"
+        return stored.select(*self.id_cols, "payload").mapInArrow(
+            run, f"{self._id_schema(stored)}, ts long, value double"
         )
 
     def _map_windows(
@@ -140,107 +139,83 @@ class RollupEngine:
         frame: DataFrame,
         window_seconds: int,
         *,
-        with_features: bool,
+        settings: dict | None = None,
         with_payload: bool = True,
+        fill_step: int | None = None,
     ) -> DataFrame:
-        """Narrow map: each row of ``frame`` (id_cols + either ``ts``/``value``
-        arrays or a ``payload`` decoded here) becomes one tier row per
-        ``window_seconds`` window its points fall in — no shuffle."""
-        from tsfresh_spark.functions.codec import decode_series
-
+        """Narrow ``mapInArrow``: each row of ``frame`` (id_cols + either
+        sorted ``ts``/``value`` arrays or a stored ``payload``) becomes one
+        tier row per ``window_seconds`` window its points fall in — no
+        shuffle.  ``fill_step`` first gap-fills each row onto that grid (the
+        base tier).  Each window gets its point count, its feature map under
+        ``settings`` and its encoded payload (``with_payload``); a column not
+        wanted comes back as a typed NULL column.  Every tier shares this
+        stored schema."""
         idc = list(self.id_cols)
-        kind_col = self.id_cols[1]
-        settings = self.settings if with_features else None
+        method = self.gap_method
         encoded = "payload" in frame.columns
 
         def run(batches):
-            for pdf in batches:
+            for batch in batches:
+                ids = batch.columns[: len(idc)]
                 if encoded:
-                    series = (decode_series(bytes(p)) for p in pdf["payload"].values)
-                else:
-                    series = zip(pdf["ts"].values, pdf["value"].values)
-                rows = []
-                for (ts, values), *ids in zip(series, *(pdf[c].values for c in idc)):
-                    id_map = dict(zip(idc, ids))
-                    rows += _window_rows(
-                        id_map, ts, values, window_seconds,
-                        kind=str(id_map[kind_col]), settings=settings,
-                        with_payload=with_payload,
+                    offsets, ts, values = _decode(batch.column("payload"))
+                else:  # aligned list columns; NULL values become NaN
+                    ts, values = (np.asarray(batch.column(c).flatten()) for c in ("ts", "value"))
+                    offsets = batch.column("ts").offsets.to_numpy()
+                    offsets = offsets - offsets[0]
+                if fill_step:
+                    offsets, ts, values = _flatten(
+                        _fill_series(ts[a:b], values[a:b], fill_step, method)
+                        for a, b in zip(offsets[:-1], offsets[1:])
                     )
-                if rows:
-                    yield pd.DataFrame(rows)
+                rows, starts, bounds = _cut_windows(offsets, ts, window_seconds)
+                features, payload = pa.nulls(len(rows), _FEATURES), pa.nulls(len(rows), pa.binary())
+                if settings is not None:
+                    windows = pa.ListArray.from_arrays(bounds.astype(np.int32), values)
+                    features = _feature_map(ids[1].take(rows), windows, settings)
+                if with_payload:
+                    cuts = zip(bounds, bounds[1:])
+                    chunks = [encode_series(ts[a:b], values[a:b]) for a, b in cuts]
+                    payload = pa.array(chunks, pa.binary())
+                yield pa.RecordBatch.from_arrays(
+                    [*(c.take(rows) for c in ids), pa.array(starts), pa.array(np.diff(bounds)),
+                     features, payload],
+                    [*idc, "window_start", "n_points", "features", "payload"],
+                )
 
         cols = ["payload"] if encoded else ["ts", "value"]
-        return frame.select(*idc, *cols).mapInPandas(run, self._tier_schema(frame))
+        schema = f"{self._id_schema(frame)}, {_TIER_COLUMNS}"
+        return frame.select(*idc, *cols).mapInArrow(run, schema)
 
     # ------------------------------------------------------- tier computation
 
     def _archive_tier(self, points: DataFrame) -> DataFrame:
         """raw archival: per-day compressed chunks, no features."""
-        return self._map_windows(self._chunk_points(points, DAY), DAY, with_features=False)
+        chunks = self._chunk_points(points, *self.id_cols, _window_start(DAY))
+        return self._map_windows(chunks, DAY)
 
     def compute_base(self, points: DataFrame) -> DataFrame:
         """Public: the gap-filled, payload-encoded base tier for raw
         ``points`` (id_cols + ts:long epoch-seconds + value:double), without
         touching tier storage — the building block ``run()`` persists.
 
-        One shuffle: the points are grouped per series and one
-        ``applyInPandas`` call does bucket → grid → fill → day-chunk →
-        encode in numpy.  Each ``base_step`` bucket keeps its last point in
-        (ts, value) order — the order the raw tier stores — so a tied last
-        timestamp resolves the same way whatever order the shuffle delivers.
-        The grid spans the first..last observed bucket, so linear fill is
-        interior-only and ffill is a forward index scan; both equal the
-        public ``gapfill`` operators over a ``sequence()`` grid byte for
-        byte (tests/test_rollup.py).
+        One shuffle: the pinned repartition, then ``groupBy(ids)`` collects
+        each series into one array sorted by (ts, value), as the raw tier
+        stores it, and the window map buckets, grids, fills and day-chunks
+        it.  Each ``base_step`` bucket keeps its last point in that order, so
+        a tied last timestamp resolves the same way whatever order the
+        shuffle delivers.  The grid spans the first..last observed bucket,
+        so linear fill is interior-only and ffill is a forward index scan;
+        both equal the public ``gapfill`` operators over a ``sequence()``
+        grid byte for byte (tests/test_rollup.py).
         """
-        idc = list(self.id_cols)
-        step = self.base_step_seconds
-        method = self.gap_method
-        if method not in ("ffill", "linear"):
-            raise ValueError(f"unsupported gap_method {method!r}")
-
-        def per_series(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            order = np.lexsort((pdf["value"].values, pdf["ts"].values))
-            ts = pdf["ts"].values[order].astype(np.int64)
-            vals = pdf["value"].values[order].astype(np.float64)
-            bucket = ts - ts % step
-            # last observation per bucket: in (ts, value) order the last
-            # index of each bucket run wins
-            change = np.concatenate([bucket[1:] != bucket[:-1], [True]])
-            ub = bucket[change]
-            uv = vals[change]
-            grid = np.arange(ub[0], ub[-1] + step, step, dtype=np.int64)
-            pos = (ub - ub[0]) // step
-            filled = np.full(len(grid), np.nan)
-            filled[pos] = uv
-            if method == "ffill":
-                idx = np.where(~np.isnan(filled), np.arange(len(filled)), 0)
-                np.maximum.accumulate(idx, out=idx)
-                filled = filled[idx]
-            else:
-                # linear, interior-only by construction; op-for-op identical
-                # to fill_linear's prev + (next-prev)*(pos-pt)/(nt-pt)
-                j = np.searchsorted(ub, grid, side="right") - 1
-                prev_t, prev_v = ub[j], uv[j]
-                nxt = np.minimum(j + 1, len(ub) - 1)
-                next_t, next_v = ub[nxt], uv[nxt]
-                observed = grid == prev_t
-                with np.errstate(all="ignore"):
-                    interp = prev_v + (next_v - prev_v) * (
-                        grid - prev_t
-                    ).astype(np.float64) / (next_t - prev_t).astype(np.float64)
-                filled = np.where(observed, prev_v, interp)
-            return pd.DataFrame(_window_rows(dict(zip(idc, key)), grid, filled, DAY))
-
         from tsfresh_spark.plans.partitioning import pin_group_partitions
 
         # pin the grouping shuffle: AQE byte-coalescing would run this
         # compute-bound stage on 1-2 cores for small-byte inputs
-        pinned = pin_group_partitions(points, *idc)
-        return pinned.groupBy(*idc).applyInPandas(
-            per_series, schema=self._tier_schema(points)
-        )
+        series = self._chunk_points(pin_group_partitions(points, *self.id_cols), *self.id_cols)
+        return self._map_windows(series, DAY, fill_step=self.base_step_seconds)
 
     def compute_tier(
         self,
@@ -254,10 +229,10 @@ class RollupEngine:
         storage) — the same call ``run()`` persists.
 
         Day-aligned windows (``DAY % window_seconds == 0``) live inside one
-        stored day chunk, so each payload is decoded and split at window
-        boundaries inside a narrow ``mapInPandas``: zero shuffle.  Wider
-        windows decode the points and regroup them per window (one
-        shuffle).  ``with_payload=False`` skips re-encoding the per-window
+        stored day chunk, so the window map decodes each payload and splits
+        it at window boundaries: zero shuffle.  Wider windows decode the
+        points and regroup them per window (one shuffle) before the same
+        window map.  ``with_payload=False`` skips re-encoding the per-window
         Gorilla payloads (the column comes back NULL): a consumer that only
         reads ``features``/``n_points`` — e.g. a report query — should not
         pay the bit-packing cost for bytes it immediately discards.
@@ -266,9 +241,10 @@ class RollupEngine:
         if DAY % window_seconds == 0:
             frame = base
         else:
-            frame = self._chunk_points(self.decode_points(base), window_seconds)
+            points = self.decode_points(base)
+            frame = self._chunk_points(points, *self.id_cols, _window_start(window_seconds))
         return self._map_windows(
-            frame, window_seconds, with_features=True, with_payload=with_payload
+            frame, window_seconds, settings=self.settings, with_payload=with_payload
         )
 
     # ------------------------------------------------------------- retention
@@ -355,37 +331,61 @@ class RollupEngine:
         return out
 
 
-def _window_rows(
-    id_map: dict,
-    ts: np.ndarray,
-    values: np.ndarray,
-    window_seconds: int,
-    *,
-    kind: str | None = None,
-    settings: dict | None = None,
-    with_payload: bool = True,
-) -> list[dict]:
-    """Cut one series' sorted ``(ts, values)`` at ``window_seconds``
-    boundaries into tier rows: ids, window start, point count, the feature
-    map (when ``settings`` is given) and the encoded payload (when
-    ``with_payload``)."""
-    if len(ts) == 0:
-        return []
+def _window_start(window_seconds: int) -> Column:
+    return (F.col("ts") - F.pmod("ts", F.lit(window_seconds))).cast("long").alias("window_start")
+
+
+def _flatten(series) -> tuple:
+    """Flat ``(offsets, ts, values)`` of ``(ts, values)`` pairs — the window
+    map's batch layout: row ``i`` is ``ts[offsets[i]:offsets[i + 1]]``."""
+    series = list(series)
+    offsets = np.zeros(len(series) + 1, np.int64)
+    np.cumsum([len(t) for t, _ in series], out=offsets[1:])
+    ts = np.concatenate([np.empty(0, np.int64), *(t for t, _ in series)])
+    return offsets, ts, np.concatenate([np.empty(0), *(v for _, v in series)])
+
+
+def _decode(payloads: pa.Array) -> tuple:
+    return _flatten(map(decode_series, payloads.to_pylist()))
+
+
+def _fill_series(ts: np.ndarray, vals: np.ndarray, step: int, method: str):
+    """One series' sorted points on a regular ``step`` grid from its first to
+    its last bucket: each bucket keeps its last point, and holes (NaN
+    included) are filled forward or linearly."""
+    bucket = ts - ts % step
+    # last observation per bucket: the last index of each bucket run wins
+    change = np.concatenate([bucket[1:] != bucket[:-1], [True]])
+    ub, uv = bucket[change], vals[change]
+    grid = np.arange(ub[0], ub[-1] + step, step, dtype=np.int64)
+    filled = np.full(len(grid), np.nan)
+    filled[(ub - ub[0]) // step] = uv
+    if method == "ffill":
+        idx = np.where(~np.isnan(filled), np.arange(len(filled)), 0)
+        np.maximum.accumulate(idx, out=idx)
+        return grid, filled[idx]
+    # linear, interior-only by construction; op-for-op identical to
+    # fill_linear's prev + (next-prev)*(pos-pt)/(nt-pt)
+    j = np.searchsorted(ub, grid, side="right") - 1
+    prev_t, prev_v = ub[j], uv[j]
+    nxt = np.minimum(j + 1, len(ub) - 1)
+    next_t, next_v = ub[nxt], uv[nxt]
+    observed = grid == prev_t
+    with np.errstate(all="ignore"):
+        interp = prev_v + (next_v - prev_v) * (
+            grid - prev_t
+        ).astype(np.float64) / (next_t - prev_t).astype(np.float64)
+    return grid, np.where(observed, prev_v, interp)
+
+
+def _cut_windows(offsets, ts, window_seconds: int):
+    """Cut every row at ``window_seconds`` boundaries in one pass.  Returns
+    each window's row, its start and the flat ``bounds`` (window ``k`` is
+    ``bounds[k]:bounds[k + 1]``)."""
     w = ts - ts % window_seconds
-    cuts = np.flatnonzero(np.diff(w)) + 1
-    starts = np.concatenate([[0], cuts])
-    ends = np.concatenate([cuts, [len(ts)]])
-    return [
-        {
-            **id_map,
-            "window_start": int(w[s]),
-            "n_points": int(e - s),
-            "features": (
-                None
-                if settings is None
-                else dict(compute_series_features(values[s:e], kind, settings))
-            ),
-            "payload": encode_series(ts[s:e], values[s:e]) if with_payload else None,
-        }
-        for s, e in zip(starts, ends)
-    ]
+    head = np.zeros(len(ts), bool)
+    head[1:] = w[1:] != w[:-1]
+    head[offsets[:-1][offsets[:-1] < len(ts)]] = True
+    starts = np.flatnonzero(head)
+    rows = np.searchsorted(offsets, starts, side="right") - 1
+    return rows, w[starts], np.append(starts, len(ts))

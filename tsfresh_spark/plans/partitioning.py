@@ -2,8 +2,8 @@
 
 The corpus's ``source`` key is zipf-skewed by construction (FIXTURES.md F1:
 web ≈ 50%).  AQE's skew handling only splits skewed *join* partitions; a
-skewed ``groupBy(...).applyInPandas`` still lands one giant task unless the
-group key itself is fine-grained or salted.  Helpers here:
+skewed grouping ahead of a Python stage still lands one giant task unless
+the group key itself is fine-grained or salted.  Helpers here:
 
 * :func:`salt_column` / :func:`unsalt` — deterministic salt from a hash of a
   fine-grained column, bounded fan-out;
@@ -38,13 +38,13 @@ def spread_by_keys(df: DataFrame, *keys: str, partitions: int | None = None) -> 
 def pin_group_partitions(
     df: DataFrame, *keys: str, num_partitions: int | None = None
 ) -> DataFrame:
-    """Explicit hash-repartition on grouping keys ahead of a grouped-map
-    UDF.  AQE's byte-based partition coalescing misjudges compute-bound
-    pandas UDF stages badly — a few-MB frame coalesces to 1-2 partitions
-    and the whole per-group computation runs on 1-2 cores.  An explicit
-    user repartition is honored by AQE, and the downstream
-    ``groupBy(keys).applyInPandas`` reuses the exchange (same hash
-    distribution), so no extra shuffle is added."""
+    """Explicit hash-repartition on grouping keys ahead of a compute-bound
+    per-group Python stage.  AQE's byte-based partition coalescing misjudges
+    it badly — a few-MB frame coalesces to 1-2 partitions and the whole
+    per-group computation runs on 1-2 cores.  An explicit user repartition
+    is honored by AQE, and the downstream ``groupBy(keys)`` (an
+    ``applyInPandas``, or the ``collect_list`` feeding ``mapInArrow`` in the
+    long path and the rollup base) reuses the exchange, so no extra shuffle."""
     if num_partitions is None:
         sess = df.sparkSession
         num_partitions = max(
