@@ -27,6 +27,6 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    # print only in CLI use — library callers (bench.py, __spark_entry__)
-    # must keep stdout clean for the driver's one-JSON-line contract
+    # print only in CLI use — library callers (__spark_entry__) must keep
+    # stdout clean: their caller reads it as one JSON line
     print(main())

@@ -2,8 +2,8 @@
 """Single-core kernel-engine profiler — no Spark, no host-throttle noise.
 
 Replays the exact per-series evaluation loop the Arrow workers run
-(`extract.compute_series_features` over the compiled plan) on a
-deterministic corpus shaped like `sources/synthetic.tokens_corpus`
+(`extract.compute_series_features`: a compiled plan run by `_run_series`)
+on a deterministic corpus shaped like `sources/synthetic.tokens_corpus`
 (lengths 16..2048, integral values) and reports
 
   * ms/series (the controlled engine-speed number BASELINE.md tracks), and
@@ -31,7 +31,7 @@ import pandas as pd
 def corpus(n_docs: int, seed: int = 7) -> list[np.ndarray]:
     """Deterministic (doc length, values) population mirroring
     tokens_corpus: lengths log-uniform-ish in [16, 2048], integral token
-    ids — the same value regime the bench headline measures."""
+    ids — the value regime of perfbench's tokens_extract workload."""
     rng = np.random.RandomState(seed)
     lengths = np.exp(
         rng.uniform(np.log(16), np.log(2048), size=n_docs)
@@ -46,7 +46,7 @@ def main() -> None:
     family = sys.argv[2] if len(sys.argv) > 2 else "efficient"
 
     from tsfresh_spark import settings as S
-    from tsfresh_spark.extract import _get_plan, compute_series_features
+    from tsfresh_spark.extract import _CompiledPlan, compute_series_features
 
     fc = {
         "efficient": S.efficient_settings,
@@ -57,7 +57,7 @@ def main() -> None:
     series = corpus(n_docs)
     total_values = int(sum(len(s) for s in series))
 
-    # warm: numpy/pandas import costs, plan compilation, JIT-ish caches
+    # warm: numpy/pandas import costs, JIT-ish caches
     for s in series[:16]:
         for _ in compute_series_features(s, "t", fc):
             pass
@@ -78,7 +78,7 @@ def main() -> None:
 
     # per-entry split on a subsample (keeps the split pass ~= one full pass)
     sub = series[:: max(1, n_docs // 500)]
-    plan = _get_plan(fc, "t")
+    plan = _CompiledPlan(fc, "t")
     per: dict[str, float] = {}
     for s in sub:
         pds = pd.Series(s)

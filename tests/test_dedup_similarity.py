@@ -536,11 +536,10 @@ def test_ngram_bound_prefilter_is_sound(spark):
 
 
 def test_ngram_jaccard_string_ids(spark):
-    """Round-6 regression guard: the grouped pair-gen must handle STRING
-    doc ids (the bench near-dup telemetry corpus keys docs by string id —
-    np.minimum has no ufunc loop for <U dtypes and crashed the first cut),
+    """Regression guard: the grouped pair-gen must handle STRING doc ids
+    (np.minimum has no ufunc loop for <U dtypes and crashed the first cut),
     with the same lexicographic a<b orientation the old self-join used.
-    Also exercises threshold=0 (telemetry mode)."""
+    Also exercises threshold=0 (every candidate with its score)."""
     rng = np.random.RandomState(3)
     words = [f"t{i}" for i in range(40)]
     docs = []
@@ -562,3 +561,89 @@ def test_ngram_jaccard_string_ids(spark):
     ).toPandas()
     assert len(tele) >= len(out)
     assert (tele.id_a < tele.id_b).all()
+
+
+def test_near_dup_pipelines_on_synthetic_corpora(spark):
+    """The banded near-dup pipelines on the synthetic scale corpora — docs
+    keyed by STRING id, thresholds and modes the small fixtures never run —
+    against a brute force over every pair of the collected corpus: exact n-gram
+    Jaccard equals it, minhash and cosine verification only ever return
+    true pairs, and every candidate set stays far below all pairs."""
+    import itertools
+    import re
+
+    from tsfresh_spark.operators.dedup import (
+        DEFAULT_SIGNATURE_BITS,
+        derive_num_planes,
+        embedding_candidate_pairs,
+        lsh_bucket_report,
+        signature_hamming_cutoff,
+    )
+    from tsfresh_spark.operators.similarity import _cosine
+    from tsfresh_spark.sources.synthetic import embeddings_corpus, text_corpus
+
+    n = 1500
+    all_pairs = n * (n - 1) // 2
+    docs = text_corpus(spark, n, n_partitions=4).cache()
+    collected = docs.collect()
+
+    def shingles(text):
+        words = [w for w in re.split(r"\s+", text) if w]
+        return {" ".join(words[i : i + 3]) for i in range(len(words) - 2)}
+
+    sets = sorted((r.doc_id, shingles(r.text)) for r in collected)
+    brute = {}
+    for (a, sa), (b, sb) in itertools.combinations(sets, 2):
+        inter = len(sa & sb)
+        if inter:
+            j = inter / (len(sa) + len(sb) - inter)
+            if j >= 0.8:
+                brute[(a, b)] = j
+    assert brute
+
+    exact = ngram_jaccard_duplicates(docs, threshold=0.8, max_df=n).collect()
+    assert all(r.id_a < r.id_b for r in exact)
+    assert {(r.id_a, r.id_b): r.jaccard for r in exact} == brute
+
+    sigs = minhash_signatures(docs).cache()
+    assert lsh_bucket_report(sigs, max_bucket_size=1024).count() == 0
+    cands = lsh_candidate_pairs(sigs, max_bucket_size=1024)
+    scored = jaccard_verify(docs, cands, threshold=0.0).collect()
+    assert 0 < len(scored) < all_pairs // 100
+    assert all(r.id_a < r.id_b for r in scored)
+    verified = {(r.id_a, r.id_b): r.jaccard for r in scored if r.jaccard >= 0.8}
+    assert verified and verified.items() <= brute.items()
+    sigs.unpersist()
+
+    sim = simhash_near_duplicates(docs, max_hamming=64, max_bucket_size=1024).collect()
+    assert 0 < len(sim) < all_pairs // 100
+    assert all(r.id_a < r.id_b for r in sim)
+    docs.unpersist()
+
+    emb = embeddings_corpus(spark, n, dim=32, n_partitions=4).cache()
+    vecs = {r.vec_id: np.array(r.embedding, np.float64) for r in emb.collect()}
+    ids = sorted(vecs)
+    m = np.array([vecs[i] for i in ids])
+    unit = m / np.linalg.norm(m, axis=1, keepdims=True)
+    cos = unit @ unit.T
+    # a hair of slack: numpy and Catalyst sum the dot products differently
+    close = {(ids[i], ids[j]) for i, j in zip(*np.nonzero(np.triu(cos >= 0.9 - 1e-9, k=1)))}
+    cand = embedding_candidate_pairs(
+        emb, dim=32, num_planes=derive_num_planes(n), num_tables=4, max_bucket_size=1024
+    ).filter(F.col("hamming") <= signature_hamming_cutoff(0.9, DEFAULT_SIGNATURE_BITS)).cache()
+    assert 0 < cand.count() < all_pairs // 100
+    side = lambda s: emb.select(
+        F.col("vec_id").alias(f"id_{s}"), F.col("embedding").cast("array<double>").alias(f"emb_{s}")
+    )
+    found = (
+        cand.select("id_a", "id_b")
+        .join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .filter(_cosine(F.col("emb_a"), F.col("emb_b")) >= 0.9)
+        .select("id_a", "id_b")
+        .collect()
+    )
+    assert all(r.id_a < r.id_b for r in found)
+    assert found and {(r.id_a, r.id_b) for r in found} <= close
+    cand.unpersist()
+    emb.unpersist()

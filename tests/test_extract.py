@@ -207,6 +207,53 @@ def test_compute_series_features_copies_views():
             )
 
 
+def test_settings_changed_in_place_recompile():
+    """A settings dict changed between two calls gets a plan of its new
+    contents: a kernel added to it runs, and a parameter set appended to a
+    simple kernel's list yields its feature too (a plan keyed on the dict's
+    identity served the old plan, and ``zip`` cut the new names short)."""
+    import pyarrow as pa
+
+    from tsfresh_spark.extract import _feature_map
+
+    x = np.array([1.0, 5.0, 2.0, 7.0, 3.0, 9.0, 1.0, 8.0, 2.0, 6.0])
+    settings = {"mean": None}
+    assert set(dict(compute_series_features(x, "k", settings))) == {"k__mean"}
+    settings["maximum"] = None
+    assert set(dict(compute_series_features(x, "k", settings))) == {"k__mean", "k__maximum"}
+
+    peaks = {"number_peaks": [{"n": 1}]}
+    list(compute_series_features(x, "k", peaks))
+    peaks["number_peaks"].append({"n": 3})
+    got = dict(compute_series_features(x, "k", peaks))
+    assert set(got) == {"k__number_peaks__n_1", "k__number_peaks__n_3"}
+
+    # the batch executor compiles per call, so it sees the change too
+    kinds, values = pa.array(["k"]), pa.array([x.tolist()])
+    peaks["number_peaks"].append({"n": 5})
+    (row,) = _feature_map(kinds, values, peaks).to_pylist()
+    assert [name for name, _ in row] == [
+        "k__number_peaks__n_1", "k__number_peaks__n_3", "k__number_peaks__n_5"
+    ]
+
+
+def test_cross_kernel_caches_cleared_per_series():
+    """Every one-slot cross-kernel cache is released once a series is done:
+    none may pin the last series' bytes in a reused worker."""
+    from tsfresh_spark.kernels import entropy, helpers, model, spectral
+    from tsfresh_spark.settings import efficient_settings
+
+    x = np.cumsum(np.random.default_rng(4).normal(size=300))
+    list(compute_series_features(x, "k", efficient_settings()))
+    slots = {
+        "cheb": entropy._CHEB_CACHE,
+        "friedrich": model._FRIEDRICH_CACHE,
+        "psd": helpers._PSD_CACHE,
+        "rfft": spectral._RFFT_CACHE,
+    }
+    assert {name: slot[0] for name, slot in slots.items()} == dict.fromkeys(slots)
+
+
 _ORDERED = {
     "mean_change": None,
     "first_location_of_maximum": None,

@@ -40,6 +40,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tsfresh_spark.kernels import KERNELS, KernelInfo
+from tsfresh_spark.kernels.entropy import clear_cheb_cache
+from tsfresh_spark.kernels.helpers import clear_psd_cache
+from tsfresh_spark.kernels.model import clear_friedrich_cache
+from tsfresh_spark.kernels.spectral import clear_rfft_cache
 from tsfresh_spark.naming import encode_parameters
 
 
@@ -125,24 +129,6 @@ class _CompiledPlan:
             )
 
 
-_PLAN_CACHE: dict = {}
-_PLAN_CACHE_MAX = 64  # bound: ad-hoc settings dicts must not pin memory
-
-
-def _get_plan(settings: dict, kind: str) -> _CompiledPlan:
-    """LRU: hits move to the end, eviction takes the least-recently-used —
-    a session's primary settings plan survives any number of ad-hoc dicts
-    cycling through (FIFO would evict the hottest, oldest-inserted entry)."""
-    key = (id(settings), kind)
-    hit = _PLAN_CACHE.pop(key, None)
-    if hit is None or hit[0] is not settings:
-        hit = (settings, _CompiledPlan(settings, kind))
-        if len(_PLAN_CACHE) >= _PLAN_CACHE_MAX:
-            _PLAN_CACHE.pop(next(iter(_PLAN_CACHE)))
-    _PLAN_CACHE[key] = hit
-    return hit[1]
-
-
 def compute_series_features(
     values: np.ndarray,
     kind: str,
@@ -151,7 +137,16 @@ def compute_series_features(
     show_warnings: bool = False,
 ) -> Iterator[tuple[str, float]]:
     """Evaluate every configured kernel on one series; yields
-    ``(feature_name, value)`` with values coerced to float64.
+    ``(feature_name, value)`` with values coerced to float64.  The plan is
+    compiled from ``settings`` as they are now, so a dict changed between
+    calls is never served a stale plan."""
+    yield from _run_series(_CompiledPlan(settings, kind), values, timestamps, show_warnings)
+
+
+def _run_series(
+    plan: _CompiledPlan, values, timestamps=None, show_warnings: bool = False
+) -> Iterator[tuple[str, float]]:
+    """Run a compiled plan on one series.
 
     Kernels get a freshly allocated copy of ``values``: BLAS reductions
     (``abs_energy`` is ``np.dot(x, x)``) sum in a different order when
@@ -159,55 +154,47 @@ def compute_series_features(
     so a view could differ from the same series in its own array by one
     ulp."""
     values = np.array(values)
-    plan = _get_plan(settings, kind)
+    series = None  # built lazily, only if some kernel needs pandas input
     try:
-        yield from _run_plan(plan, values, timestamps, show_warnings)
+        with warnings.catch_warnings():
+            warnings.simplefilter("default" if show_warnings else "ignore")
+            for name, info, parameter_list, prefix, names, batched in plan.entries:
+                if info.requires_timestamps and not isinstance(
+                    timestamps, pd.DatetimeIndex
+                ):
+                    # reference warns and skips when the index type is wrong
+                    # (extraction.py:347-358)
+                    continue
+                if info.input == "series":
+                    if series is None:
+                        series = pd.Series(values, index=timestamps)
+                    x = series
+                else:
+                    x = values
+                func = info.func
+                if info.fctype == "combiner":
+                    for suffix, value in func(x, param=parameter_list):
+                        yield f"{prefix}__{suffix}", float(value)
+                elif parameter_list:
+                    if batched is not None:
+                        for suffix, value in batched(x, parameter_list):
+                            yield f"{prefix}__{suffix}", float(value)
+                    else:
+                        for p, fname in zip(parameter_list, names):
+                            yield fname, float(func(x, **p))
+                else:
+                    yield prefix, float(func(x))
     finally:
-        # sample_entropy/ApEn share Chebyshev matrices through a one-slot
-        # cache; once this series is done the slot would otherwise pin up to
-        # ~66 MB per reused python worker between jobs.  The Welch-PSD
+        # The cross-kernel one-slot shares pin the series bytes as their
+        # keys, and the Chebyshev matrices of sample_entropy/ApEn up to
+        # ~66 MB, per reused python worker between jobs: clear them once
+        # this series is done — Chebyshev, Friedrich fit, Welch PSD
         # (fourier_entropy / spkt_welch_density) and rfft (fft_coefficient /
-        # fft_aggregated) one-slot shares are cleared for the same reason
-        # (they pin the series bytes as their keys).
-        from tsfresh_spark.kernels.entropy import clear_cheb_cache
-        from tsfresh_spark.kernels.helpers import clear_psd_cache
-        from tsfresh_spark.kernels.spectral import clear_rfft_cache
-
+        # fft_aggregated).
         clear_cheb_cache()
+        clear_friedrich_cache()
         clear_psd_cache()
         clear_rfft_cache()
-
-
-def _run_plan(plan, values, timestamps, show_warnings):
-    series = None  # built lazily, only if some kernel needs pandas input
-    with warnings.catch_warnings():
-        warnings.simplefilter("default" if show_warnings else "ignore")
-        for name, info, parameter_list, prefix, names, batched in plan.entries:
-            if info.requires_timestamps and not isinstance(
-                timestamps, pd.DatetimeIndex
-            ):
-                # reference warns and skips when the index type is wrong
-                # (extraction.py:347-358)
-                continue
-            if info.input == "series":
-                if series is None:
-                    series = pd.Series(values, index=timestamps)
-                x = series
-            else:
-                x = values
-            func = info.func
-            if info.fctype == "combiner":
-                for suffix, value in func(x, param=parameter_list):
-                    yield f"{prefix}__{suffix}", float(value)
-            elif parameter_list:
-                if batched is not None:
-                    for suffix, value in batched(x, parameter_list):
-                        yield f"{prefix}__{suffix}", float(value)
-                else:
-                    for p, fname in zip(parameter_list, names):
-                        yield fname, float(func(x, **p))
-            else:
-                yield prefix, float(func(x))
 
 
 # ---------------------------------------------------------------------------
@@ -255,6 +242,7 @@ def _batch_features(
     child = values.values
     times = _wall_times(timestamps) if timestamps is not None else None
     keys = order_by.values.to_numpy(zero_copy_only=False) if order_by is not None else None
+    plans: dict = {}  # one compiled plan per kind, for this call only
     start, counts, names, feats = 0, [], [], []
     for i, kind in enumerate(kinds.to_pylist()):
         a, b = offsets[i], offsets[i + 1]
@@ -264,9 +252,12 @@ def _batch_features(
         if keys is not None:
             x = x[np.argsort(keys[a:b], kind="stable")]
         index = pd.DatetimeIndex(times[a:b]) if times is not None else None
-        fc = kind_to_settings.get(kind, settings) if kind_to_settings else settings
+        plan = plans.get(kind)
+        if plan is None:
+            fc = kind_to_settings.get(kind, settings) if kind_to_settings else settings
+            plan = plans[kind] = _CompiledPlan(fc, str(kind))
         n = len(names)
-        for name, value in compute_series_features(x, str(kind), fc, timestamps=index):
+        for name, value in _run_series(plan, x, index):
             names.append(name)
             feats.append(value)
         counts.append(len(names) - n)

@@ -11,9 +11,9 @@ Implements the bit-level codecs from the Gorilla paper (Pelkonen et al.,
 
 No analog exists in the reference (tsfresh keeps raw frames); this is the
 north-rule storage codec for rollup tier payloads (BinaryType columns).
-Pure python/numpy bit-packing — executors need nothing beyond numpy — with
-Arrow-batched Spark wrappers (one UDF call per batch of series, never per
-row-of-a-series).
+Pure python/numpy bit-packing — executors need nothing beyond numpy; the
+rollup engine encodes and decodes payloads inside its ``mapInArrow`` maps,
+one batch of series at a time (``RollupEngine.decode_points``).
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-import pandas as pd
 
 
 class _BitWriter:
@@ -242,46 +241,3 @@ def decode_series(buf: bytes) -> tuple[np.ndarray, np.ndarray]:
     ts_block = buf[12 : 12 + ts_len]
     val_block = buf[12 + ts_len : 12 + ts_len + val_len]
     return decode_dod(ts_block), decode_gorilla(val_block)
-
-
-# --------------------------------------------------------------- spark layer
-
-
-def compress_series_udf():
-    """pandas UDF (array<long> ts, array<double> values) → binary payload."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _compress(ts: pd.Series, values: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                encode_series(
-                    np.asarray(t, dtype=np.int64), np.asarray(v, dtype=np.float64)
-                )
-                for t, v in zip(ts, values)
-            ]
-        )
-
-    return _compress
-
-
-def decompress_values_udf():
-    """pandas UDF binary payload → array<double> values."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<double>")
-    def _decompress(payload: pd.Series) -> pd.Series:
-        return pd.Series([decode_series(b)[1].tolist() for b in payload])
-
-    return _decompress
-
-
-def decompress_timestamps_udf():
-    """pandas UDF binary payload → array<long> timestamps."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("array<long>")
-    def _decompress(payload: pd.Series) -> pd.Series:
-        return pd.Series([decode_series(b)[0].tolist() for b in payload])
-
-    return _decompress

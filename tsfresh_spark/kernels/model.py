@@ -307,8 +307,14 @@ def augmented_dickey_fuller(x, param):
 # (series, m, r) back-to-back inside one extraction plan — the qcut+polyfit
 # is the whole cost of both kernels, so sharing it halves the pair.  Keyed
 # by the raw series bytes (exact memcmp) + (m, r); bounded to the single
-# most recent fit (the stored value is just m+1 coefficients).
+# most recent fit (the stored value is just m+1 coefficients); cleared per
+# series by compute_series_features.
 _FRIEDRICH_CACHE: list = [None]  # (key_bytes, m, r, coeffs)
+
+
+def clear_friedrich_cache() -> None:
+    """Release the cached fit (and its series-bytes key)."""
+    _FRIEDRICH_CACHE[0] = None
 
 
 def _friedrich_coefficients_cached(x, m, r):

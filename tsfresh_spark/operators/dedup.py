@@ -935,9 +935,9 @@ def embedding_candidate_pairs(
     ``hamming <= signature_hamming_cutoff(...)`` is the production
     pre-filter predicate; counting rows on both sides of it in one
     aggregate gives bucket-pair and candidate telemetry in a single
-    production-shaped job (cf. bench.near_dup_scale).  Deliberately
-    NARROW: no embedding columns ride through the pair shuffles —
-    consumers join vectors back by id on the filtered survivors."""
+    production-shaped job.  Deliberately NARROW: no embedding columns ride
+    through the pair shuffles — consumers join vectors back by id on the
+    filtered survivors."""
     if num_planes is None:
         # one cheap count job at plan time; pass num_planes explicitly to
         # keep the operator fully lazy
@@ -1011,9 +1011,9 @@ def embedding_bucket_report(
     """Buckets that SATURATE the hot-bucket cap: ``(tbl, bkt, bucket_size)``
     with ``bucket_size > max_bucket_size``.  A capped bucket silently drops
     ``bucket_size − max_bucket_size`` rows from candidate generation, i.e.
-    recall loss the pair counts alone cannot show — run this report (or
-    watch its count in bench telemetry) whenever the cap is in play, and
-    raise ``num_planes`` if it returns rows."""
+    recall loss the pair counts alone cannot show — run this report
+    whenever the cap is in play, and raise ``num_planes`` if it returns
+    rows."""
     if num_planes is None:
         num_planes = derive_num_planes(
             df.count(), target_bucket_size=target_bucket_size

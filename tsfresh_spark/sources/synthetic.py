@@ -75,7 +75,7 @@ def text_corpus(
 ) -> DataFrame:
     """(doc_id, text) with hash-derived deterministic word sequences and an
     injected near-duplicate population — the scale-stress input for the
-    near-dup pipelines (bench ``near_dup_scale``).
+    near-dup pipelines.
 
     ``dup_pct`` percent of docs copy a nearby donor doc's word stream but
     swap the first word for a unique marker, so their word-3-gram Jaccard
