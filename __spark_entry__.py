@@ -147,27 +147,6 @@ def q_extract_long_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_extract_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The third physical strategy under the SAME oracle: the Catalyst
-    hybrid engine (extract.py:_extract_tokens_hybrid) evaluates the
-    SQL-coverable calculator subset as built-in array expressions — zero
-    Python for the covered set — and must be bit-identical to the kernel
-    path on integer tokens.  Previously only checksum-equal in pytest
-    (test_hybrid_engine.py); this entry puts it under the driver's
-    DuckDB gate (VERDICT r4 next-round #5)."""
-    from tsfresh_spark.extract import extract_features_tokens
-
-    toks = _events_tokens_longid(spark, sf_dir)
-    settings = {name: None for name in _EXACT_KERNELS}
-    return extract_features_tokens(
-        toks,
-        settings,
-        id_col="user_id",
-        kind_col="event_type",
-        engine="hybrid",
-    )
-
-
 _ORACLE_EXTRACT_KERNELS = f"""
 WITH base AS ({_BASE_SQL}),
 g AS (
@@ -4685,7 +4664,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "extract_kernels_exact": q_extract_kernels,
         "extract_long_grouped": q_extract_long_grouped,
-        "extract_hybrid": q_extract_hybrid,
         "stats_sql_fastpath": q_stats_sql,
         "array_features_ordered": q_array_features,
         "longest_strike": q_longest_strike,
@@ -4738,7 +4716,6 @@ def oracle_sql() -> dict[str, str]:
     return {
         "extract_kernels_exact": _ORACLE_EXTRACT_KERNELS,
         "extract_long_grouped": _ORACLE_EXTRACT_KERNELS,
-        "extract_hybrid": _ORACLE_EXTRACT_KERNELS,
         "stats_sql_fastpath": _ORACLE_STATS_SQL,
         "array_features_ordered": _ORACLE_ARRAY_FEATURES,
         "longest_strike": _ORACLE_LONGEST_STRIKE,

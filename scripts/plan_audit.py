@@ -64,7 +64,7 @@ def run_audit(
     # table is materialized first (as any real deployment stores it) so the
     # audit sees the extraction plan, not the one-off table-build shuffle.
     from tsfresh_spark.extract import extract_features_tokens
-    from tsfresh_spark.settings import efficient_settings
+    from tsfresh_spark.settings import efficient_settings, minimal_settings
     from tsfresh_spark.sources.tables import events_tokens
 
     tok_path = "/tmp/plan_audit_tokens.parquet"
@@ -81,31 +81,7 @@ def run_audit(
         "extraction is a narrow Arrow map — no shuffle at ANY corpus size.",
     )
 
-    # 2. hybrid fully-covered: pure JVM, no python at all
-    from tsfresh_spark.settings import minimal_settings
-
-    cov = {
-        k: v
-        for k, v in minimal_settings().items()
-        if k not in ("variance", "standard_deviation")
-    }
-    audit(
-        "extract_features_tokens (hybrid, fully covered, map output)",
-        extract_features_tokens(toks, cov, engine="hybrid", output="map"),
-        [
-            ("no python evaluation", lambda p: all(op not in p for op in ("MapInArrow", "MapInPandas", "ArrowEvalPython"))),
-            ("no Exchange", lambda p: "Exchange" not in p),
-            (
-                "bare projection over the scan (≤3 plan nodes)",
-                lambda p: len([l for l in p.split("\n\n")[0].splitlines() if "(" in l]) <= 4,
-            ),
-        ],
-        "SQL-coverable calculators compile to one JVM-only projection "
-        "directly over the scan (higher-order map builders sit outside "
-        "whole-stage codegen by Spark design, but never leave the JVM).",
-    )
-
-    # 3. grouped long-format extraction: exactly one shuffle, pinned
+    # 2. grouped long-format extraction: exactly one shuffle, pinned
     from tsfresh_spark.extract import extract_features_long
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
@@ -135,7 +111,7 @@ def run_audit(
         "compute-bound kernel stage onto 2 cores.",
     )
 
-    # 4. brute-force cosine top-k: broadcast the small query side
+    # 3. brute-force cosine top-k: broadcast the small query side
     audit(
         "embedding_cosine_topk",
         qs["embedding_cosine_topk"](spark, sf_dir),
@@ -146,7 +122,7 @@ def run_audit(
         "shuffle the corpus.",
     )
 
-    # 5. semantic near-dup: equi-join on (table, bucket), never all-pairs
+    # 4. semantic near-dup: equi-join on (table, bucket), never all-pairs
     audit(
         "embedding_near_dups",
         qs["embedding_near_dups"](spark, sf_dir),
@@ -158,7 +134,7 @@ def run_audit(
         "hot-bucket cap); exact cosine runs on candidates only.",
     )
 
-    # 5b. exact n-gram Jaccard: inverted-index equi-join on the shingle
+    # 4b. exact n-gram Jaccard: inverted-index equi-join on the shingle
     # key — the same never-all-pairs contract as the hashed flavors
     audit(
         "ngram_jaccard_dups",
@@ -177,7 +153,7 @@ def run_audit(
         "side is AQE-broadcastable); exact Jaccard runs on candidates only.",
     )
 
-    # 6. scan hygiene: filter + projection pushed into the parquet scan
+    # 5. scan hygiene: filter + projection pushed into the parquet scan
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     pruned = docs.filter(F.col("doc_id") < 100).select("doc_id", "text")
     audit(
@@ -190,7 +166,7 @@ def run_audit(
         "Catalyst pushdown sanity on the raw tables.",
     )
 
-    # 7. rollup cascade tier: narrow split over the stored base (no shuffle)
+    # 6. rollup cascade tier: narrow split over the stored base (no shuffle)
     from tsfresh_spark.operators.rollup import RollupEngine
 
     eng = RollupEngine(

@@ -383,6 +383,46 @@ def test_long_unsorted_and_kind_shapes(spark):
     assert [(r["kind"], r["variable"]) for r in nulls] == [(None, "None__mean")]
 
 
+def test_tokens_null_kind_shapes(spark, tokens_df):
+    """A NULL kind on the tokens path: long output names its features
+    ``None__…``, map output does not raise on it, and ``kind_to_settings``
+    routes NULL rows to the default settings."""
+    nulls = spark.createDataFrame(
+        [(f"n{i}", list(range(3 + i, 23 + i)), None) for i in range(2)],
+        "doc_id string, tokens array<int>, source string",
+    )
+    df = tokens_df.unionByName(nulls)
+    settings = minimal_settings()
+    want = {
+        f"n{i}": dict(compute_series_features(np.arange(3 + i, 23 + i), "None", settings))
+        for i in range(2)
+    }
+
+    long_out: dict = {}
+    for r in extract_features_tokens(df, settings).filter(F.col("source").isNull()).collect():
+        long_out.setdefault(r["doc_id"], {})[r["variable"]] = r["value"]
+    assert set(long_out) == set(want)
+    for doc, feats in want.items():
+        assert set(feats) == {f"None__{k}" for k in settings}
+        _assert_same_features(long_out[doc], feats)
+
+    map_out = extract_features_tokens(df, settings, output="map").collect()
+    assert len(map_out) == 6
+    for r in map_out:
+        if r["source"] is None:
+            _assert_same_features(dict(r["features"]), want[r["doc_id"]])
+
+    routed = extract_features_tokens(
+        df, {"minimum": None}, kind_to_settings={"web": {"maximum": None}}
+    ).collect()
+    by_kind: dict = {}
+    for r in routed:
+        by_kind.setdefault(r["source"], set()).add(r["variable"])
+    assert by_kind == {
+        None: {"None__minimum"}, "web": {"web__maximum"}, "code": {"code__minimum"}
+    }
+
+
 # Settings with NaN features on short or constant series.
 _NAN_SETTINGS = {
     "variance_larger_than_standard_deviation": None,
@@ -407,8 +447,11 @@ def _digest(df) -> tuple[int, int]:
 def test_nan_features_leave_as_null_digests_unchanged(spark):
     """NaN features leave the executor as NULL.  The expected digests were
     recorded from the pandas-frame implementation this executor replaced
-    (``mapInPandas`` tokens loop, ``applyInPandas`` long path and pandas
-    remainder UDF), so every output shape is unchanged to the bit."""
+    (``mapInPandas`` tokens loop and ``applyInPandas`` long path), so every
+    output shape is unchanged to the bit.  The two ``mixed`` digests were
+    recorded from a retired engine that evaluated part of those settings as
+    Catalyst array expressions and the rest in a pandas UDF; the tokens
+    path reproduces them."""
     toks = spark.createDataFrame(
         [("d1", [1, 2, 3, 5, 2], "web"), ("d2", [2, 2], "code"), ("d3", [4], "web")],
         "doc_id string, tokens array<int>, source string",
@@ -423,20 +466,20 @@ def test_nan_features_leave_as_null_digests_unchanged(spark):
             }
         )
     )
-    hybrid = {**_NAN_SETTINGS, **minimal_settings()}
+    mixed = {**_NAN_SETTINGS, **minimal_settings()}
     outputs = {
         "tokens long": extract_features_tokens(toks, _NAN_SETTINGS),
         "tokens map": extract_features_tokens(toks, _NAN_SETTINGS, output="map"),
         "long": extract_features_long(long_df, _NAN_SETTINGS),
-        "hybrid long": extract_features_tokens(toks, hybrid, engine="hybrid"),
-        "hybrid map": extract_features_tokens(toks, hybrid, engine="hybrid", output="map"),
+        "mixed long": extract_features_tokens(toks, mixed),
+        "mixed map": extract_features_tokens(toks, mixed, output="map"),
     }
     expected = {
         "tokens long": (3133945367061512200, 15),
         "tokens map": (-3408671883230092785, 3),
         "long": (230609248030264466, 15),
-        "hybrid long": (7515542461868212253, 42),
-        "hybrid map": (838832670091973753, 3),
+        "mixed long": (7515542461868212253, 42),
+        "mixed map": (838832670091973753, 3),
     }
     assert {k: _digest(df) for k, df in outputs.items()} == expected
     long_out = outputs["long"].toPandas()

@@ -294,8 +294,9 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
 def test_grouped_extraction_pins_partition_count(spark):
     """extract_features_long must carry a user-specified repartition on the
     group keys (REPARTITION_BY_NUM) so AQE cannot byte-coalesce the
-    compute-bound pandas stage down to 1-2 partitions (the regression that
-    ran the kernel UDF on 2 cores)."""
+    compute-bound kernel stage down to 1-2 partitions (the regression that
+    ran the kernels on 2 cores).  The count is max(shuffle partitions,
+    2×parallelism)."""
     import pandas as pd
 
     from tsfresh_spark.extract import extract_features_long
@@ -308,17 +309,15 @@ def test_grouped_extraction_pins_partition_count(spark):
             "value": [1.0, 2.0, 3.0, 4.0],
         }
     )
-    out = extract_features_long(
-        spark.createDataFrame(pdf), {"mean": None}, num_partitions=7
-    )
+    out = extract_features_long(spark.createDataFrame(pdf), {"mean": None})
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "REPARTITION_BY_NUM" in plan, plan[:600]
-    assert ", 7)" in plan  # the explicit partition count survives planning
-    # and opting out drops the pin
-    out2 = extract_features_long(
-        spark.createDataFrame(pdf), {"mean": None}, num_partitions=0
+    want = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        2 * spark.sparkContext.defaultParallelism,
     )
-    assert "REPARTITION_BY_NUM" not in out2._jdf.queryExecution().executedPlan().toString()
+    # the pinned partition count survives planning
+    assert f", {want}), REPARTITION_BY_NUM" in plan, plan[:600]
 
 
 def test_embedding_neardup_plan_is_bucket_join(spark):

@@ -14,8 +14,35 @@ from tsfresh_spark.streaming.stream_extract import stateful_feature_stream
 T0 = dt.datetime(2024, 1, 1)
 
 
+def _last_snapshots(spark, path, pdf, schema, query):
+    """Write ``pdf`` as parquet, drain it through the stateful stream and
+    return the last update per series (the full-history snapshot)."""
+    spark.createDataFrame(pdf, schema).coalesce(1).write.mode("overwrite").parquet(path)
+    stream = spark.readStream.schema(schema).parquet(path)
+    out = stateful_feature_stream(
+        stream, minimal_settings(), id_cols=["doc_id", "source"]
+    )
+    q = (
+        out.writeStream.format("memory")
+        .queryName(query)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = spark.sql(f"select * from {query}").toPandas()
+    return out.schema, got.groupby(["doc_id", "source"]).last().reset_index()
+
+
+def _assert_batch_equal(pdf, last):
+    for _, r in last.iterrows():
+        series = pdf[pdf.doc_id == r.doc_id].sort_values("ts").value.values
+        want = dict(compute_series_features(series, r.source, minimal_settings()))
+        assert r.n_points == len(series)
+        assert dict(r.features) == want
+
+
 def test_stateful_stream_snapshot(spark, tmp_path):
-    path = str(tmp_path / "src")
     rng = np.random.RandomState(4)
     rows = []
     for doc, source in [("a", "web"), ("b", "code")]:
@@ -24,32 +51,12 @@ def test_stateful_stream_snapshot(spark, tmp_path):
                 (doc, source, T0 + dt.timedelta(seconds=30 * i), float(rng.randint(0, 50)))
             )
     pdf = pd.DataFrame(rows, columns=["doc_id", "source", "ts", "value"])
-    spark.createDataFrame(pdf).coalesce(1).write.mode("overwrite").parquet(path)
-
-    schema = "doc_id string, source string, ts timestamp, value double"
-    stream = spark.readStream.schema(schema).parquet(path)
-    out = stateful_feature_stream(
-        stream, minimal_settings(), id_cols=["doc_id", "source"]
+    _, last = _last_snapshots(
+        spark, str(tmp_path / "src"), pdf,
+        "doc_id string, source string, ts timestamp, value double", "stateful_feats",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stateful_feats")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(
-        "select * from stateful_feats"
-    ).toPandas()
-    # last update per series is the full-history snapshot
-    last = got.groupby(["doc_id", "source"]).last().reset_index()
     assert set(last.doc_id) == {"a", "b"}
-    for _, r in last.iterrows():
-        series = pdf[(pdf.doc_id == r.doc_id)].sort_values("ts").value.values
-        want = dict(compute_series_features(series, r.source, minimal_settings()))
-        assert r.n_points == len(series)
-        assert dict(r.features) == want
+    _assert_batch_equal(pdf, last)
 
 
 def test_stateful_stream_long_epoch_ts(spark, tmp_path):
@@ -81,3 +88,22 @@ def test_stateful_stream_long_epoch_ts(spark, tmp_path):
     feats = dict(last.features)
     assert feats["web__minimum"] == 15.0
     assert feats["web__maximum"] == 19.0
+
+
+def test_stateful_stream_keeps_id_types(spark, tmp_path):
+    """A ``doc_id long`` stream: the snapshot keeps the long ids and equals
+    batch features over the same series."""
+    rng = np.random.RandomState(9)
+    rows = [
+        (doc, "web", T0 + dt.timedelta(seconds=30 * i), float(rng.randint(0, 50)))
+        for doc in (7, 11)
+        for i in range(30)
+    ]
+    pdf = pd.DataFrame(rows, columns=["doc_id", "source", "ts", "value"])
+    schema, last = _last_snapshots(
+        spark, str(tmp_path / "src_long_ids"), pdf,
+        "doc_id long, source string, ts timestamp, value double", "stateful_feats_long_ids",
+    )
+    assert schema["doc_id"].dataType.simpleString() == "bigint"
+    assert sorted(last.doc_id) == [7, 11]
+    _assert_batch_equal(pdf, last)

@@ -17,8 +17,9 @@ frame on either side (:func:`_batch_features`).  Callers:
   reference's own Spark binding, bindings.py:164-265), then the same
   ``mapInArrow`` executor runs over the arrays.
 
-* the hybrid engine's kernel remainder and the windowed stream call the
-  executor from a scalar ``arrow_udf``.
+* the rollup tiers' window map (``operators/rollup.py``) runs the same
+  executor inside its own ``mapInArrow``, and the windowed stream calls it
+  from a scalar ``arrow_udf``.
 
 The per-series evaluation loop mirrors ``_do_extraction_on_chunk``
 (/root/reference/tsfresh/feature_extraction/extraction.py:308-386): simple
@@ -326,7 +327,6 @@ def extract_features_tokens(
     kind_col: str = "source",
     kind_to_settings: dict | None = None,
     output: str = "long",
-    engine: str = "kernels",
 ) -> DataFrame:
     """Extract features from pre-grouped token-array rows via ``mapInArrow``.
 
@@ -336,33 +336,10 @@ def extract_features_tokens(
     ``"map"`` (one row per series with a ``map<string,double>`` of features,
     avoiding a 794-column wide plan; cf. the reference's own advice in
     docs/text/large_data.rst:33-38).
-
-    ``engine="hybrid"`` evaluates the SQL-coverable calculator subset as
-    Catalyst expressions (zero Python) and routes only the remainder through
-    the Arrow UDF — bit-identical to the kernel path on integer tokens,
-    ≤1e-12 relative otherwise; still shuffle-free.  **Measured caveat**
-    (BASELINE.md): Spark's higher-order array functions evaluate
-    per-element without cross-feature subexpression sharing, so on 1k-token
-    arrays the Arrow-batched numpy kernels are faster (minimal set: 3.9M
-    vs 2.9M tokens/s; sort-heavy features far worse).  Keep the default
-    ``kernels`` engine unless the cluster cannot run python workers.
     """
     if output not in ("long", "map"):
         raise ValueError("output must be 'long' or 'map'")
-    if engine not in ("kernels", "hybrid"):
-        raise ValueError("engine must be 'kernels' or 'hybrid'")
     _validate_settings(settings, kind_to_settings)
-    if engine == "hybrid":
-        return _extract_tokens_hybrid(
-            df,
-            settings,
-            id_col=id_col,
-            tokens_col=tokens_col,
-            kind_col=kind_col,
-            kind_to_settings=kind_to_settings,
-            output=output,
-        )
-
     id_type = df.schema[id_col].dataType.simpleString()
     kw = dict(kind_to_settings=kind_to_settings, dtype=np.int64)
 
@@ -384,147 +361,6 @@ def extract_features_tokens(
     return df.select(id_col, tokens_col, kind_col).mapInArrow(run, schema=schema)
 
 
-def _rest_map_udf(settings: dict):
-    """Scalar Arrow UDF computing the kernel-remainder feature map per row —
-    lets the hybrid map output stay a single narrow projection
-    (covered Catalyst map ++ remainder map), zero shuffle."""
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("map<string,double>")
-    def _compute(tokens: pa.Array, kinds: pa.Array) -> pa.Array:
-        return _feature_map(kinds, tokens, settings, dtype=np.int64)
-
-    return _compute
-
-
-def _extract_tokens_hybrid(
-    df: DataFrame,
-    settings: dict,
-    *,
-    id_col: str,
-    tokens_col: str,
-    kind_col: str,
-    kind_to_settings: dict | None = None,
-    output: str = "long",
-) -> DataFrame:
-    """Catalyst expressions for the coverable subset + kernel UDF for the
-    rest.  Long output unions an exploded Catalyst branch with the kernel
-    branch; map output builds ``map_from_entries(covered) ++ rest_udf`` as
-    one narrow projection.  Every shape is shuffle-free.
-
-    ``kind_to_settings`` routes each listed kind through its own expression
-    split via a filtered branch per kind (filters push to the scan; the
-    number of kinds is small, so the extra scans are cheap and each branch
-    keeps its own fully-compiled Catalyst plan).  Caveat: each branch
-    re-executes the full upstream plan of ``df`` — cheap for a bare parquet
-    scan (the intended input), but if ``df`` is a derived frame
-    (join/aggregation upstream) persist() or localCheckpoint() it before
-    calling, or the subplan runs len(kinds)+1 times."""
-    from tsfresh_spark.functions.sql_features import hybrid_plan
-
-    if kind_to_settings:
-        kinds = list(kind_to_settings)
-        branches = [
-            _extract_tokens_hybrid(
-                df.filter(F.col(kind_col) == k),
-                kind_to_settings[k],
-                id_col=id_col,
-                tokens_col=tokens_col,
-                kind_col=kind_col,
-                output=output,
-            )
-            for k in kinds
-        ]
-        branches.append(
-            _extract_tokens_hybrid(
-                # NULL kinds must land in the default branch too: ~isin()
-                # evaluates to NULL (not true) for NULL, which would
-                # silently drop those rows — the kernels engine routes them
-                # through the default settings, and the engines are
-                # documented bit-identical
-                df.filter(
-                    (~F.col(kind_col).isin(kinds)) | F.col(kind_col).isNull()
-                ),
-                settings,
-                id_col=id_col,
-                tokens_col=tokens_col,
-                kind_col=kind_col,
-                output=output,
-            )
-        )
-        out = branches[0]
-        for b in branches[1:]:
-            out = out.unionByName(b)
-        return out
-
-    covered, rest = hybrid_plan(tokens_col, settings)
-    # NULL kinds: the kernels engine names features str(kind) → "None__…";
-    # a bare concat(kind, '__…') would be NULL (map_from_entries then
-    # rejects the null key at runtime, long output emits NULL variables)
-    kind_key = F.coalesce(F.col(kind_col).cast("string"), F.lit("None"))
-    if output == "map":
-        feat = None
-        if covered:
-            feat = F.map_from_entries(
-                F.array(
-                    *[
-                        F.struct(
-                            F.concat(
-                                kind_key, F.lit(f"__{suffix}")
-                            ).alias("key"),
-                            expr.cast("double").alias("value"),
-                        )
-                        for suffix, expr in covered
-                    ]
-                )
-            )
-        if rest:
-            rest_map = _rest_map_udf(rest)(F.col(tokens_col), F.col(kind_col))
-            feat = rest_map if feat is None else F.map_concat(feat, rest_map)
-        if feat is None:
-            # empty settings: mirror the kernels engine's empty feature map
-            feat = F.create_map().cast("map<string,double>")
-        return df.select(
-            F.col(id_col), F.col(kind_col), feat.alias("features")
-        )
-    parts = []
-    if covered:
-        entries = F.array(
-            *[
-                F.struct(
-                    F.concat(kind_key, F.lit(f"__{suffix}")).alias("variable"),
-                    expr.cast("double").alias("value"),
-                )
-                for suffix, expr in covered
-            ]
-        )
-        parts.append(
-            df.select(
-                F.col(id_col),
-                F.col(kind_col),
-                F.explode(entries).alias("_e"),
-            ).select(
-                id_col, kind_col, F.col("_e.variable"), F.col("_e.value")
-            )
-        )
-    if rest:
-        parts.append(
-            extract_features_tokens(
-                df,
-                rest,
-                id_col=id_col,
-                tokens_col=tokens_col,
-                kind_col=kind_col,
-                output="long",
-                engine="kernels",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 # ---------------------------------------------------------------------------
 # long-format path: (id, kind, sort, value) — grouped shuffle
 # ---------------------------------------------------------------------------
@@ -539,7 +375,6 @@ def extract_features_long(
     column_sort: str | list[str] | None = "time",
     column_value: str = "value",
     kind_to_settings: dict | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Extract features from a long frame: ``groupBy(id, kind)`` collects
     each series into one sorted array in Catalyst, and the shared
@@ -564,17 +399,13 @@ def extract_features_long(
     hash distribution — still exactly one Exchange): the kernel stage is
     compute-bound, so AQE's byte-based partition coalescing misjudges it
     badly — a few-MB long frame coalesces to 1-2 partitions and the whole
-    kernel evaluation runs on 1-2 cores.  ``num_partitions`` overrides the
-    default max(shuffle partitions, 2×parallelism); pass ``0`` to opt out
-    and let AQE decide.
+    kernel evaluation runs on 1-2 cores.  The pinned count is
+    max(shuffle partitions, 2×parallelism).
     """
     from tsfresh_spark.plans.partitioning import pin_group_partitions
 
     _validate_settings(settings, kind_to_settings)
-    if num_partitions != 0:
-        df = pin_group_partitions(
-            df, column_id, column_kind, num_partitions=num_partitions
-        )
+    df = pin_group_partitions(df, column_id, column_kind)
     id_type = df.schema[column_id].dataType.simpleString()
     sort_cols = [] if column_sort is None else (
         [column_sort] if isinstance(column_sort, str) else list(column_sort)
@@ -705,7 +536,6 @@ def extract_features_dict(
     column_sort: str | list[str] | None = None,
     column_kind: str = "kind",
     kind_to_settings: dict | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Extract features from a ``{kind: DataFrame}`` dict — the last
     ``to_tsdata`` dispatch arm (reference data.py:447-512): per-kind frames
@@ -727,7 +557,6 @@ def extract_features_dict(
         column_sort=column_sort,
         column_value=column_value,
         kind_to_settings=kind_to_settings,
-        num_partitions=num_partitions,
     )
 
 

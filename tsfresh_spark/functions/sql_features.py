@@ -1,13 +1,20 @@
-"""SQL fast path: class-A/B feature calculators as native Spark expressions.
+"""Class-A/B feature calculators as native Spark expressions.
 
-For feature semantics that SQL can express exactly, staying JVM-side (inside
-whole-stage codegen) beats any Python UDF by an order of magnitude and keeps
-Catalyst free to push down/prune.  Two families:
+For feature semantics that SQL can express exactly, these stay JVM-side and
+leave Catalyst free to push down and prune.  Two families:
 
 * :func:`agg_feature_exprs` — aggregate expressions over a long value column
   (use under ``groupBy(id, kind).agg(...)``);
 * :func:`array_feature_exprs` — higher-order array functions over a token
   array column (zero-shuffle: evaluated per row).
+
+The feature extraction operators (``extract.py``) do not use them: Spark
+evaluates higher-order array functions one element at a time, without
+sharing subexpressions across features, so the Arrow-batched kernels are
+faster on every measured shape.  The expressions serve the SQL-only driver
+queries ``stats_sql_fastpath`` and ``array_features_ordered``
+(``__spark_entry__.py``), and tests/test_sql_vs_kernels.py pins each one
+against its kernel.
 
 Formulas are written in terms of *exact integer sums* wherever the input is
 integral, so the same arithmetic in any ANSI engine (e.g. the DuckDB oracle)
@@ -87,244 +94,9 @@ def range_count_expr(v: Column | str, lo, hi) -> Column:
     return F.sum(((v >= F.lit(lo)) & (v < F.lit(hi))).cast("long")).cast("double")
 
 
-def array_quantile_expr(tokens: Column | str, q: float) -> Column:
-    """np.quantile linear interpolation over an array column: sort once,
-    interpolate between the two bracketing elements (exact formula
-    ``a + (b - a) * frac`` like numpy's default method)."""
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    s = F.array_sort(F.transform(t, lambda x: x.cast("double")))
-    n = F.size(s)
-    pos = (n.cast("double") - 1) * F.lit(q)
-    lo = F.floor(pos).cast("int")
-    frac = pos - F.floor(pos)
-    a = F.element_at(s, lo + 1)
-    b = F.element_at(s, F.least(lo + 2, n))
-    # numpy's symmetric lerp branch, reproduced for last-ulp parity
-    interp = F.when(frac < 0.5, a + (b - a) * frac).otherwise(
-        b - (b - a) * (1.0 - frac)
-    )
-    return F.when(n > 0, interp)
-
-
-def array_median_expr(tokens: Column | str) -> Column:
-    """np.median semantics: mean of the two middle elements for even n."""
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    s = F.array_sort(F.transform(t, lambda x: x.cast("double")))
-    n = F.size(s)
-    mid = (n / 2).cast("int")
-    even = (F.element_at(s, mid) + F.element_at(s, mid + 1)) / 2.0
-    odd = F.element_at(s, mid + 1)
-    return F.when(n > 0, F.when(n % 2 == 0, even).otherwise(odd))
-
-
 # ---------------------------------------------------------------------------
 # array (token-column) features: ordered class-B semantics without a shuffle
 # ---------------------------------------------------------------------------
-
-
-def _array_basic(tokens) -> dict:
-    t = F.col(tokens) if isinstance(tokens, str) else tokens
-    td = F.transform(t, lambda x: x.cast("double"))
-    return t, td, F.size(t)
-
-
-def array_value_count_expr(tokens, value) -> Column:
-    t, td, n = _array_basic(tokens)
-    return F.size(F.filter(td, lambda x: x == F.lit(float(value)))).cast("double")
-
-
-def array_range_count_expr(tokens, lo, hi) -> Column:
-    t, td, n = _array_basic(tokens)
-    return F.size(
-        F.filter(td, lambda x: (x >= F.lit(float(lo))) & (x < F.lit(float(hi))))
-    ).cast("double")
-
-
-def array_count_above_expr(tokens, thr) -> Column:
-    t, td, n = _array_basic(tokens)
-    return F.size(F.filter(td, lambda x: x >= F.lit(float(thr)))).cast("double") / n
-
-
-def array_count_below_expr(tokens, thr) -> Column:
-    t, td, n = _array_basic(tokens)
-    return F.size(F.filter(td, lambda x: x <= F.lit(float(thr)))).cast("double") / n
-
-
-def array_number_crossing_expr(tokens, m) -> Column:
-    t, td, n = _array_basic(tokens)
-    above = F.transform(td, lambda x: (x > F.lit(float(m))).cast("int"))
-    return F.aggregate(
-        F.zip_with(
-            F.slice(above, 2, F.greatest(n - 1, F.lit(0))),
-            F.slice(above, 1, F.greatest(n - 1, F.lit(0))),
-            lambda a, b: (a != b).cast("long"),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    ).cast("double")
-
-
-def array_mean_n_absolute_max_expr(tokens, number_of_maxima: int) -> Column:
-    t, td, n = _array_basic(tokens)
-    top = F.slice(
-        F.array_sort(F.transform(td, F.abs)), -number_of_maxima, number_of_maxima
-    )
-    return F.when(
-        n > number_of_maxima,
-        F.aggregate(top, F.lit(0.0), lambda a, x: a + x) / number_of_maxima,
-    )
-
-
-def array_has_duplicate_max_expr(tokens) -> Column:
-    t, td, n = _array_basic(tokens)
-    return (F.size(F.filter(td, lambda x: x == F.array_max(td))) >= 2).cast("double")
-
-
-def array_has_duplicate_min_expr(tokens) -> Column:
-    t, td, n = _array_basic(tokens)
-    return (F.size(F.filter(td, lambda x: x == F.array_min(td))) >= 2).cast("double")
-
-
-def array_symmetry_looking_exprs(tokens, param) -> list:
-    t, td, n = _array_basic(tokens)
-    sum_d = F.aggregate(td, F.lit(0.0), lambda acc, x: acc + x)
-    gap = F.abs(sum_d / n.cast("double") - array_median_expr(tokens))
-    rng = F.array_max(td) - F.array_min(td)
-    return [
-        (f"r_{cfg['r']}", (gap < F.lit(cfg["r"]) * rng).cast("double"))
-        for cfg in param
-    ]
-
-
-# SQL-coverable calculators for hybrid execution: bit-exact vs the kernels
-# on integer-valued tokens (all sums exactly representable), ≤1e-12 rel
-# otherwise.  Everything float-summation-order-sensitive (variance family,
-# c3, ratio_beyond_r_sigma, ...) stays on the kernel path.
-_HYBRID_PARAMETERLESS = [
-    "length",
-    "sum_values",
-    "mean",
-    "minimum",
-    "maximum",
-    "absolute_maximum",
-    "abs_energy",
-    "mean_change",
-    "mean_abs_change",
-    "absolute_sum_of_changes",
-    "mean_second_derivative_central",
-    "first_location_of_maximum",
-    "last_location_of_maximum",
-    "first_location_of_minimum",
-    "last_location_of_minimum",
-    "count_above_mean",
-    "count_below_mean",
-    "has_duplicate",
-    "ratio_value_number_to_time_series_length",
-]
-
-
-def hybrid_plan(tokens_col, settings: dict):
-    """Split ``settings`` into (catalyst_entries, remainder_settings).
-
-    catalyst_entries is a list of (feature_suffix, Column) evaluated
-    JVM-side; remainder_settings keeps everything the SQL layer cannot
-    express with kernel-identical semantics.
-    """
-    from tsfresh_spark.naming import encode_parameters
-
-    base = array_feature_exprs(tokens_col)
-    covered: list = []
-    rest: dict = {}
-    for key, params in settings.items():
-        name = key if isinstance(key, str) else None
-        if name in _HYBRID_PARAMETERLESS and not params:
-            covered.append((name, base[name]))
-        elif name == "root_mean_square" and not params:
-            t = F.col(tokens_col) if isinstance(tokens_col, str) else tokens_col
-            td = F.transform(t, lambda x: x.cast("double"))
-            n = F.size(t)
-            covered.append(
-                (
-                    name,
-                    F.when(
-                        n > 0,
-                        F.sqrt(
-                            F.aggregate(td, F.lit(0.0), lambda a, x: a + x * x)
-                            / n.cast("double")
-                        ),
-                    ),
-                )
-            )
-        elif name == "median" and not params:
-            covered.append((name, array_median_expr(tokens_col)))
-        elif name == "has_duplicate_max" and not params:
-            covered.append((name, array_has_duplicate_max_expr(tokens_col)))
-        elif name == "has_duplicate_min" and not params:
-            covered.append((name, array_has_duplicate_min_expr(tokens_col)))
-        elif name == "quantile" and params:
-            for p in params:
-                covered.append(
-                    (
-                        f"quantile__{encode_parameters(p)}",
-                        array_quantile_expr(tokens_col, p["q"]),
-                    )
-                )
-        elif name == "value_count" and params:
-            for p in params:
-                covered.append(
-                    (
-                        f"value_count__{encode_parameters(p)}",
-                        array_value_count_expr(tokens_col, p["value"]),
-                    )
-                )
-        elif name == "range_count" and params:
-            for p in params:
-                covered.append(
-                    (
-                        f"range_count__{encode_parameters(p)}",
-                        array_range_count_expr(tokens_col, p["min"], p["max"]),
-                    )
-                )
-        elif name == "count_above" and params:
-            for p in params:
-                covered.append(
-                    (
-                        f"count_above__{encode_parameters(p)}",
-                        array_count_above_expr(tokens_col, p["t"]),
-                    )
-                )
-        elif name == "count_below" and params:
-            for p in params:
-                covered.append(
-                    (
-                        f"count_below__{encode_parameters(p)}",
-                        array_count_below_expr(tokens_col, p["t"]),
-                    )
-                )
-        elif name == "number_crossing_m" and params:
-            for p in params:
-                covered.append(
-                    (
-                        f"number_crossing_m__{encode_parameters(p)}",
-                        array_number_crossing_expr(tokens_col, p["m"]),
-                    )
-                )
-        elif name == "mean_n_absolute_max" and params:
-            for p in params:
-                covered.append(
-                    (
-                        f"mean_n_absolute_max__{encode_parameters(p)}",
-                        array_mean_n_absolute_max_expr(
-                            tokens_col, p["number_of_maxima"]
-                        ),
-                    )
-                )
-        elif name == "symmetry_looking" and params:
-            for suffix, expr in array_symmetry_looking_exprs(tokens_col, params):
-                covered.append((f"symmetry_looking__{suffix}", expr))
-        else:
-            rest[key] = params
-    return covered, rest
 
 
 def array_feature_exprs(tokens: Column | str) -> dict[str, Column]:

@@ -35,22 +35,20 @@ def spread_by_keys(df: DataFrame, *keys: str, partitions: int | None = None) -> 
     return df.repartition(*keys)
 
 
-def pin_group_partitions(
-    df: DataFrame, *keys: str, num_partitions: int | None = None
-) -> DataFrame:
+def pin_group_partitions(df: DataFrame, *keys: str) -> DataFrame:
     """Explicit hash-repartition on grouping keys ahead of a compute-bound
     per-group Python stage.  AQE's byte-based partition coalescing misjudges
     it badly — a few-MB frame coalesces to 1-2 partitions and the whole
     per-group computation runs on 1-2 cores.  An explicit user repartition
     is honored by AQE, and the downstream ``groupBy(keys)`` (an
     ``applyInPandas``, or the ``collect_list`` feeding ``mapInArrow`` in the
-    long path and the rollup base) reuses the exchange, so no extra shuffle."""
-    if num_partitions is None:
-        sess = df.sparkSession
-        num_partitions = max(
-            int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
-            sess.sparkContext.defaultParallelism * 2,
-        )
+    long path and the rollup base) reuses the exchange, so no extra shuffle.
+    The count is max(shuffle partitions, 2×parallelism)."""
+    sess = df.sparkSession
+    num_partitions = max(
+        int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
+        sess.sparkContext.defaultParallelism * 2,
+    )
     return df.repartition(num_partitions, *keys)
 
 

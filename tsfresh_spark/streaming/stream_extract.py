@@ -108,11 +108,11 @@ def stateful_feature_stream(
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    kind_col = id_cols[-1]
-    id_struct_types = ", ".join(f"{c} string" for c in id_cols)
-    out_schema = (
-        f"{id_struct_types}, n_points long, features map<string,double>"
+    # the id columns keep their input types, as in the other paths
+    id_types = ", ".join(
+        f"{c} {stream.schema[c].dataType.simpleString()}" for c in id_cols
     )
+    out_schema = f"{id_types}, n_points long, features map<string,double>"
     state_schema = "ts array<long>, value array<double>"
 
     def update(
