@@ -32,7 +32,6 @@ def main() -> None:
     )
     ap.add_argument("--base-step-seconds", type=int, default=60)
     ap.add_argument("--gap-method", choices=["ffill", "linear"], default="ffill")
-    ap.add_argument("--range-partitions", type=int, default=None)
     ap.add_argument("--id-col", default="doc_id", help="series id column")
     ap.add_argument("--kind-col", default="source", help="series kind column")
     ap.add_argument("--ts-col", default="ts")
@@ -74,7 +73,6 @@ def main() -> None:
         id_cols=(idc, kc),
         base_step_seconds=args.base_step_seconds,
         gap_method=args.gap_method,
-        range_partitions=args.range_partitions,
     )
     paths = eng.run(points, job_id=args.job_id)
     summary = {

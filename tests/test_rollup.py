@@ -38,7 +38,6 @@ def engine(spark, raw_points, tmp_path_factory):
         settings=minimal_settings(),
         base_step_seconds=60,
         tiers=[TierSpec("1h", 3600), TierSpec("1d", DAY)],
-        range_partitions=4,
     )
     eng.paths = eng.run(raw_points, job_id="job-A")
     return eng
@@ -129,7 +128,6 @@ def test_resume_skips_committed_tiers(spark, engine, raw_points):
         settings=minimal_settings(),
         base_step_seconds=60,
         tiers=[TierSpec("1h", 3600), TierSpec("1d", DAY)],
-        range_partitions=4,
     )
     paths2 = eng2.run(raw_points, job_id="job-A")
     assert paths2 == engine.paths
@@ -173,7 +171,6 @@ def test_wider_than_day_tier_uses_regroup_path(spark, raw_points, tmp_path_facto
         settings=minimal_settings(),
         base_step_seconds=3600,
         tiers=[TierSpec(name, w) for name, w in widths.items()],
-        range_partitions=2,
     )
     paths = eng.run(raw_points, job_id="job-7d")
     base_pts = _base_points(spark, paths["base"])
@@ -320,7 +317,7 @@ def test_retention_ages_out_old_windows(spark, raw_points, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("rollup_ret"))
     eng = RollupEngine(
         spark, base, settings=minimal_settings(), base_step_seconds=3600,
-        tiers=[TierSpec("1h", 3600)], range_partitions=2,
+        tiers=[TierSpec("1h", 3600)],
     )
     eng.run(raw_points, job_id="job-ret")
     tier_df = spark.read.parquet(eng.tier_path("1h")).toPandas()
@@ -382,10 +379,9 @@ def test_commit_counts_come_from_footers(spark, raw_points, tmp_path_factory):
     import time
 
     base = str(tmp_path_factory.mktemp("rollup_footers"))
-    # more range partitions than series
     eng = RollupEngine(
         spark, base, settings=minimal_settings(), base_step_seconds=3600,
-        tiers=[TierSpec("1d", DAY)], range_partitions=8,
+        tiers=[TierSpec("1d", DAY)],
     )
     eng.run(raw_points, job_id="job-F")
     path = eng.tier_path("1d")
@@ -473,3 +469,62 @@ def test_bad_settings_rejected_before_run(spark, kwargs, match):
     """Bad settings fail when the engine is built, before any tier commits."""
     with pytest.raises(ValueError, match=match):
         RollupEngine(spark, "/tmp/rollup_invalid_unused", settings=minimal_settings(), **kwargs)
+
+
+def _stage_graph(spark, stage_id: int) -> str:
+    """The stage's RDD operation graph (one cluster per physical operator)
+    as the status store holds it, in dot form."""
+    graph = spark.sparkContext._jsc.sc().statusStore().operationGraphForStage(stage_id)
+    return spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph.makeDotFile(graph)
+
+
+def test_each_window_map_runs_once_on_every_core(spark, tmp_path, monkeypatch):
+    """Every tier's window map runs in exactly one stage, on
+    max(shuffle partitions, defaultParallelism) tasks, and no range
+    exchange sits above a map in a tier's write plan (its sample job would
+    run the map a second time).  A wider-than-day tier also runs its
+    decode map once, in a stage of its own.  Twice as many series as
+    partitions, so a range split on doc_id can fill every partition."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tsfresh_spark.plans.profiling import StageProfiler
+
+    n = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+    rng = np.random.RandomState(5)
+    rows = [
+        (f"d{i:02d}", "web", int(t), float(v))
+        for i in range(2 * n)
+        for t, v in zip(np.cumsum(rng.randint(30, 900, 200)), rng.randint(0, 100, 200))
+    ]
+    points = spark.createDataFrame(rows, "doc_id string, source string, ts long, value double")
+    write, seen = DataFrameWriter.parquet, {}
+
+    def profiled(self, path, *args, **kwargs):
+        plan = self._df._jdf.queryExecution().executedPlan().toString()
+        with StageProfiler(spark) as prof:
+            write(self, path, *args, **kwargs)
+        seen[os.path.basename(path)] = plan, prof.stages
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", profiled)
+    eng = RollupEngine(
+        spark, str(tmp_path), settings=minimal_settings(), base_step_seconds=3600,
+        tiers=[TierSpec("1h", 3600), TierSpec("36h", 36 * 3600)],
+    )
+    eng.run(points, job_id="job-layout")
+    monkeypatch.undo()
+    for tier, decode_maps in [("raw", 0), ("base", 0), ("1h", 0), ("36h", 1)]:
+        plan, stages = seen[f"tier={tier}"]
+        assert "MapInArrow" in plan, tier
+        assert "rangepartitioning" not in plan.split("MapInArrow")[0], (tier, plan)
+        maps = [
+            (m.num_tasks, _stage_graph(spark, m.stage_id).count('label="MapInArrow"'))
+            for m in stages
+            if m.status == "COMPLETE"
+        ]
+        maps = [m for m in maps if m[1]]
+        assert len(maps) == 1 + decode_maps, (tier, maps)
+        assert maps[-1] == (n, 1), (tier, maps)
+        assert all(k == 1 for _, k in maps), (tier, maps)

@@ -12,6 +12,30 @@ from tsfresh_spark.settings import minimal_settings
 from tsfresh_spark.streaming.stream_extract import stateful_feature_stream
 
 T0 = dt.datetime(2024, 1, 1)
+NO_DATA_BATCHES = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+
+def _drain(spark, out, query):
+    """Run ``out`` to a memory sink once over all available input and
+    return what it emitted.  Started without no-data batches, the query
+    ends when its input is drained (see ``stateful_feature_stream``)."""
+    before = spark.conf.get(NO_DATA_BATCHES)
+    spark.conf.set(NO_DATA_BATCHES, "false")
+    try:
+        q = (
+            out.writeStream.format("memory")
+            .queryName(query)
+            .outputMode("update")
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(NO_DATA_BATCHES, before)
+    try:
+        assert q.awaitTermination(120) is True
+    finally:
+        q.stop()
+    return spark.sql(f"select * from {query}").toPandas()
 
 
 def _last_snapshots(spark, path, pdf, schema, query):
@@ -22,15 +46,7 @@ def _last_snapshots(spark, path, pdf, schema, query):
     out = stateful_feature_stream(
         stream, minimal_settings(), id_cols=["doc_id", "source"]
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql(f"select * from {query}").toPandas()
+    got = _drain(spark, out, query)
     return out.schema, got.groupby(["doc_id", "source"]).last().reset_index()
 
 
@@ -73,15 +89,7 @@ def test_stateful_stream_long_epoch_ts(spark, tmp_path):
     out = stateful_feature_stream(
         stream, minimal_settings(), id_cols=["doc_id", "source"], max_buffer=5
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("stateful_feats_long")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select * from stateful_feats_long").toPandas()
+    got = _drain(spark, out, "stateful_feats_long")
     last = got.groupby(["doc_id", "source"]).last().reset_index().iloc[0]
     # buffer keeps the 5 NEWEST points (15..19) — only true if ts survives
     assert last.n_points == 5

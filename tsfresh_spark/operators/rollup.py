@@ -15,15 +15,24 @@ Every tier is one ``mapInArrow`` window map over per-series arrays or
 stored payloads: it cuts a whole Arrow batch into windows in one pass and
 builds the tier's record batch directly, features from the shared executor
 (``extract._feature_map``).  Raw groups the points per (series, day), base
-per series (one shuffle each; base gap-fills in the map).  Feature tiers
-read the BASE tier's compressed day-chunks, never the raw input: day-aligned
-windows split each payload in the map (zero shuffle); wider windows decode
-+ regroup (one shuffle).  The codec is bit-exact, so "cascade" and "direct"
-produce identical features (asserted in tests).  Every tier write is
-range-laid-out (repartitionByRange on doc_id, sorted within partitions) and
-recorded in the manifest with per-file row/byte metrics and a COMMIT
-record; a re-run of the same job_id skips committed tiers (resume from
-checkpoint).
+per series (base gap-fills in the map).  Feature tiers read the BASE tier's
+compressed day-chunks, never the raw input: day-aligned windows split each
+payload in the map; wider windows decode + regroup.  The codec is
+bit-exact, so "cascade" and "direct" produce identical features (asserted
+in tests).
+
+Two layouts, two exchanges per tier.  The compute layout: one exchange
+with an explicit count of max(shuffle partitions, defaultParallelism)
+feeds every window map, so the map runs once, on every core — a range
+exchange on doc_id under the raw and base ``groupBy`` (which reuses it),
+round-robin over the stored base payloads for day-aligned tiers, a hash
+pin of the decoded points for wider ones.  The file layout: ``_write``
+hash-partitions the map output on doc_id with no count, sorted within
+partitions, and AQE sizes the files by bytes.  No range exchange ever sits
+above a map: range partitioning samples its input with a separate job,
+which would run the map twice.  Each write is recorded in the manifest with
+per-file row/byte metrics and a COMMIT record; a re-run of the same job_id
+skips committed tiers (resume from checkpoint).
 
 Timestamps are epoch seconds (int64) throughout the engine — integer window
 arithmetic (``ts - ts % step``) is exact, codegen-friendly, and avoids
@@ -70,7 +79,6 @@ class RollupEngine:
     base_step_seconds: int = 60
     gap_method: str = "ffill"
     tiers: list[TierSpec] = field(default_factory=lambda: list(DEFAULT_TIERS))
-    range_partitions: int | None = None
 
     def __post_init__(self):
         # reject bad settings before run() commits any tier
@@ -94,16 +102,31 @@ class RollupEngine:
         return f"{self.base_path.rstrip('/')}/tier={tier}"
 
     def _write(self, df: DataFrame, tier: str) -> str:
+        """File layout: hash on ``doc_id`` with no count, so AQE sizes the
+        files by bytes (one file per tier for a small job), each sorted by
+        (doc_id, window_start).  A hash exchange samples nothing, so the
+        window map below it runs once."""
         path = self.tier_path(tier)
         doc_col = self.id_cols[0]
-        out = df
-        if self.range_partitions:
-            out = out.repartitionByRange(self.range_partitions, doc_col)
-        else:
-            out = out.repartitionByRange(doc_col)
-        out = out.sortWithinPartitions(doc_col, "window_start")
+        out = df.repartition(doc_col).sortWithinPartitions(doc_col, "window_start")
         out.write.mode("overwrite").parquet(path)
         return path
+
+    # ---------------------------------------------------- compute layout
+
+    def _spread_count(self) -> int:
+        """Partitions a window map runs on: every core, and at least the
+        session's shuffle partitions.  An explicit count, so AQE keeps it
+        (byte-coalescing would run a small compute-bound map on one core)."""
+        sc = self.spark.sparkContext
+        return max(int(self.spark.conf.get("spark.sql.shuffle.partitions")), sc.defaultParallelism)
+
+    def _spread(self, points: DataFrame) -> DataFrame:
+        """Range-partition raw points on ``doc_id`` ahead of a per-series
+        ``groupBy``: the range sample reads only the input, and the
+        aggregate reuses the exchange (range on ``doc_id`` clusters every
+        key set that contains it)."""
+        return points.repartitionByRange(self._spread_count(), self.id_cols[0])
 
     # ------------------------------------------------------- point shuttling
 
@@ -192,7 +215,7 @@ class RollupEngine:
 
     def _archive_tier(self, points: DataFrame) -> DataFrame:
         """raw archival: per-day compressed chunks, no features."""
-        chunks = self._chunk_points(points, *self.id_cols, _window_start(DAY))
+        chunks = self._chunk_points(self._spread(points), *self.id_cols, _window_start(DAY))
         return self._map_windows(chunks, DAY)
 
     def compute_base(self, points: DataFrame) -> DataFrame:
@@ -200,21 +223,19 @@ class RollupEngine:
         ``points`` (id_cols + ts:long epoch-seconds + value:double), without
         touching tier storage — the building block ``run()`` persists.
 
-        One shuffle: the pinned repartition, then ``groupBy(ids)`` collects
-        each series into one array sorted by (ts, value), as the raw tier
-        stores it, and the window map buckets, grids, fills and day-chunks
-        it.  Each ``base_step`` bucket keeps its last point in that order, so
-        a tied last timestamp resolves the same way whatever order the
-        shuffle delivers.  The grid spans the first..last observed bucket,
+        One shuffle: the points are range-partitioned on ``doc_id`` into
+        one partition per core (:meth:`_spread`), ``groupBy(ids)`` reuses
+        that exchange to collect each series into one array sorted by
+        (ts, value), as the raw tier stores it, and the window map buckets,
+        grids, fills and day-chunks it, once, on every core.  Each
+        ``base_step`` bucket keeps its last point in that order, so a tied
+        last timestamp resolves the same way whatever order the shuffle
+        delivers.  The grid spans the first..last observed bucket,
         so linear fill is interior-only and ffill is a forward index scan;
         both equal the public ``gapfill`` operators over a ``sequence()``
         grid byte for byte (tests/test_rollup.py).
         """
-        from tsfresh_spark.plans.partitioning import pin_group_partitions
-
-        # pin the grouping shuffle: AQE byte-coalescing would run this
-        # compute-bound stage on 1-2 cores for small-byte inputs
-        series = self._chunk_points(pin_group_partitions(points, *self.id_cols), *self.id_cols)
+        series = self._chunk_points(self._spread(points), *self.id_cols)
         return self._map_windows(series, DAY, fill_step=self.base_step_seconds)
 
     def compute_tier(
@@ -230,19 +251,30 @@ class RollupEngine:
 
         Day-aligned windows (``DAY % window_seconds == 0``) live inside one
         stored day chunk, so the window map decodes each payload and splits
-        it at window boundaries: zero shuffle.  Wider windows decode the
-        points and regroup them per window (one shuffle) before the same
-        window map.  ``with_payload=False`` skips re-encoding the per-window
-        Gorilla payloads (the column comes back NULL): a consumer that only
-        reads ``features``/``n_points`` — e.g. a report query — should not
-        pay the bit-packing cost for bytes it immediately discards.
+        it at window boundaries.  The base rows are first dealt round-robin
+        into one partition per core (a base tier stored as one file scans
+        as one split): that exchange moves only the compressed payloads and
+        samples nothing, so the map runs once even over a base frame that
+        is not stored.  Wider windows decode the points, hash them on
+        (ids, window) into one partition per core and regroup them per
+        window before the same window map.  Either way one exchange, with
+        an explicit count, feeds the map.
+
+        ``with_payload=False`` skips re-encoding the per-window Gorilla
+        payloads (the column comes back NULL): a consumer that only reads
+        ``features``/``n_points`` — e.g. a report query — should not pay
+        the bit-packing cost for bytes it immediately discards.
         Features and every other column are identical either way
         (tests/test_rollup.py)."""
+        n = self._spread_count()
         if DAY % window_seconds == 0:
-            frame = base
+            frame = base.repartition(n)
         else:
-            points = self.decode_points(base)
-            frame = self._chunk_points(points, *self.id_cols, _window_start(window_seconds))
+            points = self.decode_points(base).withColumn(
+                "window_start", _window_start(window_seconds)
+            )
+            keys = [*self.id_cols, "window_start"]
+            frame = self._chunk_points(points.repartition(n, *keys), *keys)
         return self._map_windows(
             frame, window_seconds, settings=self.settings, with_payload=with_payload
         )

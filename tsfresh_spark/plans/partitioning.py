@@ -42,7 +42,7 @@ def pin_group_partitions(df: DataFrame, *keys: str) -> DataFrame:
     per-group computation runs on 1-2 cores.  An explicit user repartition
     is honored by AQE, and the downstream ``groupBy(keys)`` (an
     ``applyInPandas``, or the ``collect_list`` feeding ``mapInArrow`` in the
-    long path and the rollup base) reuses the exchange, so no extra shuffle.
+    long path) reuses the exchange, so no extra shuffle.
     The count is max(shuffle partitions, 2×parallelism)."""
     sess = df.sparkSession
     num_partitions = max(

@@ -58,9 +58,10 @@ def write_tier(
     mode: str = "append",
 ) -> None:
     """Range-distributed tier write.  Iceberg: ``write.distribution-mode=
-    range`` + sorted files; parquet fallback mirrors it with
-    repartitionByRange + sortWithinPartitions (what RollupEngine._write
-    does)."""
+    range`` + sorted files.  A parquet path is written as ``df`` is laid
+    out; ``RollupEngine._write`` lays a tier out by hash on ``doc_id`` with
+    AQE-sized files, sorted within them, because a range exchange would
+    sample — and so run twice — the window map that produces the tier."""
     if "/" in table:
         df.write.mode(mode).parquet(table)
         return

@@ -104,7 +104,15 @@ def stateful_feature_stream(
 
     State = the series' most recent ``max_buffer`` (ts, value) pairs; each
     trigger appends the new points and emits one refreshed feature row per
-    touched series.  Update-mode sink.
+    touched series.  Update-mode sink.  A series idle for ``timeout_ms``
+    drops its buffer.
+
+    The processing-time timeout makes Spark plan an empty micro-batch after
+    every batch to look for idle series, so a query started with
+    ``trigger(availableNow=True)`` never ends.  Start such a query with
+    ``spark.sql.streaming.noDataMicroBatches.enabled`` set to ``false``
+    (the query reads it when it starts): it then ends once its input is
+    drained, and idle series are evicted only in batches that carry data.
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
