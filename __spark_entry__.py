@@ -8,7 +8,8 @@ Exactness design: the series values are ``CAST(ROUND(value*100) AS BIGINT)``
 — integers — so every sum/count-derived feature is exactly representable in
 float64 and therefore bit-identical across engines regardless of summation
 order.  Where a result is genuinely float-path-dependent (quantile
-interpolation, cosine similarity), both sides round to 6 decimals.
+interpolation, spectral sums, selection p-values), both sides round to 6
+decimals.
 Kernel-path NaN surfaces as NULL (Arrow boundary); oracles CASE-NULL the
 same conditions.
 """
@@ -428,90 +429,6 @@ FROM base GROUP BY user_id, DATE_TRUNC('hour', ts)
 
 
 # ---------------------------------------------------------------------------
-# q07: exact deduplication over documents (hash-groupBy)
-# ---------------------------------------------------------------------------
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.dedup import exact_duplicates
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return exact_duplicates(docs, text_col="text", id_col="doc_id")
-
-
-_ORACLE_DEDUP_EXACT = """
-SELECT doc_id,
-       MD5(text) AS text_hash,
-       CAST(COUNT(*) OVER (PARTITION BY MD5(text)) AS BIGINT) AS dup_count,
-       CAST(doc_id <> MIN(doc_id) OVER (PARTITION BY MD5(text)) AS BIGINT) AS is_duplicate
-FROM documents
-"""
-
-
-# ---------------------------------------------------------------------------
-# q08: text statistics (token counting / quality signals)
-# ---------------------------------------------------------------------------
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.text import text_stats
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return text_stats(docs, text_col="text", id_col="doc_id")
-
-
-_ORACLE_TEXT_STATS = """
-WITH w AS (
-  SELECT doc_id, text,
-         LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), x -> x <> '') AS words
-  FROM documents
-)
-SELECT doc_id,
-  CAST(LENGTH(text) AS BIGINT) AS n_chars,
-  CAST(LEN(words) AS BIGINT) AS n_words,
-  CAST(LIST_AGGREGATE(LIST_TRANSFORM(words, w -> LENGTH(w)), 'sum') AS DOUBLE) / LEN(words) AS mean_word_len,
-  CAST(LEN(LIST_DISTINCT(words)) AS BIGINT) AS n_distinct_words,
-  LEN(LIST_DISTINCT(words)) / LEN(words) AS type_token_ratio,
-  CAST(LENGTH(text) - LENGTH(REPLACE(text, ' ', '')) AS BIGINT) AS n_spaces
-FROM w
-"""
-
-
-# ---------------------------------------------------------------------------
-# q09: brute-force cosine top-k over embeddings (similarity-search baseline)
-# ---------------------------------------------------------------------------
-
-
-def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.similarity import cosine_topk_bruteforce
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 8)
-    return cosine_topk_bruteforce(
-        emb, queries, id_col="vec_id", vec_col="embedding", k=3
-    )
-
-
-_ORACLE_EMBEDDING_TOPK = """
-WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-q AS (SELECT vec_id AS qid, emb AS qemb FROM e WHERE vec_id < 8),
-pairs AS (
-  SELECT q.qid, e.vec_id AS nid,
-         ROUND(LIST_DOT_PRODUCT(e.emb, q.qemb)
-               / (SQRT(LIST_DOT_PRODUCT(e.emb, e.emb)) * SQRT(LIST_DOT_PRODUCT(q.qemb, q.qemb))), 6) AS sim
-  FROM e, q WHERE e.vec_id <> q.qid
-)
-SELECT qid, nid, sim FROM (
-  SELECT qid, nid, sim, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, nid) AS rn
-  FROM pairs
-) WHERE rn <= 3
-"""
-
-
-# ---------------------------------------------------------------------------
 # q10: gap-fill — 1-minute grid regularize + forward-fill (window functions)
 # ---------------------------------------------------------------------------
 
@@ -767,133 +684,6 @@ UNION ALL SELECT user_id, event_type, window_start, CAST(n AS DOUBLE),
        event_type || '__maximum', CAST(mx AS DOUBLE) FROM daily
 UNION ALL SELECT user_id, event_type, window_start, CAST(n AS DOUBLE),
        event_type || '__mean', CAST(s AS DOUBLE) / n FROM daily
-"""
-
-
-# ---------------------------------------------------------------------------
-# q13-q15: language id, quality score, token count over documents
-# ---------------------------------------------------------------------------
-
-
-def q_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.text import language_id
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return language_id(docs, text_col="text", id_col="doc_id")
-
-
-_ORACLE_LANGUAGE_ID = """
-WITH w AS (
-  SELECT doc_id,
-         LIST_TRANSFORM(
-           LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), x -> x <> ''),
-           t -> LOWER(t)) AS words
-  FROM documents
-),
-scored AS (
-  SELECT doc_id,
-    CAST(LEN(LIST_FILTER(words, t -> t IN ('the','and','of','to','in','is','that','it','for','was'))) AS BIGINT) AS score_en,
-    CAST(LEN(LIST_FILTER(words, t -> t IN ('der','die','und','das','ist','nicht','ein','mit','auf','für'))) AS BIGINT) AS score_de,
-    CAST(LEN(LIST_FILTER(words, t -> t IN ('el','la','de','que','y','en','los','del','las','por'))) AS BIGINT) AS score_es,
-    CAST(LEN(LIST_FILTER(words, t -> t IN ('le','la','de','et','les','des','est','dans','que','pour'))) AS BIGINT) AS score_fr
-  FROM w
-)
-SELECT doc_id, score_en, score_de, score_es, score_fr,
-  CASE WHEN GREATEST(score_en, score_de, score_es, score_fr) = 0 THEN 'und'
-       WHEN score_en = GREATEST(score_en, score_de, score_es, score_fr) THEN 'en'
-       WHEN score_de = GREATEST(score_en, score_de, score_es, score_fr) THEN 'de'
-       WHEN score_es = GREATEST(score_en, score_de, score_es, score_fr) THEN 'es'
-       ELSE 'fr' END AS predicted_lang
-FROM scored
-"""
-
-
-def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.text import quality_score
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return quality_score(docs, text_col="text", id_col="doc_id")
-
-
-_ORACLE_QUALITY_SCORE = """
-WITH w AS (
-  SELECT doc_id, text,
-         LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), x -> x <> '') AS words
-  FROM documents
-),
-m AS (
-  SELECT doc_id, text, words,
-    CAST(LEN(words) AS BIGINT) AS n_words,
-    CAST(LIST_AGGREGATE(LIST_TRANSFORM(words, t -> LENGTH(t)), 'sum') AS DOUBLE) / LEN(words) AS mean_word_len,
-    CAST(LEN(LIST_FILTER(words, t -> LOWER(t) IN
-      ('the','and','of','to','in','is','that','it','for','was','a','an','on','with','as','at','by'))) AS DOUBLE)
-      / LEN(words) AS stopword_ratio,
-    CAST(LENGTH(REGEXP_REPLACE(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-      / GREATEST(LENGTH(text), 1) AS alpha_ratio,
-    CAST(LEN(LIST_DISTINCT(words)) AS DOUBLE) / LEN(words) AS distinct_word_ratio
-  FROM w
-)
-SELECT doc_id, n_words, mean_word_len, stopword_ratio, alpha_ratio,
-       distinct_word_ratio,
-       (CASE WHEN n_words BETWEEN 10 AND 100000 THEN 0.25 ELSE 0.0 END
-        + CASE WHEN mean_word_len BETWEEN 3 AND 10 THEN 0.25 ELSE 0.0 END
-        + CASE WHEN stopword_ratio >= 0.01 THEN 0.25 ELSE 0.0 END
-        + CASE WHEN distinct_word_ratio >= 0.3 THEN 0.25 ELSE 0.0 END) AS quality_score
-FROM m
-"""
-
-
-def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.text import token_count
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return token_count(docs, text_col="text", id_col="doc_id")
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.text import tfidf_top_terms
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return tfidf_top_terms(docs, text_col="text", id_col="doc_id", k=3)
-
-
-_ORACLE_TFIDF = """
-WITH w AS (
-  SELECT doc_id,
-         LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), x -> x <> '') AS words
-  FROM documents
-),
-pairs AS (SELECT doc_id, UNNEST(words) AS term FROM w),
-tf AS (SELECT doc_id, term, COUNT(*) AS tf FROM pairs GROUP BY doc_id, term),
-dfreq AS (SELECT term, COUNT(DISTINCT doc_id) AS df FROM pairs GROUP BY term),
-n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM documents),
-scored AS (
-  SELECT t.doc_id, t.term, t.tf, d.df,
-         ROUND(t.tf * (LN((n.n_docs + 1.0) / (d.df + 1.0)) + 1.0), 6) AS tfidf
-  FROM tf t JOIN dfreq d USING (term) CROSS JOIN n
-)
-SELECT doc_id, term, CAST(tf AS BIGINT) AS tf, CAST(df AS BIGINT) AS df, tfidf
-FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rn
-  FROM scored
-) WHERE rn <= 3
-"""
-
-
-_ORACLE_TOKEN_COUNT = """
-WITH w AS (
-  SELECT doc_id,
-         LIST_FILTER(REGEXP_SPLIT_TO_ARRAY(text, '\\s+'), x -> x <> '') AS words
-  FROM documents
-)
-SELECT doc_id,
-  CAST(LEN(words) AS BIGINT) AS n_whitespace_tokens,
-  CAST(LIST_AGGREGATE(LIST_TRANSFORM(words, t -> CAST(CEIL(LENGTH(t) / 4.0) AS BIGINT)), 'sum') AS BIGINT) AS n_bpe_ish_tokens
-FROM w
 """
 
 
@@ -4215,329 +4005,6 @@ CROSS JOIN types ty WHERE ty.type = 'constant'
 
 
 # ---------------------------------------------------------------------------
-# q27: embedding-cosine near-dup — the semantic dedup flavor.  The
-# hyperplane family is a deterministic hash mix whose exact float64 values
-# embed as literals on BOTH sides, so the full pipeline (multi-table
-# sign-LSH buckets, hot-bucket cap, candidate join, the round-5
-# signature-hamming pre-filter, cosine verify) replays in DuckDB.  The
-# hamming cutoff is an integer computed ONCE in Python
-# (signature_hamming_cutoff) and embedded as a literal in both engines.
-# ---------------------------------------------------------------------------
-
-_EMB_DIM = 64
-_EMB_PLANES = 3
-_EMB_TABLES = 8
-_EMB_CAP = 64
-_EMB_THRESHOLD = 0.35
-_EMB_SIG_BITS = 126  # 2 × 63-bit words — bit 63 never set on either engine
-
-
-def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.dedup import embedding_near_duplicates
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = embedding_near_duplicates(
-        emb,
-        id_col="vec_id",
-        vec_col="embedding",
-        dim=_EMB_DIM,
-        threshold=_EMB_THRESHOLD,
-        num_planes=_EMB_PLANES,
-        num_tables=_EMB_TABLES,
-        max_bucket_size=_EMB_CAP,
-        signature_bits=_EMB_SIG_BITS,
-    )
-    return out.select(
-        F.col("id_a").cast("long"),
-        F.col("id_b").cast("long"),
-        F.col("cosine").cast("double"),
-    )
-
-
-def _embedding_neardup_oracle_sql() -> str:
-    from tsfresh_spark.operators.dedup import (
-        _SIG_BITS_PER_WORD,
-        _SIG_PLANE_BASE,
-        signature_hamming_cutoff,
-    )
-    from tsfresh_spark.operators.similarity import _hyperplane
-
-    tables = []
-    for t in range(_EMB_TABLES):
-        bits = " + ".join(
-            f"(CASE WHEN LIST_DOT_PRODUCT(emb, "
-            f"{_hyperplane(_EMB_DIM, t * _EMB_PLANES + p)!r}::DOUBLE[]) > 0 "
-            f"THEN {1 << p} ELSE 0 END)"
-            for p in range(_EMB_PLANES)
-        )
-        tables.append(f"SELECT id, {t} AS tbl, {bits} AS bkt FROM e")
-    keys_sql = "\nUNION ALL ".join(tables)
-    # signature words: same 63-bit packing as _signature_words, dedicated
-    # plane family at _SIG_PLANE_BASE
-    word_exprs = []
-    for wi, w in enumerate(range(0, _EMB_SIG_BITS, _SIG_BITS_PER_WORD)):
-        bits = " + ".join(
-            f"(CASE WHEN LIST_DOT_PRODUCT(emb, "
-            f"{_hyperplane(_EMB_DIM, _SIG_PLANE_BASE + p)!r}::DOUBLE[]) > 0 "
-            f"THEN {1 << (p - w)} ELSE 0 END)"
-            for p in range(w, min(w + _SIG_BITS_PER_WORD, _EMB_SIG_BITS))
-        )
-        word_exprs.append(f"({bits})::BIGINT AS s{wi}")
-    n_words = len(word_exprs)
-    hamming = " + ".join(
-        f"bit_count(xor(sa.s{i}, sb.s{i}))" for i in range(n_words)
-    )
-    h_max = signature_hamming_cutoff(_EMB_THRESHOLD, _EMB_SIG_BITS, 5.0)
-    return f"""
-WITH e AS (SELECT vec_id AS id, embedding::DOUBLE[] AS emb FROM embeddings),
-sigs AS (SELECT id, {', '.join(word_exprs)} FROM e),
-keys AS (
-{keys_sql}
-),
-capped AS (
-  SELECT id, tbl, bkt FROM (
-    SELECT id, tbl, bkt,
-           ROW_NUMBER() OVER (PARTITION BY tbl, bkt ORDER BY id) AS rn
-    FROM keys
-  ) WHERE rn <= {_EMB_CAP}
-),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-  FROM capped a JOIN capped b ON a.tbl = b.tbl AND a.bkt = b.bkt AND a.id < b.id
-),
-surv AS (
-  SELECT c.id_a, c.id_b
-  FROM cand c JOIN sigs sa ON sa.id = c.id_a JOIN sigs sb ON sb.id = c.id_b
-  WHERE {hamming} <= {h_max}
-),
-pairs AS (
-  SELECT c.id_a, c.id_b,
-         ROUND(LIST_DOT_PRODUCT(ea.emb, eb.emb)
-               / (SQRT(LIST_DOT_PRODUCT(ea.emb, ea.emb))
-                  * SQRT(LIST_DOT_PRODUCT(eb.emb, eb.emb))), 6) AS cosine
-  FROM surv c JOIN e ea ON ea.id = c.id_a JOIN e eb ON eb.id = c.id_b
-)
-SELECT id_a, id_b, cosine FROM pairs WHERE cosine >= {_EMB_THRESHOLD}
-"""
-
-
-# ---------------------------------------------------------------------------
-# q24-q25: near-duplicate pipelines.  The "portable" hash family replicates
-# verbatim in DuckDB SQL, so both pipelines are compared bit-for-bit
-# including the LSH banding and hot-bucket caps.
-# ---------------------------------------------------------------------------
-
-_MINHASH_CAP = 64  # hot-bucket guard for the minhash band join
-_SIMHASH_CAP = 256  # hot-chunk guard for the simhash join
-_MINHASH_THRESHOLD = 0.5
-_SIMHASH_MAX_HAMMING = 10
-
-
-def q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.dedup import minhash_near_duplicates
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = minhash_near_duplicates(
-        docs,
-        text_col="text",
-        id_col="doc_id",
-        shingle_n=3,
-        threshold=_MINHASH_THRESHOLD,
-        max_bucket_size=_MINHASH_CAP,
-        hash_family="portable",
-    )
-    return out.select(
-        F.col("id_a").cast("long"),
-        F.col("id_b").cast("long"),
-        F.col("jaccard").cast("double"),
-    )
-
-
-def q_simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _prep(spark)
-    from tsfresh_spark.operators.dedup import simhash_near_duplicates
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = simhash_near_duplicates(
-        docs,
-        text_col="text",
-        id_col="doc_id",
-        max_hamming=_SIMHASH_MAX_HAMMING,
-        max_bucket_size=_SIMHASH_CAP,
-        hash_family="portable",
-    )
-    return out.select(
-        F.col("id_a").cast("long"),
-        F.col("id_b").cast("long"),
-        F.col("hamming").cast("long"),
-    )
-
-
-def _minhash_oracle_sql() -> str:
-    """DuckDB replica of the portable minhash-LSH pipeline (same constants,
-    same banding, same cap, same exact-Jaccard verify)."""
-    import sys
-
-    if "/root/repo" not in sys.path:
-        sys.path.insert(0, "/root/repo")
-    from tsfresh_spark.operators.dedup import minhash_coefficients
-
-    A, B = minhash_coefficients(64)
-    a_sql = "[" + ",".join(str(v) for v in A) + "]"
-    b_sql = "[" + ",".join(str(v) for v in B) + "]"
-    bucket = "concat_ws(',', sg[4*i-3], sg[4*i-2], sg[4*i-1], sg[4*i])"
-    return f"""
-WITH consts AS (SELECT {a_sql} AS ca, {b_sql} AS cb),
-w AS (
-  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    list_distinct([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingles
-  FROM w
-),
-bs AS (
-  SELECT doc_id, shingles,
-    [CAST(concat('0x', substr(md5(s), 1, 15)) AS BIGINT) % 2147483647 for s in shingles] AS bases
-  FROM sh WHERE len(shingles) > 0
-),
-sig AS (
-  SELECT doc_id,
-    [list_min([(ca[i] * b + cb[i]) % 2147483647 for b in bases]) for i in range(1, 65)] AS sg
-  FROM bs, consts
-),
-bands AS (
-  SELECT doc_id, i - 1 AS band, {bucket} AS bucket
-  FROM sig, (SELECT unnest(range(1, 17)) AS i)
-),
-keep AS (
-  SELECT band, bucket FROM bands GROUP BY band, bucket
-  HAVING count(*) BETWEEN 2 AND {_MINHASH_CAP}
-),
-kept AS (SELECT b.* FROM bands b JOIN keep USING (band, bucket)),
-cand AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b
-  FROM kept l JOIN kept r
-    ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id
-)
-SELECT c.id_a, c.id_b,
-  CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-    / (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles))) AS jaccard
-FROM cand c
-JOIN sh a ON c.id_a = a.doc_id
-JOIN sh b ON c.id_b = b.doc_id
-WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-    / (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)))
-    >= {_MINHASH_THRESHOLD}
-"""
-
-
-_ORACLE_SIMHASH = f"""
-WITH w AS (
-  SELECT doc_id,
-    list_distinct(list_filter(string_split_regex(text, '\\s+'), x -> x <> '')) AS ws
-  FROM documents
-),
-b AS (
-  SELECT doc_id,
-    [CAST(concat('0x', substr(md5(x), 1, 15)) AS BIGINT) for x in ws] AS hs
-  FROM w WHERE len(ws) > 0
-),
-fp AS (
-  SELECT doc_id, CAST(list_sum([
-      CASE WHEN list_sum([CASE WHEN ((h >> j) & 1) = 1 THEN 1 ELSE -1 END for h in hs]) > 0
-           THEN (CAST(1 AS BIGINT) << j) ELSE CAST(0 AS BIGINT) END
-    for j in range(0, 60)]) AS BIGINT) AS simhash
-  FROM b
-),
-chunks AS (
-  SELECT doc_id, simhash, i AS chunk_idx, (simhash >> (15*i)) & 32767 AS chunk
-  FROM fp, (SELECT unnest(range(0, 4)) AS i)
-),
-keep AS (
-  SELECT chunk_idx, chunk FROM chunks GROUP BY chunk_idx, chunk
-  HAVING count(*) BETWEEN 2 AND {_SIMHASH_CAP}
-),
-kept AS (SELECT c.* FROM chunks c JOIN keep USING (chunk_idx, chunk)),
-pairs AS (
-  SELECT DISTINCT l.doc_id AS id_a, r.doc_id AS id_b,
-         CAST(bit_count(xor(l.simhash, r.simhash)) AS BIGINT) AS hamming
-  FROM kept l JOIN kept r
-    ON l.chunk_idx = r.chunk_idx AND l.chunk = r.chunk AND l.doc_id < r.doc_id
-)
-SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= {_SIMHASH_MAX_HAMMING}
-"""
-
-
-_NGRAM_MAX_DF = 64  # inverted-index hot-shingle guard
-
-
-def q_ngram_jaccard_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone EXACT n-gram Jaccard dedup (inverted index + df pruning) —
-    the non-hashed flavor, distinct from the minhash approximation."""
-    _prep(spark)
-    from tsfresh_spark.operators.dedup import ngram_jaccard_duplicates
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = ngram_jaccard_duplicates(
-        docs,
-        text_col="text",
-        id_col="doc_id",
-        shingle_n=3,
-        threshold=_MINHASH_THRESHOLD,
-        max_df=_NGRAM_MAX_DF,
-    )
-    return out.select(
-        F.col("id_a").cast("long"),
-        F.col("id_b").cast("long"),
-        F.col("jaccard").cast("double"),
-    )
-
-
-# DuckDB replica of the full inverted-index pipeline: same shingling, same
-# df-pruning window, same length-ratio prune, same integer-arithmetic
-# Jaccard — bit-exact (division of two exact ints is one IEEE op).
-_ORACLE_NGRAM_JACCARD = f"""
-WITH w AS (
-  SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x <> '') AS ws
-  FROM documents
-),
-sh AS (
-  SELECT doc_id,
-    list_distinct([array_to_string(ws[i:i+2], ' ') for i in range(1, len(ws)-1)]) AS shingles
-  FROM w
-),
-sh2 AS (
-  SELECT doc_id, shingles, len(shingles) AS sz FROM sh WHERE len(shingles) > 0
-),
-inv AS (SELECT doc_id, sz, unnest(shingles) AS shingle FROM sh2),
-keepsh AS (
-  SELECT shingle FROM inv GROUP BY shingle
-  HAVING count(*) BETWEEN 2 AND {_NGRAM_MAX_DF}
-),
-kept AS (SELECT i.* FROM inv i JOIN keepsh USING (shingle)),
-cand AS (
-  SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM kept a JOIN kept b
-    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-   AND least(a.sz, b.sz) >= {_MINHASH_THRESHOLD} * greatest(a.sz, b.sz)
-)
-SELECT c.id_a, c.id_b,
-  CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-    / (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles))) AS jaccard
-FROM cand c
-JOIN sh2 a ON c.id_a = a.doc_id
-JOIN sh2 b ON c.id_b = b.doc_id
-WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-    / (len(a.shingles) + len(b.shingles) - len(list_intersect(a.shingles, b.shingles)))
-    >= {_MINHASH_THRESHOLD}
-"""
-
-
-# ---------------------------------------------------------------------------
 # contract functions
 # ---------------------------------------------------------------------------
 
@@ -4669,17 +4136,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "longest_strike": q_longest_strike,
         "quantiles": q_quantiles,
         "window_rollup_1h": q_window_rollup,
-        "dedup_exact": q_dedup_exact,
-        "text_stats": q_text_stats,
-        "embedding_cosine_topk": q_embedding_topk,
         "gapfill_ffill_1m": q_gapfill_ffill,
         "gapfill_linear_1h": q_gapfill_linear,
         "rolling_windows": q_rolling_windows,
         "rollup_tier_1h": q_rollup_1h,
-        "language_id": q_language_id,
-        "quality_score": q_quality_score,
-        "token_count": q_token_count,
-        "tfidf_top_terms": q_tfidf_top_terms,
         "number_peaks": q_number_peaks,
         "reoccurring_stats": q_reoccurring,
         "c3_time_reversal": q_lag_products,
@@ -4702,12 +4162,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "matrix_profile_grid": q_matrix_profile,
         "asof_join": q_asof_join,
         "distribution_checks": q_distribution_checks,
-        "minhash_near_dups": q_minhash_near_dups,
-        "simhash_near_dups": q_simhash_near_dups,
-        "ngram_jaccard_dups": q_ngram_jaccard_dups,
         "timewise_trend_hourly": q_timewise_trend,
         "fresh_relevance": q_fresh_relevance,
-        "embedding_near_dups": q_embedding_near_dups,
         "stream_windowed_features": q_stream_windowed,
     }
 
@@ -4721,17 +4177,10 @@ def oracle_sql() -> dict[str, str]:
         "longest_strike": _ORACLE_LONGEST_STRIKE,
         "quantiles": _ORACLE_QUANTILES,
         "window_rollup_1h": _ORACLE_WINDOW_ROLLUP,
-        "dedup_exact": _ORACLE_DEDUP_EXACT,
-        "text_stats": _ORACLE_TEXT_STATS,
-        "embedding_cosine_topk": _ORACLE_EMBEDDING_TOPK,
         "gapfill_ffill_1m": _ORACLE_GAPFILL_FFILL,
         "gapfill_linear_1h": _ORACLE_GAPFILL_LINEAR,
         "rolling_windows": _ORACLE_ROLLING_WINDOWS,
         "rollup_tier_1h": _ORACLE_ROLLUP_1H,
-        "language_id": _ORACLE_LANGUAGE_ID,
-        "quality_score": _ORACLE_QUALITY_SCORE,
-        "token_count": _ORACLE_TOKEN_COUNT,
-        "tfidf_top_terms": _ORACLE_TFIDF,
         "number_peaks": _ORACLE_NUMBER_PEAKS,
         "reoccurring_stats": _ORACLE_REOCCURRING,
         "c3_time_reversal": _ORACLE_LAG_PRODUCTS,
@@ -4754,11 +4203,7 @@ def oracle_sql() -> dict[str, str]:
         "matrix_profile_grid": _ORACLE_MATRIX_PROFILE,
         "asof_join": _ORACLE_ASOF_JOIN,
         "distribution_checks": _ORACLE_DISTRIBUTION_CHECKS,
-        "minhash_near_dups": _minhash_oracle_sql(),
-        "simhash_near_dups": _ORACLE_SIMHASH,
-        "ngram_jaccard_dups": _ORACLE_NGRAM_JACCARD,
         "timewise_trend_hourly": _ORACLE_TIMEWISE_TREND,
         "fresh_relevance": _ORACLE_FRESH_RELEVANCE,
-        "embedding_near_dups": _embedding_neardup_oracle_sql(),
         "stream_windowed_features": _ORACLE_STREAM_WINDOWED,
     }

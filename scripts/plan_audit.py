@@ -84,7 +84,6 @@ def run_audit(
 
     import __spark_entry__ as em
 
-    qs = em.queries()
     sections = []
     failures = []
 
@@ -152,62 +151,21 @@ def run_audit(
         "compute-bound kernel stage onto 2 cores.",
     )
 
-    # 3. brute-force cosine top-k: broadcast the small query side
+    # 3. scan hygiene: filter + projection pushed into the parquet scan of
+    # the events table, the input of the long path and the rollup tiers
+    ev_scan = spark.read.parquet(f"{sf_dir}/events.parquet")
+    pruned = ev_scan.filter(F.col("user_id") < 100).select("user_id", "value")
     audit(
-        "embedding_cosine_topk",
-        qs["embedding_cosine_topk"](spark, sf_dir),
-        [
-            ("query side broadcast", lambda p: "BroadcastExchange" in p or "BroadcastNestedLoopJoin" in p),
-        ],
-        "Small query set × big corpus: the query side must broadcast, never "
-        "shuffle the corpus.",
-    )
-
-    # 4. semantic near-dup: equi-join on (table, bucket), never all-pairs
-    audit(
-        "embedding_near_dups",
-        qs["embedding_near_dups"](spark, sf_dir),
-        [
-            ("no CartesianProduct", lambda p: "CartesianProduct" not in p),
-            ("no BroadcastNestedLoopJoin", lambda p: "BroadcastNestedLoopJoin" not in p),
-        ],
-        "Candidates come from a bucket-key self-join (bounded by the "
-        "hot-bucket cap); exact cosine runs on candidates only.",
-    )
-
-    # 4b. exact n-gram Jaccard: inverted-index equi-join on the shingle
-    # key — the same never-all-pairs contract as the hashed flavors
-    audit(
-        "ngram_jaccard_dups",
-        qs["ngram_jaccard_dups"](spark, sf_dir),
-        [
-            ("no CartesianProduct", lambda p: "CartesianProduct" not in p),
-            ("no BroadcastNestedLoopJoin", lambda p: "BroadcastNestedLoopJoin" not in p),
-            (
-                "df-pruning via partial-aggregated HashAggregate (map-side combine), not a window over occurrences",
-                lambda p: "HashAggregate" in p,
-            ),
-        ],
-        "Candidates come from an equi-join on the shingle key with the "
-        "document-frequency guard (2 ≤ df ≤ max_df) pruning stopword-like "
-        "shingles via groupBy+join (map-side combine; the surviving-shingle "
-        "side is AQE-broadcastable); exact Jaccard runs on candidates only.",
-    )
-
-    # 5. scan hygiene: filter + projection pushed into the parquet scan
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    pruned = docs.filter(F.col("doc_id") < 100).select("doc_id", "text")
-    audit(
-        "documents scan (filter + projection)",
+        "events scan (filter + projection)",
         pruned,
         [
-            ("filter pushed to scan", lambda p: "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,100)]" in p),
-            ("schema pruned to 2 columns", lambda p: bool(re.search(r"ReadSchema: struct<doc_id:\w+,text:string>", p))),
+            ("filter pushed to scan", lambda p: "PushedFilters: [IsNotNull(user_id), LessThan(user_id,100)]" in p),
+            ("schema pruned to 2 columns", lambda p: "ReadSchema: struct<user_id:bigint,value:double>" in p),
         ],
-        "Catalyst pushdown sanity on the raw tables.",
+        "Catalyst pushdown sanity on the raw table.",
     )
 
-    # 6. rollup cascade tier: one explicit-count exchange feeds each window map
+    # 4. rollup cascade tier: one explicit-count exchange feeds each window map
     from tsfresh_spark.operators.rollup import RollupEngine
 
     eng = RollupEngine(

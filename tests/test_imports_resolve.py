@@ -1,0 +1,73 @@
+"""Every ``tsfresh_spark`` import in the repository resolves.
+
+Most package imports sit inside functions, so a dangling import of a
+removed module or name only fails when that function runs.  This test
+walks the syntax tree of the package, the scripts, the driver entry, the
+tests and the benchmark, and resolves each ``import tsfresh_spark…`` and
+``from tsfresh_spark… import name`` wherever it appears.  No Spark session
+is started.
+"""
+
+import ast
+import glob
+import importlib
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PACKAGE = "tsfresh_spark"
+
+
+def _sources() -> list[str]:
+    patterns = (
+        "__spark_entry__.py",
+        f"{PACKAGE}/**/*.py",
+        "scripts/*.py",
+        "tests/*.py",
+        "perfbench/*.py",
+    )
+    return sorted(
+        path
+        for pattern in patterns
+        for path in glob.glob(os.path.join(ROOT, pattern), recursive=True)
+    )
+
+
+def _package_imports(path: str):
+    """(line, module, name or None) of every absolute package import."""
+    with open(path) as f:
+        tree = ast.parse(f.read(), filename=path)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == PACKAGE:
+                    yield node.lineno, alias.name, None
+        elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
+            if node.module.split(".")[0] == PACKAGE:
+                for alias in node.names:
+                    yield node.lineno, node.module, alias.name
+
+
+def _unresolved(module: str, name: str | None) -> str | None:
+    try:
+        mod = importlib.import_module(module)
+    except ImportError as exc:
+        return f"module {module}: {exc}"
+    if name is None or name == "*" or hasattr(mod, name):
+        return None
+    try:
+        importlib.import_module(f"{module}.{name}")
+    except ImportError:
+        return f"{module} has no {name}"
+    return None
+
+
+def test_every_package_import_resolves():
+    checked, failures = 0, []
+    for path in _sources():
+        for line, module, name in _package_imports(path):
+            checked += 1
+            err = _unresolved(module, name)
+            if err:
+                failures.append(f"{os.path.relpath(path, ROOT)}:{line}: {err}")
+    assert checked > 100, f"only {checked} imports found; is the walk broken?"
+    assert failures == [], "\n".join(failures)

@@ -1,4 +1,4 @@
-"""Physical-plan contracts: pushdown, broadcast, and shuffle discipline —
+"""Physical-plan contracts: pushdown and shuffle discipline —
 the properties that make the operators survive a 100x scale-up."""
 
 import pytest
@@ -34,18 +34,6 @@ def test_extraction_prunes_unused_columns(spark, sf_dir):
     out = extract_features_tokens(toks, minimal_settings())
     plan = _plan(out)
     assert "props" not in plan  # the json blob column never leaves the scan
-
-
-def test_similarity_broadcasts_queries(spark):
-    from tsfresh_spark.operators.similarity import cosine_topk_bruteforce
-
-    df = spark.range(100).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[F.rand(i) for i in range(8)]).alias("embedding"),
-    )
-    out = cosine_topk_bruteforce(df, df.limit(4), k=2)
-    plan = _plan(out)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
 def test_grouped_extraction_single_shuffle(spark, sf_dir):
@@ -318,23 +306,3 @@ def test_grouped_extraction_pins_partition_count(spark):
     )
     # the pinned partition count survives planning
     assert f", {want}), REPARTITION_BY_NUM" in plan, plan[:600]
-
-
-def test_embedding_neardup_plan_is_bucket_join(spark):
-    """The semantic-dedup candidate join must be a hash/broadcast join on
-    the (table, bucket) key — never a cartesian product — so candidate
-    fan-out stays bounded at any corpus size."""
-    from tsfresh_spark.operators.dedup import embedding_near_duplicates
-
-    df = spark.range(200).select(
-        F.col("id").alias("vec_id"),
-        F.array(*[F.rand(i) for i in range(8)]).alias("embedding"),
-    )
-    out = embedding_near_duplicates(
-        df, dim=8, threshold=0.5, num_planes=2, num_tables=4,
-        max_bucket_size=32,
-    )
-    plan = _plan(out)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "Join" in plan  # an equi-join on the exploded key

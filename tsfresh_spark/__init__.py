@@ -7,18 +7,16 @@ blue-yonder/tsfresh, re-expressed Spark-first:
   by one Arrow-native batch executor (``mapInArrow`` over pre-grouped token
   arrays — shuffle-free — or over long frames collected per series into
   sorted arrays by one ``groupBy`` shuffle),
-* rollup / downsample / retention tiers (raw → 1m → 1h → 1d) as continuous
-  aggregates over ``F.window``,
-* explicit gap-fill (forward-fill / linear interpolation) via window
-  functions,
-* Gorilla XOR + delta-of-delta payload compression,
+* the rollup / downsample / retention cascade (raw → base → 1h → 1d), where
+  every tier is one ``mapInArrow`` window map over per-series arrays or
+  stored payloads; gap-fill (forward-fill / linear interpolation) and the
+  Gorilla XOR + delta-of-delta codec run in numpy inside that map,
 * per-partition manifest / checkpoint lineage for resumable jobs,
-* the FRESH feature-selection plane,
-* plus large-scale training-data operators (dedup, similarity search,
-  text quality) the reference does not have.
+* the FRESH feature-selection plane.
 
-Everything SQL-expressible stays JVM-side (Catalyst / whole-stage codegen);
-only the calculator kernels cross the Arrow boundary, batched.
+Grouping, shuffles and scans stay JVM-side (Catalyst / whole-stage
+codegen); the per-series work — kernels, and in the rollup also gap-fill
+and the codec — crosses the Arrow boundary once per batch.
 """
 
 from tsfresh_spark.settings import (  # noqa: F401

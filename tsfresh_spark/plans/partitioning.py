@@ -1,14 +1,16 @@
 """Explicit partitioning / skew handling.
 
-The corpus's ``source`` key is zipf-skewed by construction (FIXTURES.md F1:
-web ≈ 50%).  AQE's skew handling only splits skewed *join* partitions; a
+A coarse grouping key (a series kind, a source) is often zipf-skewed.
+AQE's skew handling only splits skewed *join* partitions; a
 skewed grouping ahead of a Python stage still lands one giant task unless
 the group key itself is fine-grained or salted.  Helpers here:
 
-* :func:`salt_column` / :func:`unsalt` — deterministic salt from a hash of a
-  fine-grained column, bounded fan-out;
+* :func:`salt_column` — deterministic salt from a hash of a fine-grained
+  column, bounded fan-out;
 * :func:`spread_by_keys` — repartition so grouped-UDF tasks are balanced
   when the group key is composite and already fine-grained;
+* :func:`pin_group_partitions` — an explicit partition count ahead of a
+  compute-bound per-group stage, which AQE's byte sizing would starve;
 * :func:`skew_report` — measure per-key weight so the engine can pick a
   salting factor from data, not guesswork.
 """
@@ -50,20 +52,6 @@ def pin_group_partitions(df: DataFrame, *keys: str) -> DataFrame:
         sess.sparkContext.defaultParallelism * 2,
     )
     return df.repartition(num_partitions, *keys)
-
-
-def ensure_min_parallelism(df: DataFrame, factor: int = 2) -> DataFrame:
-    """Round-robin repartition ONLY when the input is under-partitioned
-    (fewer partitions than cores): a small parquet file scans as a single
-    partition and would run a compute-heavy narrow stage (signature
-    hashing, fingerprint folds) on one core.  On a real corpus the scan
-    already has ≫ cores partitions and this is a no-op — no shuffle is
-    added at scale."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism * factor
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        return df.repartition(target)
-    return df
 
 
 def skew_report(df: DataFrame, key: str, top: int = 10) -> list[tuple]:

@@ -63,103 +63,6 @@ def tokens_corpus(
     )
 
 
-def text_corpus(
-    spark: SparkSession,
-    n_docs: int,
-    *,
-    min_words: int = 20,
-    max_words: int = 80,
-    vocab_words: int = 20_000,
-    dup_pct: int = 5,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """(doc_id, text) with hash-derived deterministic word sequences and an
-    injected near-duplicate population — the scale-stress input for the
-    near-dup pipelines.
-
-    ``dup_pct`` percent of docs copy a nearby donor doc's word stream but
-    swap the first word for a unique marker, so their word-3-gram Jaccard
-    is high (≈1 − 3/n) without being exact duplicates.  Pure column
-    expressions executor-side; any slice is reproducible at any scale.
-    """
-    rng = spark.range(
-        0, n_docs, 1, n_partitions or spark.sparkContext.defaultParallelism
-    )
-    doc_id = F.format_string("doc%010d", F.col("id"))
-    h = F.abs(F.xxhash64(doc_id))
-    is_dup = (F.abs(F.xxhash64(doc_id, F.lit(2))) % 100 < dup_pct) & (
-        F.col("id") > 8
-    )
-    donor = F.when(
-        is_dup, F.col("id") - 1 - F.abs(F.xxhash64(doc_id, F.lit(3))) % 8
-    ).otherwise(F.col("id"))
-    dh = F.abs(F.xxhash64(F.format_string("doc%010d", donor)))
-    n_words = (dh % (max_words - min_words + 1) + min_words).cast("int")
-    seed = dh % F.lit(2**31)
-    # hash (seed, j), NOT an LCG: with word = (seed + j·B) mod V two
-    # unrelated docs are shifted copies of one arithmetic progression and
-    # share whole shingle runs whenever their seeds differ by a multiple of
-    # gcd(B, V) — measured: that accidental structure made ~0.8% of ALL
-    # pairs near-dups, which is quadratic at scale
-    word_at = lambda j: F.format_string(
-        "w%05d",
-        (F.abs(F.xxhash64(seed, j.cast("long"))) % vocab_words).cast("int"),
-    )
-    words = F.transform(F.sequence(F.lit(0), n_words - 1), word_at)
-    # dup docs swap word 0 for a doc-unique marker — near-dup, not exact
-    words = F.when(
-        is_dup,
-        F.concat(
-            F.array(F.format_string("u%010d", F.col("id"))),
-            F.slice(words, 2, 100_000),
-        ),
-    ).otherwise(words)
-    return rng.select(
-        doc_id.alias("doc_id"), F.concat_ws(" ", words).alias("text")
-    )
-
-
-def embeddings_corpus(
-    spark: SparkSession,
-    n_vecs: int,
-    *,
-    dim: int = 32,
-    dup_pct: int = 5,
-    n_partitions: int | None = None,
-) -> DataFrame:
-    """(vec_id, embedding float[dim]) deterministic near-unit-normal vectors
-    with ``dup_pct`` percent injected near-duplicates (donor vector + small
-    hash-derived perturbation → cosine ≈ 0.995) — scale-stress input for
-    :func:`tsfresh_spark.operators.dedup.embedding_near_duplicates`.
-
-    Normals via Box-Muller over hashed uniforms, one column expression per
-    dimension — fully executor-side, no RNG state.
-    """
-    rng = spark.range(
-        0, n_vecs, 1, n_partitions or spark.sparkContext.defaultParallelism
-    )
-    h2 = F.abs(F.xxhash64(F.col("id"), F.lit(12)))
-    is_dup = (h2 % 100 < dup_pct) & (F.col("id") > 8)
-    donor = F.when(is_dup, F.col("id") - 1 - (h2 % 8)).otherwise(F.col("id"))
-
-    def normal(key, d, salt):
-        u1 = (
-            F.abs(F.xxhash64(key, F.lit(d), F.lit(salt))) % 1000000007 + 1
-        ) / 1000000008.0
-        u2 = (
-            F.abs(F.xxhash64(key, F.lit(d), F.lit(salt + 1))) % 1000000007
-        ) / 1000000007.0
-        return F.sqrt(-2.0 * F.log(u1)) * F.cos(2.0 * float(np.pi) * u2)
-
-    vec = F.array(
-        *[
-            (normal(donor, d, 100) + F.when(is_dup, 0.05 * normal(F.col("id"), d, 200)).otherwise(F.lit(0.0))).cast("float")
-            for d in range(dim)
-        ]
-    )
-    return rng.select(F.col("id").alias("vec_id"), vec.alias("embedding"))
-
-
 def random_walks(
     spark: SparkSession,
     num_ids: int,
