@@ -604,7 +604,7 @@ _ROLLUP_FEATURES = ["length", "sum_values", "minimum", "maximum", "mean"]
 
 def q_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     _prep(spark)
-    from tsfresh_spark.operators.rollup import RollupEngine
+    from tsfresh_spark.operators.rollup import RollupEngine, TierSpec
 
     ev = _events_long(spark, sf_dir)
     points = ev.select(
@@ -620,15 +620,15 @@ def q_rollup_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
         settings={name: None for name in _ROLLUP_FEATURES},
         id_cols=("user_id", "event_type"),
         base_step_seconds=3600,
+        tiers=[TierSpec("1d", 86400)],
     )
-    # base (1 shuffle; byte-identical to the gapfill window operators,
-    # tests/test_rollup.py::test_compact_base_tier_bitexact) +
-    # narrow split
-    base = eng.compute_base(points)
-    # with_payload=False: this query discards the payload column, so the
-    # cascade must not pay the per-window Gorilla re-encode (guide §1.2);
+    # one shuffle and one window map: the base grid (byte-identical to the
+    # gapfill window operators,
+    # tests/test_rollup.py::test_compact_base_tier_bitexact) cut into day
+    # windows.  with_payload=False: this query discards the payload column,
+    # so the cascade must not pay the Gorilla encode (guide §1.2);
     # features/n_points are identical (tests/test_rollup.py)
-    tier = eng.compute_tier(base, 86400, with_payload=False)
+    tier = eng.cascade(points, with_payload=False).where(F.col("tier") == "1d")
     return tier.select(
         "user_id",
         "event_type",

@@ -165,7 +165,7 @@ def run_audit(
         "Catalyst pushdown sanity on the raw table.",
     )
 
-    # 4. rollup cascade tier: one explicit-count exchange feeds each window map
+    # 4. rollup cascade: one explicit-count range exchange feeds one window map
     from tsfresh_spark.operators.rollup import RollupEngine
 
     eng = RollupEngine(
@@ -181,28 +181,29 @@ def run_audit(
         F.col("ts").cast("timestamp").cast("long").alias("ts"),
         F.col("v").cast("double").alias("value"),
     )
-    base = eng.compute_base(pts)
     audit(
-        "RollupEngine.compute_tier (day-aligned cascade)",
-        eng.compute_tier(base, 86400),
+        "RollupEngine.cascade (every tier in one window map)",
+        eng.cascade(pts),
         [
             (
-                "at most two Exchanges end-to-end (one per window map)",
-                lambda p: len(re.findall(r"\bExchange\b", p.split("\n\n")[0])) <= 2,
+                "exactly one Exchange end-to-end",
+                lambda p: len(re.findall(r"\bExchange\b", p.split("\n\n")[0])) == 1,
             ),
             (
-                "an explicit-count Exchange feeds each window map",
-                lambda p: all("REPARTITION_BY_NUM" in a for a in _feeds(p, "MapInArrow")),
+                "exactly one window map (MapInArrow)",
+                lambda p: [n for _, n, _ in _nodes(p)].count("MapInArrow") == 1,
             ),
             (
-                "the base groupBy reuses a range Exchange on the series id",
-                lambda p: "Arguments: rangepartitioning(user_id" in p,
+                "an explicit-count range Exchange on the series id feeds the map",
+                lambda p: all(
+                    a.startswith("rangepartitioning(user_id") and "REPARTITION_BY_NUM" in a
+                    for a in _feeds(p, "MapInArrow")
+                ),
             ),
             (
-                "no range Exchange above a window map (its sample job would re-run the map)",
+                "no range Exchange above the window map (its sample job would re-run the map)",
                 lambda p: not _range_above(p, "MapInArrow"),
             ),
-            ("tiers built by the Arrow window map (MapInArrow)", lambda p: "MapInArrow" in p),
             (
                 "no pandas map and no Arrow scalar UDF",
                 lambda p: not any(
@@ -210,14 +211,13 @@ def run_audit(
                 ),
             ),
         ],
-        "Base tier = a range Exchange on the series id with an explicit "
-        "count (one partition per core), which the groupBy that collects "
-        "each series into a sorted array reuses; then the mapInArrow window "
-        "map gap-fills and day-chunks it.  The day-aligned feature tier "
-        "deals the base rows round-robin over the same count and decodes + "
-        "splits payloads inside its own window map.  Each map thus runs "
-        "once, on every core; the tier write's byte-sized hash Exchange "
-        "(not part of this frame) sits above the map and samples nothing.",
+        "The whole cascade = a range Exchange on the series id with an "
+        "explicit count (one partition per core), which the groupBy that "
+        "collects each series into a sorted array reuses; then one "
+        "mapInArrow window map cuts raw, gap-fills base and cuts every "
+        "feature tier from the filled grid, so it runs once, on every core.  "
+        "The tier write's byte-sized hash Exchange (not part of this frame) "
+        "sits above the map and samples nothing.",
     )
 
     if write_md:

@@ -76,31 +76,3 @@ def test_integer_valued_tokens_roundtrip():
     dts, dvs = decode_series(encode_series(ts, tokens))
     assert np.array_equal(dvs, tokens)
     assert np.array_equal(dts, ts)
-
-
-def test_engine_decoder_roundtrip(spark, tmp_path):
-    """Payloads from ``encode_series`` in a Spark binary column decode
-    bit for bit through the decoder the rollup engine runs
-    (``RollupEngine.decode_points``); an empty series yields no rows."""
-    from tsfresh_spark.operators.rollup import RollupEngine
-
-    rows = [
-        ("a", [0, 60, 120, 180], [1.5, 1.5, 2.5, -3.0]),
-        ("b", [10, 11], [0.0, 0.0]),
-        ("c", [], []),
-    ]
-    stored = spark.createDataFrame(
-        [
-            (doc, "s", bytearray(encode_series(np.array(ts, np.int64), np.array(vals, np.float64))))
-            for doc, ts, vals in rows
-        ],
-        "doc_id string, source string, payload binary",
-    )
-    eng = RollupEngine(spark, str(tmp_path), settings={})
-    got = eng.decode_points(stored).orderBy("doc_id", "ts").toPandas()
-    for doc, ts, vals in rows:
-        part = got[got.doc_id == doc]
-        assert part.ts.tolist() == ts
-        want = np.array(vals, np.float64)
-        assert part.value.to_numpy().tobytes() == want.tobytes()
-    assert "c" not in set(got.doc_id)

@@ -1,80 +1,4 @@
-"""Skew tooling: salted two-phase aggregation must equal the direct
-aggregation while spreading a hot key over many tasks."""
-
-import numpy as np
-import pytest
-
-from pyspark.sql import functions as F
-
-from tsfresh_spark.plans.partitioning import (
-    salt_column,
-    salted_group_apply,
-    skew_report,
-    spread_by_keys,
-)
-
-
-@pytest.fixture(scope="module")
-def skewed(spark):
-    # zipf-ish: 'web' holds ~80% of rows
-    rows = []
-    for i in range(4000):
-        src = "web" if i % 5 != 0 else ("code" if i % 10 else "wiki")
-        rows.append((f"doc{i}", src, float(i % 97)))
-    return spark.createDataFrame(rows, "doc_id string, source string, v double")
-
-
-def test_skew_report(spark, skewed):
-    report = skew_report(skewed, "source")
-    assert report[0][0] == "web"
-    assert report[0][1] > 0.7 * 4000
-
-
-def test_salted_agg_equals_direct(spark, skewed):
-    direct = (
-        skewed.groupBy("source")
-        .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
-        .toPandas()
-        .set_index("source")
-        .sort_index()
-    )
-    salted, keys = salted_group_apply(skewed, ["source"], "doc_id", buckets=8)
-    partial = salted.groupBy(*keys).agg(
-        F.sum("v").alias("s"), F.count("*").alias("n")
-    )
-    merged = (
-        partial.groupBy("source")
-        .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-        .toPandas()
-        .set_index("source")
-        .sort_index()
-    )
-    assert (merged.n == direct.n).all()
-    assert merged.s.values == pytest.approx(direct.s.values)
-
-
-def test_salt_is_deterministic_and_bounded(spark, skewed):
-    a = skewed.withColumn("salt", salt_column("doc_id", 8)).toPandas()
-    b = skewed.withColumn("salt", salt_column("doc_id", 8)).toPandas()
-    assert (a.sort_values("doc_id").salt.values == b.sort_values("doc_id").salt.values).all()
-    assert a.salt.between(0, 7).all()
-    # the hot key's rows spread over all buckets
-    web = a[a.source == "web"]
-    assert web.salt.nunique() == 8
-    counts = web.groupby("salt").size()
-    assert counts.max() < 2.5 * counts.min()  # roughly balanced
-
-
-def test_spread_by_keys_partitioning(spark, skewed):
-    spread = spread_by_keys(skewed, "doc_id", "source", partitions=16)
-    sizes = (
-        spread.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .toPandas()
-    )
-    assert len(sizes) == 16
-    assert sizes["count"].max() < 3 * sizes["count"].min()
+"""Skew handling: the session's AQE configuration splits a skewed join."""
 
 
 def test_aqe_splits_skewed_join(spark):

@@ -237,48 +237,6 @@ def test_stage_profiler_cost_is_bounded_by_block(spark, monkeypatch):
     assert not (set(looked_up) - block) & stored
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from tsfresh_spark.plans.bucketing import (
-        bucketed_join_is_shuffle_free,
-        read_bucketed,
-        write_bucketed,
-    )
-
-    docs = spark.range(2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 97).alias("feat")
-    )
-    labels = spark.range(2000).select(
-        F.col("id").alias("doc_id"), (F.col("id") % 2).alias("label")
-    )
-    write_bucketed(
-        docs, "b_docs", bucket_cols=["doc_id"], num_buckets=8,
-        sort_cols=["doc_id"], path=str(tmp_path / "b_docs"),
-    )
-    write_bucketed(
-        labels, "b_labels", bucket_cols=["doc_id"], num_buckets=8,
-        sort_cols=["doc_id"], path=str(tmp_path / "b_labels"),
-    )
-    l, r = read_bucketed(spark, "b_docs"), read_bucketed(spark, "b_labels")
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force the sort-merge path (tiny test tables would broadcast)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # the whole point: the join plans without any shuffle Exchange
-        assert bucketed_join_is_shuffle_free(l, r, ["doc_id"])
-        # and a plain (non-bucketed) join of the same data does shuffle
-        assert not bucketed_join_is_shuffle_free(docs, labels, ["doc_id"])
-        # results identical to the shuffled join
-        got = l.join(r, "doc_id").orderBy("doc_id").toPandas()
-        want = docs.join(labels, "doc_id").orderBy("doc_id").toPandas()
-        assert got.equals(want)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS b_docs")
-        spark.sql("DROP TABLE IF EXISTS b_labels")
-
-
 def test_grouped_extraction_pins_partition_count(spark):
     """extract_features_long must carry a user-specified repartition on the
     group keys (REPARTITION_BY_NUM) so AQE cannot byte-coalesce the

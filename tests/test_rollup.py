@@ -151,6 +151,11 @@ def _base_points(spark, path):
     }
 
 
+def _tier(frame, name):
+    """One tier of a :meth:`RollupEngine.cascade` frame, as it is stored."""
+    return frame.where(F.col("tier") == name).drop("tier")
+
+
 def _same_feature(got, want) -> bool:
     """Bit-for-bit; a NULL read back stands for NaN."""
     if got is None:
@@ -158,11 +163,11 @@ def _same_feature(got, want) -> bool:
     return np.float64(got).tobytes() == np.float64(want).tobytes()
 
 
-def test_wider_than_day_tier_uses_regroup_path(spark, raw_points, tmp_path_factory):
+def test_wider_than_day_tier_equals_base_slice(spark, raw_points, tmp_path_factory):
     """Windows that do not divide a day — a multiple of it (7d) or neither
-    (36h) — decode the base payloads and regroup the points per window.
-    Each row holds exactly its slice of the base grid: point count, payload
-    and features bit for bit."""
+    (36h) — span several stored base day chunks.  Each row holds exactly
+    its slice of the decoded base grid: point count, payload and features
+    bit for bit."""
     base = str(tmp_path_factory.mktemp("rollup7d"))
     widths = {"7d": 7 * DAY, "36h": 36 * 3600}
     eng = RollupEngine(
@@ -205,7 +210,7 @@ def test_nan_feature_is_stored_as_null(spark):
         spark, "/tmp/rollup_nan_unused", settings={"variation_coefficient": None},
         base_step_seconds=60,
     )
-    tier = eng.compute_tier(eng.compute_base(points), 3600).orderBy("window_start").collect()
+    tier = _tier(eng.cascade(points), "1h").orderBy("window_start").collect()
     assert [r["features"] for r in tier] == [
         {"web__variation_coefficient": None}, {"web__variation_coefficient": 0.0},
     ]
@@ -252,7 +257,7 @@ def test_compact_base_tier_bitexact(spark, raw_points, method):
         spark, "/tmp/rollup_base_ab_unused", settings=minimal_settings(),
         base_step_seconds=300, gap_method=method,
     )
-    base = eng.compute_base(raw_points)
+    base = _tier(eng.cascade(raw_points), "base")
     got = {
         (r.doc_id, r.source, r.window_start): (r.n_points, bytes(r.payload))
         for r in base.toPandas().itertuples()
@@ -261,11 +266,9 @@ def test_compact_base_tier_bitexact(spark, raw_points, method):
     assert got.keys() == want.keys()
     for key in want:
         assert got[key] == want[key], (key, method)
-    # and the base plan (of a frame not yet run) has exactly one exchange
-    # and runs no pandas grouped map
-    plan = (
-        eng.compute_base(raw_points)._jdf.queryExecution().executedPlan().toString()
-    )
+    # and the cascade plan (of a frame not yet run) has exactly one
+    # exchange and runs no pandas grouped map
+    plan = eng.cascade(raw_points)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1
     assert "FlatMapGroupsInPandas" not in plan
 
@@ -348,9 +351,9 @@ def test_retention_ages_out_old_windows(spark, raw_points, tmp_path_factory):
 
 
 def test_tier_without_payload_matches_with_payload(spark, raw_points):
-    """Round-6: compute_tier(with_payload=False) must be identical to the
-    payload-bearing form in every column except payload (which comes back
-    NULL) — the flag only skips the Gorilla re-encode of bytes the caller
+    """cascade(with_payload=False) must be identical to the payload-bearing
+    form in every column except payload (which comes back NULL on every
+    tier) — the flag only skips the Gorilla encode of bytes the caller
     discards."""
     eng = RollupEngine(
         spark,
@@ -359,10 +362,10 @@ def test_tier_without_payload_matches_with_payload(spark, raw_points):
         id_cols=("doc_id", "source"),
         base_step_seconds=60,
     )
-    base = eng.compute_base(raw_points)
-    with_p = eng.compute_tier(base, 3600).toPandas()
-    without_p = eng.compute_tier(base, 3600, with_payload=False).toPandas()
-    key = ["doc_id", "source", "window_start"]
+    with_p = eng.cascade(raw_points).toPandas()
+    without_p = eng.cascade(raw_points, with_payload=False).toPandas()
+    assert set(with_p.tier) == {"raw", "base", "1h", "1d"}
+    key = ["tier", "doc_id", "source", "window_start"]
     a = with_p.sort_values(key).reset_index(drop=True)
     b = without_p.sort_values(key).reset_index(drop=True)
     assert b.payload.isna().all()
@@ -441,7 +444,7 @@ def test_tier_features_equal_kernels_on_window_copies(spark):
     eng = RollupEngine(
         spark, "/tmp/rollup_window_copies_unused", settings=settings, base_step_seconds=60
     )
-    tier = eng.compute_tier(eng.compute_base(points), 3600).collect()
+    tier = _tier(eng.cascade(points), "1h").collect()
     assert len(tier) == 8 * 7
     for r in tier:
         _, w_vals = decode_series(bytes(r["payload"]))
@@ -479,11 +482,11 @@ def _stage_graph(spark, stage_id: int) -> str:
 
 
 def test_each_window_map_runs_once_on_every_core(spark, tmp_path, monkeypatch):
-    """Every tier's window map runs in exactly one stage, on
-    max(shuffle partitions, defaultParallelism) tasks, and no range
-    exchange sits above a map in a tier's write plan (its sample job would
-    run the map a second time).  A wider-than-day tier also runs its
-    decode map once, in a stage of its own.  Twice as many series as
+    """The cascade's one window map runs in exactly one completed stage of
+    the one tier write, on max(shuffle partitions, defaultParallelism)
+    tasks, and no range exchange sits above it in the write plan (its
+    sample job would run the map a second time).  A wider-than-day tier
+    rides along, so no tier takes another path.  Twice as many series as
     partitions, so a range split on doc_id can fill every partition."""
     from pyspark.sql.readwriter import DataFrameWriter
 
@@ -500,13 +503,13 @@ def test_each_window_map_runs_once_on_every_core(spark, tmp_path, monkeypatch):
         for t, v in zip(np.cumsum(rng.randint(30, 900, 200)), rng.randint(0, 100, 200))
     ]
     points = spark.createDataFrame(rows, "doc_id string, source string, ts long, value double")
-    write, seen = DataFrameWriter.parquet, {}
+    write, seen = DataFrameWriter.parquet, []
 
     def profiled(self, path, *args, **kwargs):
         plan = self._df._jdf.queryExecution().executedPlan().toString()
         with StageProfiler(spark) as prof:
             write(self, path, *args, **kwargs)
-        seen[os.path.basename(path)] = plan, prof.stages
+        seen.append((path, plan, prof.stages))
 
     monkeypatch.setattr(DataFrameWriter, "parquet", profiled)
     eng = RollupEngine(
@@ -515,16 +518,100 @@ def test_each_window_map_runs_once_on_every_core(spark, tmp_path, monkeypatch):
     )
     eng.run(points, job_id="job-layout")
     monkeypatch.undo()
-    for tier, decode_maps in [("raw", 0), ("base", 0), ("1h", 0), ("36h", 1)]:
-        plan, stages = seen[f"tier={tier}"]
-        assert "MapInArrow" in plan, tier
-        assert "rangepartitioning" not in plan.split("MapInArrow")[0], (tier, plan)
-        maps = [
-            (m.num_tasks, _stage_graph(spark, m.stage_id).count('label="MapInArrow"'))
-            for m in stages
-            if m.status == "COMPLETE"
-        ]
-        maps = [m for m in maps if m[1]]
-        assert len(maps) == 1 + decode_maps, (tier, maps)
-        assert maps[-1] == (n, 1), (tier, maps)
-        assert all(k == 1 for _, k in maps), (tier, maps)
+    writes = [(plan, stages) for path, plan, stages in seen if not path.endswith("manifest")]
+    assert len(writes) == 1, [path for path, _, _ in seen]
+    ((plan, stages),) = writes
+    assert "MapInArrow" in plan
+    assert "rangepartitioning" not in plan.split("MapInArrow")[0], plan
+    maps = [
+        (m.num_tasks, _stage_graph(spark, m.stage_id).count('label="MapInArrow"'))
+        for m in stages
+        if m.status == "COMPLETE"
+    ]
+    assert [m for m in maps if m[1]] == [(n, 1)], maps
+
+
+def test_empty_job_commits_empty_tiers(spark, tmp_path):
+    """A job with no points commits every tier with 0 rows, and each tier
+    reads back as an empty frame with the stored columns."""
+    points = spark.createDataFrame([], "doc_id string, source string, ts long, value double")
+    eng = RollupEngine(spark, str(tmp_path), settings=minimal_settings())
+    paths = eng.run(points, job_id="job-empty")
+    assert set(paths) == {"raw", "base", "1h", "1d"}
+    assert eng.manifest.committed_tiers("job-empty") == set(paths)
+    for tier, path in paths.items():
+        stored = spark.read.parquet(path)
+        assert stored.columns == [
+            "doc_id", "source", "window_start", "n_points", "features", "payload",
+        ], tier
+        assert stored.count() == 0, tier
+        assert eng.manifest.tier_metrics("job-empty", tier) == [], tier
+    commits = (
+        spark.read.parquet(eng.manifest.path)
+        .filter((F.col("job_id") == "job-empty") & (F.col("partition_id") == -1))
+        .collect()
+    )
+    assert sorted(r["tier"] for r in commits) == sorted(paths)
+    assert all(r["row_count"] == 0 for r in commits)
+
+
+def _tier_rows(spark, path) -> list:
+    """A stored tier's rows, comparable across runs: sorted, payloads as
+    bytes, features as sorted items."""
+    return sorted(
+        (r.doc_id, r.source, r.window_start, r.n_points,
+         None if r.payload is None else bytes(r.payload),
+         None if r.features is None else sorted(r.features.items()))
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+def test_resume_after_a_failed_commit(spark, raw_points, tmp_path_factory, monkeypatch):
+    """A crash between the write and the second tier's COMMIT leaves only
+    raw committed.  A re-run of the same job_id writes only the uncommitted
+    tiers: the committed raw files stay untouched (names and mtimes), and
+    every tier ends up equal to a clean run's."""
+    from tsfresh_spark.plans.manifest import Manifest
+
+    def engine(name):
+        return RollupEngine(
+            spark, str(tmp_path_factory.mktemp(name)), settings=minimal_settings(),
+            base_step_seconds=60, tiers=[TierSpec("1h", 3600), TierSpec("1d", DAY)],
+        )
+
+    clean = engine("clean")
+    clean.run(raw_points, job_id="job-C")
+    eng = engine("crash")
+    record, calls = Manifest.record_tier, []
+
+    def record_or_crash(self, job_id, tier, *args):
+        calls.append(tier)
+        if len(calls) == 2:
+            raise RuntimeError("crash before the COMMIT")
+        return record(self, job_id, tier, *args)
+
+    monkeypatch.setattr(Manifest, "record_tier", record_or_crash)
+    with pytest.raises(RuntimeError, match="crash before the COMMIT"):
+        eng.run(raw_points, job_id="job-C")
+    monkeypatch.undo()
+    assert calls == ["raw", "base"]
+    assert eng.manifest.committed_tiers("job-C") == {"raw"}
+
+    def files(tier):
+        path = eng.tier_path(tier)
+        return {f: os.path.getmtime(os.path.join(path, f)) for f in os.listdir(path)}
+
+    raw_files, base_files = files("raw"), files("base")
+    paths = eng.run(raw_points, job_id="job-C")
+    assert eng.manifest.committed_tiers("job-C") == {"raw", "base", "1h", "1d"}
+    assert files("raw") == raw_files
+    parts = [f for f in files("base") if f.startswith("part-")]
+    assert parts and base_files.keys().isdisjoint(parts)  # rewritten
+    raw_commits = (
+        spark.read.parquet(eng.manifest.path)
+        .filter((F.col("tier") == "raw") & (F.col("partition_id") == -1))
+        .count()
+    )
+    assert raw_commits == 1
+    for tier, path in paths.items():
+        assert _tier_rows(spark, path) == _tier_rows(spark, clean.tier_path(tier)), tier

@@ -90,8 +90,8 @@ def test_windowed_stream_matches_batch(spark, event_files):
 def test_windowed_stream_equals_rollup_tier_bitexact(spark, tmp_path_factory):
     """The stream==batch invariant against the REAL batch plane: the same
     gap-free corpus through (a) windowed_feature_stream (file source, one
-    availableNow trigger) and (b) RollupEngine.compute_base → compute_tier
-    (compact base + Gorilla codec + narrow cascade) must produce IDENTICAL
+    availableNow trigger) and (b) the 1h tier of RollupEngine.cascade (the
+    compact base grid cut into windows in one window map) must produce IDENTICAL
     feature maps, bit for bit.  On a gap-free regular grid the base-tier
     gap-fill is the identity, so the two planes are exactly comparable."""
     from tsfresh_spark.operators.rollup import RollupEngine
@@ -129,7 +129,7 @@ def test_windowed_stream_equals_rollup_tier_bitexact(spark, tmp_path_factory):
     got = spark.sql("select * from feat_stream_rollup").toPandas()
     got = got[got.window_start < cutoff]
 
-    # batch plane: the real rollup engine (base tier, codec, cascade)
+    # batch plane: the real rollup engine (base grid, 1h window cut)
     eng = RollupEngine(
         spark,
         src + "-tiers",
@@ -143,7 +143,7 @@ def test_windowed_stream_equals_rollup_tier_bitexact(spark, tmp_path_factory):
         F.col("ts").cast("long").alias("ts"),
         F.col("value").cast("double").alias("value"),
     )
-    tier = eng.compute_tier(eng.compute_base(points), 3600).toPandas()
+    tier = eng.cascade(points).where(F.col("tier") == "1h").toPandas()
     tier["window_start"] = pd.to_datetime(tier.window_start, unit="s")
     tier = tier[tier.window_start < cutoff]
 

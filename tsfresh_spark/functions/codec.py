@@ -12,8 +12,9 @@ Implements the bit-level codecs from the Gorilla paper (Pelkonen et al.,
 No analog exists in the reference (tsfresh keeps raw frames); this is the
 north-rule storage codec for rollup tier payloads (BinaryType columns).
 Pure python/numpy bit-packing — executors need nothing beyond numpy; the
-rollup engine encodes and decodes payloads inside its ``mapInArrow`` maps,
-one batch of series at a time (``RollupEngine.decode_points``).
+rollup engine encodes every tier's payloads inside its one ``mapInArrow``
+window map (``RollupEngine.cascade``), one batch of series at a time, and
+readers of the stored tiers decode them.
 """
 
 from __future__ import annotations

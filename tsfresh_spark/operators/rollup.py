@@ -11,28 +11,31 @@ Tier cascade over a corpus of (doc_id, source) series:
             the base-grid points inside the window, plus the compressed
             point payload.
 
-Every tier is one ``mapInArrow`` window map over per-series arrays or
-stored payloads: it cuts a whole Arrow batch into windows in one pass and
-builds the tier's record batch directly, features from the shared executor
-(``extract._feature_map``).  Raw groups the points per (series, day), base
-per series (base gap-fills in the map).  Feature tiers read the BASE tier's
-compressed day-chunks, never the raw input: day-aligned windows split each
-payload in the map; wider windows decode + regroup.  The codec is
-bit-exact, so "cascade" and "direct" produce identical features (asserted
-in tests).
+The whole cascade is one ``mapInArrow`` window map over per-series arrays
+(:meth:`RollupEngine.cascade`).  For each Arrow batch of whole series the
+map cuts raw at day boundaries from the sorted input arrays, gap-fills each
+series once onto the base grid and cuts base at day boundaries, then cuts
+every tier's windows from that same filled grid, features from the shared
+executor (``extract._feature_map``).  Every row carries its ``tier``.  A
+feature window is thus exactly its slice of the base grid that the base
+tier stores, day-aligned or wider; the codec is bit-exact, so a tier
+recomputed from the stored base payloads equals the stored tier
+(tests/test_rollup.py).
 
-Two layouts, two exchanges per tier.  The compute layout: one exchange
-with an explicit count of max(shuffle partitions, defaultParallelism)
-feeds every window map, so the map runs once, on every core — a range
-exchange on doc_id under the raw and base ``groupBy`` (which reuses it),
-round-robin over the stored base payloads for day-aligned tiers, a hash
-pin of the decoded points for wider ones.  The file layout: ``_write``
-hash-partitions the map output on doc_id with no count, sorted within
-partitions, and AQE sizes the files by bytes.  No range exchange ever sits
-above a map: range partitioning samples its input with a separate job,
-which would run the map twice.  Each write is recorded in the manifest with
-per-file row/byte metrics and a COMMIT record; a re-run of the same job_id
-skips committed tiers (resume from checkpoint).
+Two layouts, two exchanges.  The compute layout: a range exchange on
+doc_id with an explicit count of max(shuffle partitions,
+defaultParallelism), which the per-series ``groupBy`` reuses, feeds the
+map, so it runs once, on every core.  The whole cascade of a series runs in
+one task: a job with fewer series than cores leaves cores idle.  The file
+layout: ``_write`` hash-partitions the map output on doc_id with no count,
+sorted within partitions, and AQE sizes the files by bytes; one
+``partitionBy("tier")`` write with dynamic partition overwrite lands each
+tier under ``tier=<name>`` and leaves every other directory of the base
+path alone.  No range exchange ever sits above the map: range partitioning
+samples its input with a separate job, which would run the map twice.
+Each written tier is then recorded in the manifest with per-file row/byte
+metrics and a COMMIT record; a re-run of the same job_id writes only the
+uncommitted tiers (resume from checkpoint; the map is deterministic).
 
 Timestamps are epoch seconds (int64) throughout the engine — integer window
 arithmetic (``ts - ts % step``) is exact, codegen-friendly, and avoids
@@ -46,16 +49,18 @@ from dataclasses import dataclass, field
 import numpy as np
 import pyarrow as pa
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tsfresh_spark.extract import _feature_map
-from tsfresh_spark.functions.codec import decode_series, encode_series
+from tsfresh_spark.functions.codec import encode_series
 from tsfresh_spark.plans.manifest import Manifest
 
 DAY = 86400
 _FEATURES = pa.map_(pa.string(), pa.float64())
-_TIER_COLUMNS = "window_start long, n_points long, features map<string,double>, payload binary"
+_TIER_COLUMNS = (
+    "window_start long, n_points long, features map<string,double>, payload binary, tier string"
+)
 
 
 @dataclass
@@ -101,183 +106,138 @@ class RollupEngine:
     def tier_path(self, tier: str) -> str:
         return f"{self.base_path.rstrip('/')}/tier={tier}"
 
-    def _write(self, df: DataFrame, tier: str) -> str:
-        """File layout: hash on ``doc_id`` with no count, so AQE sizes the
+    def _fs(self):
+        """The Hadoop filesystem of the base path and its ``Path`` class."""
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        fs = jvm.org.apache.hadoop.fs.Path(self.base_path).getFileSystem(conf)
+        return fs, jvm.org.apache.hadoop.fs.Path
+
+    def _write(self, frame: DataFrame, tiers: list[str]) -> None:
+        """Persist the ``tiers`` of a :meth:`cascade` frame in one write.
+
+        File layout: hash on ``doc_id`` with no count, so AQE sizes the
         files by bytes (one file per tier for a small job), each sorted by
-        (doc_id, window_start).  A hash exchange samples nothing, so the
-        window map below it runs once."""
-        path = self.tier_path(tier)
+        (doc_id, window_start); a hash exchange samples nothing, so the
+        window map below it runs once.  The tiers' old directories are
+        deleted first, so a tier holds only this write's windows even when
+        it gets no rows; dynamic partition overwrite then writes only the
+        ``tier=<name>`` directories that get rows and leaves ``manifest/``
+        and the committed tiers alone.  A job with no points gives no tier
+        a row, so each then gets a schema-only file and reads back as an
+        empty frame."""
+        fs, path = self._fs()
+        for name in tiers:
+            fs.delete(path(self.tier_path(name)), True)
         doc_col = self.id_cols[0]
-        out = df.repartition(doc_col).sortWithinPartitions(doc_col, "window_start")
-        out.write.mode("overwrite").parquet(path)
-        return path
+        out = frame.where(F.col("tier").isin(tiers)).repartition(doc_col)
+        (
+            out.sortWithinPartitions("tier", doc_col, "window_start")
+            .write.partitionBy("tier")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(self.base_path)
+        )
+        for name in tiers:
+            if not fs.exists(path(self.tier_path(name))):
+                frame.limit(0).drop("tier").write.parquet(self.tier_path(name))
 
     # ---------------------------------------------------- compute layout
 
     def _spread_count(self) -> int:
-        """Partitions a window map runs on: every core, and at least the
+        """Partitions the window map runs on: every core, and at least the
         session's shuffle partitions.  An explicit count, so AQE keeps it
         (byte-coalescing would run a small compute-bound map on one core)."""
         sc = self.spark.sparkContext
         return max(int(self.spark.conf.get("spark.sql.shuffle.partitions")), sc.defaultParallelism)
 
     def _spread(self, points: DataFrame) -> DataFrame:
-        """Range-partition raw points on ``doc_id`` ahead of a per-series
+        """Range-partition raw points on ``doc_id`` ahead of the per-series
         ``groupBy``: the range sample reads only the input, and the
         aggregate reuses the exchange (range on ``doc_id`` clusters every
         key set that contains it)."""
         return points.repartitionByRange(self._spread_count(), self.id_cols[0])
 
-    # ------------------------------------------------------- point shuttling
-
-    def _chunk_points(self, points: DataFrame, *keys: str | Column) -> DataFrame:
-        """points (id..., ts long, value double) → one row per group of
-        ``keys`` with its ``ts``/``value`` arrays in (ts, value) order; a
-        NULL value sorts first among points tied on ``ts``."""
-        return points.groupBy(*keys).agg(
+    def _chunk_points(self, points: DataFrame) -> DataFrame:
+        """points (id..., ts long, value double) → one row per series with
+        its ``ts``/``value`` arrays in (ts, value) order; a NULL value sorts
+        first among points tied on ``ts``."""
+        return points.groupBy(*self.id_cols).agg(
             F.array_sort(F.collect_list(F.struct("ts", "value"))).alias("pts")
         ).select(*self.id_cols, F.col("pts.ts").alias("ts"), F.col("pts.value").alias("value"))
 
-    def _id_schema(self, frame: DataFrame) -> str:
-        return ", ".join(f"{c} {frame.schema[c].dataType.simpleString()}" for c in self.id_cols)
+    # ------------------------------------------------------------ cascade
 
-    def decode_points(self, stored: DataFrame) -> DataFrame:
-        """Decode a tier frame's payload column back to (id..., ts, value)
-        rows — each payload once, in a narrow ``mapInArrow``."""
-        names = [*self.id_cols, "ts", "value"]
-
-        def run(batches):
-            for batch in batches:
-                offsets, ts, values = _decode(batch.column("payload"))
-                rows = np.repeat(np.arange(batch.num_rows), np.diff(offsets))
-                ids = [c.take(rows) for c in batch.columns[:-1]]
-                yield pa.RecordBatch.from_arrays([*ids, pa.array(ts), pa.array(values)], names)
-
-        return stored.select(*self.id_cols, "payload").mapInArrow(
-            run, f"{self._id_schema(stored)}, ts long, value double"
-        )
-
-    def _map_windows(
-        self,
-        frame: DataFrame,
-        window_seconds: int,
-        *,
-        settings: dict | None = None,
-        with_payload: bool = True,
-        fill_step: int | None = None,
-    ) -> DataFrame:
-        """Narrow ``mapInArrow``: each row of ``frame`` (id_cols + either
-        sorted ``ts``/``value`` arrays or a stored ``payload``) becomes one
-        tier row per ``window_seconds`` window its points fall in — no
-        shuffle.  ``fill_step`` first gap-fills each row onto that grid (the
-        base tier).  Each window gets its point count, its feature map under
-        ``settings`` and its encoded payload (``with_payload``); a column not
-        wanted comes back as a typed NULL column.  Every tier shares this
-        stored schema."""
-        idc = list(self.id_cols)
-        method = self.gap_method
-        encoded = "payload" in frame.columns
-
-        def run(batches):
-            for batch in batches:
-                ids = batch.columns[: len(idc)]
-                if encoded:
-                    offsets, ts, values = _decode(batch.column("payload"))
-                else:  # aligned list columns; NULL values become NaN
-                    ts, values = (np.asarray(batch.column(c).flatten()) for c in ("ts", "value"))
-                    offsets = batch.column("ts").offsets.to_numpy()
-                    offsets = offsets - offsets[0]
-                if fill_step:
-                    offsets, ts, values = _flatten(
-                        _fill_series(ts[a:b], values[a:b], fill_step, method)
-                        for a, b in zip(offsets[:-1], offsets[1:])
-                    )
-                rows, starts, bounds = _cut_windows(offsets, ts, window_seconds)
-                features, payload = pa.nulls(len(rows), _FEATURES), pa.nulls(len(rows), pa.binary())
-                if settings is not None:
-                    windows = pa.ListArray.from_arrays(bounds.astype(np.int32), values)
-                    features = _feature_map(ids[1].take(rows), windows, settings)
-                if with_payload:
-                    cuts = zip(bounds, bounds[1:])
-                    chunks = [encode_series(ts[a:b], values[a:b]) for a, b in cuts]
-                    payload = pa.array(chunks, pa.binary())
-                yield pa.RecordBatch.from_arrays(
-                    [*(c.take(rows) for c in ids), pa.array(starts), pa.array(np.diff(bounds)),
-                     features, payload],
-                    [*idc, "window_start", "n_points", "features", "payload"],
-                )
-
-        cols = ["payload"] if encoded else ["ts", "value"]
-        schema = f"{self._id_schema(frame)}, {_TIER_COLUMNS}"
-        return frame.select(*idc, *cols).mapInArrow(run, schema)
-
-    # ------------------------------------------------------- tier computation
-
-    def _archive_tier(self, points: DataFrame) -> DataFrame:
-        """raw archival: per-day compressed chunks, no features."""
-        chunks = self._chunk_points(self._spread(points), *self.id_cols, _window_start(DAY))
-        return self._map_windows(chunks, DAY)
-
-    def compute_base(self, points: DataFrame) -> DataFrame:
-        """Public: the gap-filled, payload-encoded base tier for raw
-        ``points`` (id_cols + ts:long epoch-seconds + value:double), without
-        touching tier storage — the building block ``run()`` persists.
+    def cascade(self, points: DataFrame, *, with_payload: bool = True) -> DataFrame:
+        """Public: every tier of raw ``points`` (id_cols + ts: long epoch
+        seconds + value: double) in one frame, without touching tier
+        storage — the frame ``run()`` persists.  Each row is one window of
+        one series, tagged with its ``tier``: ``raw`` and ``base`` (day
+        chunks, NULL ``features``) and every ``TierSpec`` in ``tiers``
+        (features under ``settings``); select one with
+        ``.where(F.col("tier") == name)``.
 
         One shuffle: the points are range-partitioned on ``doc_id`` into
         one partition per core (:meth:`_spread`), ``groupBy(ids)`` reuses
         that exchange to collect each series into one array sorted by
-        (ts, value), as the raw tier stores it, and the window map buckets,
-        grids, fills and day-chunks it, once, on every core.  Each
-        ``base_step`` bucket keeps its last point in that order, so a tied
-        last timestamp resolves the same way whatever order the shuffle
-        delivers.  The grid spans the first..last observed bucket,
-        so linear fill is interior-only and ffill is a forward index scan;
-        both equal the public ``gapfill`` operators over a ``sequence()``
-        grid byte for byte (tests/test_rollup.py).
-        """
-        series = self._chunk_points(self._spread(points), *self.id_cols)
-        return self._map_windows(series, DAY, fill_step=self.base_step_seconds)
+        (ts, value), as the raw tier stores it, and one window map cuts
+        every tier from it, once, on every core.  Base buckets each series
+        onto the ``base_step`` grid; each bucket keeps its last point in
+        that order, so a tied last timestamp resolves the same way whatever
+        order the shuffle delivers.  The grid spans the first..last
+        observed bucket, so linear fill is interior-only and ffill is a
+        forward index scan; both equal the public ``gapfill`` operators
+        over a ``sequence()`` grid byte for byte (tests/test_rollup.py).
 
-    def compute_tier(
-        self,
-        base: DataFrame,
-        window_seconds: int,
-        *,
-        with_payload: bool = True,
-    ) -> DataFrame:
-        """Public: one feature tier at ``window_seconds`` from a base-tier
-        frame (as returned by :meth:`compute_base` or read back from tier
-        storage) — the same call ``run()`` persists.
-
-        Day-aligned windows (``DAY % window_seconds == 0``) live inside one
-        stored day chunk, so the window map decodes each payload and splits
-        it at window boundaries.  The base rows are first dealt round-robin
-        into one partition per core (a base tier stored as one file scans
-        as one split): that exchange moves only the compressed payloads and
-        samples nothing, so the map runs once even over a base frame that
-        is not stored.  Wider windows decode the points, hash them on
-        (ids, window) into one partition per core and regroup them per
-        window before the same window map.  Either way one exchange, with
-        an explicit count, feeds the map.
-
-        ``with_payload=False`` skips re-encoding the per-window Gorilla
-        payloads (the column comes back NULL): a consumer that only reads
+        ``with_payload=False`` skips encoding the Gorilla payloads on every
+        tier (the column comes back NULL): a consumer that only reads
         ``features``/``n_points`` — e.g. a report query — should not pay
-        the bit-packing cost for bytes it immediately discards.
-        Features and every other column are identical either way
-        (tests/test_rollup.py)."""
-        n = self._spread_count()
-        if DAY % window_seconds == 0:
-            frame = base.repartition(n)
-        else:
-            points = self.decode_points(base).withColumn(
-                "window_start", _window_start(window_seconds)
+        the bit-packing cost for bytes it immediately discards.  Every
+        other column is identical either way (tests/test_rollup.py)."""
+        idc = list(self.id_cols)
+        step, method, settings = self.base_step_seconds, self.gap_method, self.settings
+        cuts = [(spec.name, spec.window_seconds) for spec in self.tiers]
+
+        def windows(name, ids, offsets, ts, values, window_seconds, feature_settings=None):
+            """One tier's record batch: every row cut at ``window_seconds``
+            boundaries, with its point count, its features under
+            ``feature_settings`` and its encoded payload; a column not
+            wanted is a typed NULL column."""
+            rows, starts, bounds = _cut_windows(offsets, ts, window_seconds)
+            features, payload = pa.nulls(len(rows), _FEATURES), pa.nulls(len(rows), pa.binary())
+            if feature_settings is not None:
+                slices = pa.ListArray.from_arrays(bounds.astype(np.int32), values)
+                features = _feature_map(ids[1].take(rows), slices, feature_settings)
+            if with_payload:
+                chunks = [encode_series(ts[a:b], values[a:b]) for a, b in zip(bounds, bounds[1:])]
+                payload = pa.array(chunks, pa.binary())
+            return pa.RecordBatch.from_arrays(
+                [*(c.take(rows) for c in ids), pa.array(starts), pa.array(np.diff(bounds)),
+                 features, payload, pa.repeat(name, len(rows))],
+                [*idc, "window_start", "n_points", "features", "payload", "tier"],
             )
-            keys = [*self.id_cols, "window_start"]
-            frame = self._chunk_points(points.repartition(n, *keys), *keys)
-        return self._map_windows(
-            frame, window_seconds, settings=self.settings, with_payload=with_payload
+
+        def run(batches):
+            for batch in batches:
+                ids = batch.columns[: len(idc)]
+                # aligned list columns; NULL values become NaN
+                ts, values = (np.asarray(batch.column(c).flatten()) for c in ("ts", "value"))
+                offsets = batch.column("ts").offsets.to_numpy()
+                offsets = offsets - offsets[0]
+                yield windows("raw", ids, offsets, ts, values, DAY)
+                offsets, ts, values = _flatten(
+                    _fill_series(ts[a:b], values[a:b], step, method)
+                    for a, b in zip(offsets[:-1], offsets[1:])
+                )
+                yield windows("base", ids, offsets, ts, values, DAY)
+                for name, window_seconds in cuts:
+                    yield windows(name, ids, offsets, ts, values, window_seconds, settings)
+
+        series = self._chunk_points(self._spread(points))
+        id_schema = ", ".join(
+            f"{c} {series.schema[c].dataType.simpleString()}" for c in idc
         )
+        return series.mapInArrow(run, f"{id_schema}, {_TIER_COLUMNS}")
 
     # ------------------------------------------------------------- retention
 
@@ -300,12 +260,9 @@ class RollupEngine:
         staging = f"{path}.retention-staging"
         kept.write.mode("overwrite").parquet(staging)
 
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(conf)
-        fs.delete(hpath, True)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath)
+        fs, hpath = self._fs()
+        fs.delete(hpath(path), True)
+        fs.rename(hpath(staging), hpath(path))
 
         after = sum(n for _, n, _ in self.manifest.footer_counts(path))
         self.manifest.record_tier(
@@ -319,52 +276,39 @@ class RollupEngine:
         """Run the cascade; returns {tier_name: path}.  ``raw_points`` must
         have columns id_cols + (ts: long epoch seconds, value: double).
 
-        Resume: tiers already holding a COMMIT record for this job_id are
-        skipped; downstream tiers read their stored payloads.
+        One write persists every tier not yet committed for this job_id,
+        then each gets its COMMIT.  Resume: committed tiers are skipped and
+        their files left untouched; the rest are recomputed from
+        ``raw_points``.
         """
-        committed = self.manifest.committed_tiers(job_id)
-        out: dict[str, str] = {}
-
         from tsfresh_spark.plans.profiling import StageProfiler
 
-        def do_tier(name: str, compute, lineage: str):
-            if name in committed:
-                out[name] = self.tier_path(name)
-                return False
-            # profile the tier's stages (scoped by a job tag, so the cost is
-            # O(stages of this tier) and other threads' jobs stay out) and
-            # persist the summary with the COMMIT lineage — the per-tier
-            # compute/shuffle/spill record the 100-TB tuning loop reads.
+        lineage = {"raw": "raw<-input", "base": "base<-input(gapfill)"}
+        names = ["raw", "base", *(spec.name for spec in self.tiers)]
+        committed = self.manifest.committed_tiers(job_id)
+        todo = [name for name in names if name not in committed]
+        if todo:
+            # profile the write's stages (scoped by a job tag, so the cost
+            # is O(stages of this job) and other threads' jobs stay out) and
+            # persist the summary with every COMMIT lineage: the one shared
+            # pass's compute/shuffle/spill, which the 100-TB tuning loop reads.
             with StageProfiler(self.spark) as prof:
-                self._write(compute(), name)
+                self._write(self.cascade(raw_points), todo)
             s = prof.summary()
-            lineage = (
-                f"{lineage} profile(run_ms={s['executor_run_time_ms']},"
+            profile = (
+                f"profile(run_ms={s['executor_run_time_ms']},"
                 f"cpu_ms={s['executor_cpu_time_ms']},"
                 f"shuffle_w={s['shuffle_write_bytes']},"
                 f"shuffle_r={s['shuffle_read_bytes']},"
                 f"spill={s['memory_spilled_bytes'] + s['disk_spilled_bytes']},"
                 f"stages={s['num_stages']},tasks={s['num_tasks']})"
             )
-            self.manifest.record_tier(job_id, name, self.tier_path(name), lineage)
-            out[name] = self.tier_path(name)
-            return True
-
-        do_tier("raw", lambda: self._archive_tier(raw_points), "raw<-input")
-        do_tier("base", lambda: self.compute_base(raw_points), "base<-input(gapfill)")
-        for spec in self.tiers:
-            do_tier(
-                spec.name,
-                lambda spec=spec: self.compute_tier(
-                    self.spark.read.parquet(self.tier_path("base")), spec.window_seconds
-                ),
-                f"{spec.name}<-base",
-            )
-        return out
-
-
-def _window_start(window_seconds: int) -> Column:
-    return (F.col("ts") - F.pmod("ts", F.lit(window_seconds))).cast("long").alias("window_start")
+            for name in todo:
+                self.manifest.record_tier(
+                    job_id, name, self.tier_path(name),
+                    f"{lineage.get(name, f'{name}<-base')} {profile}",
+                )
+        return {name: self.tier_path(name) for name in names}
 
 
 def _flatten(series) -> tuple:
@@ -375,10 +319,6 @@ def _flatten(series) -> tuple:
     np.cumsum([len(t) for t, _ in series], out=offsets[1:])
     ts = np.concatenate([np.empty(0, np.int64), *(t for t, _ in series)])
     return offsets, ts, np.concatenate([np.empty(0), *(v for _, v in series)])
-
-
-def _decode(payloads: pa.Array) -> tuple:
-    return _flatten(map(decode_series, payloads.to_pylist()))
 
 
 def _fill_series(ts: np.ndarray, vals: np.ndarray, step: int, method: str):
