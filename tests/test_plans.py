@@ -242,7 +242,7 @@ def test_grouped_extraction_pins_partition_count(spark):
     group keys (REPARTITION_BY_NUM) so AQE cannot byte-coalesce the
     compute-bound kernel stage down to 1-2 partitions (the regression that
     ran the kernels on 2 cores).  The count is max(shuffle partitions,
-    2×parallelism)."""
+    defaultParallelism): one wave of tasks, one per core."""
     import pandas as pd
 
     from tsfresh_spark.extract import extract_features_long
@@ -260,7 +260,37 @@ def test_grouped_extraction_pins_partition_count(spark):
     assert "REPARTITION_BY_NUM" in plan, plan[:600]
     want = max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
-        2 * spark.sparkContext.defaultParallelism,
+        spark.sparkContext.defaultParallelism,
     )
     # the pinned partition count survives planning
     assert f", {want}), REPARTITION_BY_NUM" in plan, plan[:600]
+
+
+def test_long_map_runs_in_one_wave(spark):
+    """The long path's ``MapInArrow`` runs in exactly one completed stage,
+    on max(shuffle partitions, defaultParallelism) tasks: one wave, one
+    task per core, so each Python task's fixed cost is paid once per core."""
+    from tsfresh_spark.extract import extract_features_long
+    from tsfresh_spark.plans.profiling import StageProfiler
+
+    n = max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
+    df = spark.range(0, 64 * n).select(
+        (F.col("id") % (4 * n)).alias("id"),
+        (F.col("id") % 2).cast("string").alias("kind"),
+        F.col("id").alias("time"),
+        (F.col("id") % 7).cast("double").alias("value"),
+    )
+    with StageProfiler(spark) as prof:
+        extract_features_long(df, {"mean": None}).collect()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    graph = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    maps = [
+        m.num_tasks
+        for m in prof.stages
+        if m.status == "COMPLETE"
+        and 'label="MapInArrow"' in graph.makeDotFile(store.operationGraphForStage(m.stage_id))
+    ]
+    assert maps == [n], maps

@@ -135,6 +135,36 @@ def test_resume_skips_committed_tiers(spark, engine, raw_points):
         assert os.path.getmtime(path) == mtimes[tier], f"{tier} was rewritten"
 
 
+@pytest.mark.parametrize(
+    "change",
+    [
+        lambda pts: pts.where(F.col("doc_id") == "d1"),  # fewer rows
+        # as many rows, one series' values moved
+        lambda pts: pts.withColumn(
+            "value", F.when(F.col("doc_id") == "d1", F.col("value")).otherwise(F.col("value") + 1)
+        ),
+    ],
+    ids=["fewer_rows", "same_count"],
+)
+def test_resume_rejects_a_different_input(spark, engine, raw_points, change):
+    """Each COMMIT carries its input's fingerprint: a re-run of a committed
+    job_id with a different input raises, naming the job_id, and writes no
+    tier and no COMMIT; the same input again writes no new COMMIT."""
+    def commits():
+        return (
+            spark.read.parquet(engine.manifest.path).filter(F.col("partition_id") == -1).count()
+        )
+
+    mtimes = {tier: os.path.getmtime(path) for tier, path in engine.paths.items()}
+    before = commits()
+    with pytest.raises(ValueError, match="job-A"):
+        engine.run(change(raw_points), job_id="job-A")
+    assert commits() == before
+    engine.run(raw_points, job_id="job-A")
+    assert commits() == before
+    assert {t: os.path.getmtime(p) for t, p in engine.paths.items()} == mtimes
+
+
 def test_fresh_job_id_recomputes(spark, engine, raw_points):
     assert engine.manifest.committed_tiers("job-B") == set()
 

@@ -19,18 +19,30 @@ codegen); the per-series work — kernels, and in the rollup also gap-fill
 and the codec — crosses the Arrow boundary once per batch.
 """
 
-from tsfresh_spark.settings import (  # noqa: F401
-    comprehensive_settings,
-    efficient_settings,
-    index_based_settings,
-    minimal_settings,
-    settings_from_feature_names,
-    time_based_settings,
-)
-from tsfresh_spark.extract import (  # noqa: F401
-    extract_features_long,
-    extract_features_tokens,
-    pivot_features,
-)
+# names resolve on first use (PEP 562): ``python -m tsfresh_spark.worker_daemon``
+# runs this file before the daemon forks, and must not load numpy, pandas
+# or pyarrow into every worker it forks
+_EXPORTS = {
+    "comprehensive_settings": "settings",
+    "efficient_settings": "settings",
+    "index_based_settings": "settings",
+    "minimal_settings": "settings",
+    "settings_from_feature_names": "settings",
+    "time_based_settings": "settings",
+    "extract_features_long": "extract",
+    "extract_features_tokens": "extract",
+    "pivot_features": "extract",
+}
+__all__ = sorted(_EXPORTS)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    import importlib
+
+    value = getattr(importlib.import_module(f"{__name__}.{_EXPORTS[name]}"), name)
+    globals()[name] = value
+    return value

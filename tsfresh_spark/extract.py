@@ -400,7 +400,8 @@ def extract_features_long(
     compute-bound, so AQE's byte-based partition coalescing misjudges it
     badly — a few-MB long frame coalesces to 1-2 partitions and the whole
     kernel evaluation runs on 1-2 cores.  The pinned count is
-    max(shuffle partitions, 2×parallelism).
+    max(shuffle partitions, defaultParallelism), so the map runs in one
+    wave and pays each Python task's fixed cost once per core.
     """
     from tsfresh_spark.plans.partitioning import pin_group_partitions
 

@@ -34,8 +34,10 @@ tier under ``tier=<name>`` and leaves every other directory of the base
 path alone.  No range exchange ever sits above the map: range partitioning
 samples its input with a separate job, which would run the map twice.
 Each written tier is then recorded in the manifest with per-file row/byte
-metrics and a COMMIT record; a re-run of the same job_id writes only the
-uncommitted tiers (resume from checkpoint; the map is deterministic).
+metrics and a COMMIT record that carries the input's fingerprint; a
+re-run of the same job_id with the same input writes only the uncommitted
+tiers (resume from checkpoint; the map is deterministic), and one with a
+different input is refused.
 
 Timestamps are epoch seconds (int64) throughout the engine — integer window
 arithmetic (``ts - ts % step``) is exact, codegen-friendly, and avoids
@@ -44,6 +46,7 @@ timezone semantics entirely.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import numpy as np
@@ -55,6 +58,7 @@ from pyspark.sql import functions as F
 from tsfresh_spark.extract import _feature_map
 from tsfresh_spark.functions.codec import encode_series
 from tsfresh_spark.plans.manifest import Manifest
+from tsfresh_spark.plans.partitioning import one_wave_partitions
 
 DAY = 86400
 _FEATURES = pa.map_(pa.string(), pa.float64())
@@ -144,19 +148,14 @@ class RollupEngine:
 
     # ---------------------------------------------------- compute layout
 
-    def _spread_count(self) -> int:
-        """Partitions the window map runs on: every core, and at least the
-        session's shuffle partitions.  An explicit count, so AQE keeps it
-        (byte-coalescing would run a small compute-bound map on one core)."""
-        sc = self.spark.sparkContext
-        return max(int(self.spark.conf.get("spark.sql.shuffle.partitions")), sc.defaultParallelism)
-
     def _spread(self, points: DataFrame) -> DataFrame:
         """Range-partition raw points on ``doc_id`` ahead of the per-series
         ``groupBy``: the range sample reads only the input, and the
         aggregate reuses the exchange (range on ``doc_id`` clusters every
-        key set that contains it)."""
-        return points.repartitionByRange(self._spread_count(), self.id_cols[0])
+        key set that contains it).  An explicit count, one task per core
+        (:func:`one_wave_partitions`), so AQE keeps it: byte-coalescing
+        would run a small compute-bound map on one core."""
+        return points.repartitionByRange(one_wave_partitions(self.spark), self.id_cols[0])
 
     def _chunk_points(self, points: DataFrame) -> DataFrame:
         """points (id..., ts long, value double) → one row per series with
@@ -280,34 +279,67 @@ class RollupEngine:
         then each gets its COMMIT.  Resume: committed tiers are skipped and
         their files left untouched; the rest are recomputed from
         ``raw_points``.
+
+        Every COMMIT lineage carries the input's fingerprint,
+        ``input(rows=<count>,xxhash64=<bit_xor of the rows' xxhash64>)``,
+        one aggregate over ``raw_points``.  A ``job_id`` committed for a
+        different input raises ``ValueError`` before anything is written,
+        instead of resuming to the other input's tiers; a COMMIT without a
+        fingerprint (a retention commit) is accepted.  The aggregate runs
+        in a second thread, beside the manifest read and the write: on its
+        own it is one more Spark job, about 0.25 s on ``local[4]``, which a
+        job's whole cascade of a few seconds would wait for.
         """
         from tsfresh_spark.plans.profiling import StageProfiler
 
         lineage = {"raw": "raw<-input", "base": "base<-input(gapfill)"}
         names = ["raw", "base", *(spec.name for spec in self.tiers)]
-        committed = self.manifest.committed_tiers(job_id)
-        todo = [name for name in names if name not in committed]
-        if todo:
-            # profile the write's stages (scoped by a job tag, so the cost
-            # is O(stages of this job) and other threads' jobs stay out) and
-            # persist the summary with every COMMIT lineage: the one shared
-            # pass's compute/shuffle/spill, which the 100-TB tuning loop reads.
-            with StageProfiler(self.spark) as prof:
-                self._write(self.cascade(raw_points), todo)
-            s = prof.summary()
-            profile = (
-                f"profile(run_ms={s['executor_run_time_ms']},"
-                f"cpu_ms={s['executor_cpu_time_ms']},"
-                f"shuffle_w={s['shuffle_write_bytes']},"
-                f"shuffle_r={s['shuffle_read_bytes']},"
-                f"spill={s['memory_spilled_bytes'] + s['disk_spilled_bytes']},"
-                f"stages={s['num_stages']},tasks={s['num_tasks']})"
-            )
-            for name in todo:
-                self.manifest.record_tier(
-                    job_id, name, self.tier_path(name),
-                    f"{lineage.get(name, f'{name}<-base')} {profile}",
+
+        def fingerprint() -> str:
+            rows, digest = raw_points.agg(
+                F.count(F.lit(1)),
+                F.coalesce(F.bit_xor(F.xxhash64(*self.id_cols, "ts", "value")), F.lit(0)),
+            ).first()
+            return f"input(rows={rows},xxhash64={digest})"
+
+        with ThreadPoolExecutor(1) as pool:
+            pending = pool.submit(fingerprint)
+            commits = self.manifest.commits(job_id)
+            stale = sorted(
+                tier
+                for tier, lineages in commits.items()
+                if any(
+                    "input(rows=" in text and pending.result() not in text for text in lineages
                 )
+            )
+            if stale:
+                raise ValueError(
+                    f"job_id {job_id!r} committed tiers {stale} for a different input "
+                    f"than this {pending.result()}; use a new job_id for new input"
+                )
+            todo = [name for name in names if name not in commits]
+            if todo:
+                # profile the write's stages (scoped by a job tag, so the
+                # cost is O(stages of this job) and other threads' jobs,
+                # the fingerprint's among them, stay out) and persist the
+                # summary with every COMMIT lineage: the one shared pass's
+                # compute/shuffle/spill, which the 100-TB tuning loop reads.
+                with StageProfiler(self.spark) as prof:
+                    self._write(self.cascade(raw_points), todo)
+                s = prof.summary()
+                profile = (
+                    f"profile(run_ms={s['executor_run_time_ms']},"
+                    f"cpu_ms={s['executor_cpu_time_ms']},"
+                    f"shuffle_w={s['shuffle_write_bytes']},"
+                    f"shuffle_r={s['shuffle_read_bytes']},"
+                    f"spill={s['memory_spilled_bytes'] + s['disk_spilled_bytes']},"
+                    f"stages={s['num_stages']},tasks={s['num_tasks']})"
+                )
+                for name in todo:
+                    self.manifest.record_tier(
+                        job_id, name, self.tier_path(name),
+                        f"{lineage.get(name, f'{name}<-base')} {profile} {pending.result()}",
+                    )
         return {name: self.tier_path(name) for name in names}
 
 

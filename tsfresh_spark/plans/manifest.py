@@ -52,20 +52,26 @@ class Manifest:
         except Exception:
             return None
 
-    def committed_tiers(self, job_id: str) -> set[str]:
+    def commits(self, job_id: str) -> dict[str, list[str]]:
+        """``{tier: [lineage, ...]}`` of every COMMIT record of ``job_id``."""
         df = self._read()
         if df is None:
-            return set()
+            return {}
         rows = (
             df.filter(
                 (F.col("job_id") == job_id)
                 & (F.col("partition_id") == COMMIT_PARTITION_ID)
             )
-            .select("tier")
-            .distinct()
+            .select("tier", "lineage")
             .collect()
         )
-        return {r["tier"] for r in rows}
+        out: dict[str, list[str]] = {}
+        for r in rows:
+            out.setdefault(r["tier"], []).append(r["lineage"])
+        return out
+
+    def committed_tiers(self, job_id: str) -> set[str]:
+        return set(self.commits(job_id))
 
     def tier_metrics(self, job_id: str, tier: str) -> list[dict]:
         """Per-file rows of the latest commit of ``(job_id, tier)`` — all

@@ -2,14 +2,28 @@
 
 AQE sizes shuffle partitions by bytes, which suits byte-bound stages but
 starves a compute-bound per-group Python stage: a few-MB frame coalesces
-to one or two partitions.  :func:`pin_group_partitions` gives such a stage
-an explicit partition count, which AQE keeps.  Skewed *joins* need nothing
-here: AQE's skew-join splitting is on in ``session.build_session``.
+to one or two partitions.  Such a stage gets an explicit partition count,
+which AQE keeps: :func:`one_wave_partitions`, one task per core, so the
+stage runs in one wave and pays each Python task's fixed cost once per
+core (on ``local[4]`` each further wave of a long-format job cost
+0.05–0.1 s).  A job larger than
+one task per core gets its count from ``spark.sql.shuffle.partitions``.
+Skewed *joins* need nothing here: AQE's skew-join splitting is on in
+``session.build_session``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+
+def one_wave_partitions(spark: SparkSession) -> int:
+    """Partitions of a compute-bound Python stage: max(shuffle partitions,
+    defaultParallelism), one wave on every core."""
+    return max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        spark.sparkContext.defaultParallelism,
+    )
 
 
 def pin_group_partitions(df: DataFrame, *keys: str) -> DataFrame:
@@ -20,10 +34,5 @@ def pin_group_partitions(df: DataFrame, *keys: str) -> DataFrame:
     is honored by AQE, and the downstream ``groupBy(keys)`` (an
     ``applyInPandas``, or the ``collect_list`` feeding ``mapInArrow`` in the
     long path) reuses the exchange, so no extra shuffle.
-    The count is max(shuffle partitions, 2×parallelism)."""
-    sess = df.sparkSession
-    num_partitions = max(
-        int(sess.conf.get("spark.sql.shuffle.partitions", "200")),
-        sess.sparkContext.defaultParallelism * 2,
-    )
-    return df.repartition(num_partitions, *keys)
+    The count is :func:`one_wave_partitions`."""
+    return df.repartition(one_wave_partitions(df.sparkSession), *keys)
