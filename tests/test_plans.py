@@ -1,6 +1,8 @@
 """Physical-plan contracts: pushdown and shuffle discipline —
 the properties that make the operators survive a 100x scale-up."""
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -266,10 +268,10 @@ def test_grouped_extraction_pins_partition_count(spark):
     assert f", {want}), REPARTITION_BY_NUM" in plan, plan[:600]
 
 
-def test_long_map_runs_in_one_wave(spark):
-    """The long path's ``MapInArrow`` runs in exactly one completed stage,
-    on max(shuffle partitions, defaultParallelism) tasks: one wave, one
-    task per core, so each Python task's fixed cost is paid once per core."""
+def _long_map_tasks(spark, kind) -> tuple[int, list, str]:
+    """One-wave count n, the task counts of the completed stages that run
+    the long path's ``MapInArrow``, and its executed plan, for a frame of
+    4n series whose kind column is ``kind``."""
     from tsfresh_spark.extract import extract_features_long
     from tsfresh_spark.plans.profiling import StageProfiler
 
@@ -279,12 +281,13 @@ def test_long_map_runs_in_one_wave(spark):
     )
     df = spark.range(0, 64 * n).select(
         (F.col("id") % (4 * n)).alias("id"),
-        (F.col("id") % 2).cast("string").alias("kind"),
+        kind.alias("kind"),
         F.col("id").alias("time"),
         (F.col("id") % 7).cast("double").alias("value"),
     )
+    out = extract_features_long(df, {"mean": None})
     with StageProfiler(spark) as prof:
-        extract_features_long(df, {"mean": None}).collect()
+        out.collect()
     store = spark.sparkContext._jsc.sc().statusStore()
     graph = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph
     maps = [
@@ -293,4 +296,28 @@ def test_long_map_runs_in_one_wave(spark):
         if m.status == "COMPLETE"
         and 'label="MapInArrow"' in graph.makeDotFile(store.operationGraphForStage(m.stage_id))
     ]
+    return n, maps, _plan(out)
+
+
+def test_long_map_runs_in_one_wave(spark):
+    """The long path's ``MapInArrow`` runs in exactly one completed stage,
+    on max(shuffle partitions, defaultParallelism) tasks: one wave, one
+    task per core, so each Python task's fixed cost is paid once per core."""
+    n, maps, plan = _long_map_tasks(spark, (F.col("id") % 2).cast("string"))
+    assert maps == [n], maps
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange ") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(id#\d+L?, kind#\d+, \d+\)", final), plan
+
+
+def test_literal_kind_long_map_runs_in_one_wave(spark):
+    """A literal kind column gets the same plan shape: one exchange, pinned
+    on the id alone, below the map, which runs on the one-wave count of
+    tasks.  Pinned on (id, kind), Catalyst folds the literal into the
+    aggregate's keys, adds a second exchange and AQE coalesces it to one
+    task."""
+    n, maps, plan = _long_map_tasks(spark, F.lit("a"))
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Exchange ") == 1, plan
+    assert re.search(r"Exchange hashpartitioning\(id#\d+L?, \d+\)", final), plan
     assert maps == [n], maps

@@ -34,10 +34,11 @@ tier under ``tier=<name>`` and leaves every other directory of the base
 path alone.  No range exchange ever sits above the map: range partitioning
 samples its input with a separate job, which would run the map twice.
 Each written tier is then recorded in the manifest with per-file row/byte
-metrics and a COMMIT record that carries the input's fingerprint; a
-re-run of the same job_id with the same input writes only the uncommitted
-tiers (resume from checkpoint; the map is deterministic), and one with a
-different input is refused.
+metrics and a COMMIT record that carries the input's fingerprint: one
+small Parquet file per tier, created through the Hadoop FS API, so a
+commit runs no Spark job.  A re-run of the same job_id with the same
+input writes only the uncommitted tiers (resume from checkpoint; the map
+is deterministic), and one with a different input is refused.
 
 Timestamps are epoch seconds (int64) throughout the engine — integer window
 arithmetic (``ts - ts % step``) is exact, codegen-friendly, and avoids
@@ -57,7 +58,7 @@ from pyspark.sql import functions as F
 
 from tsfresh_spark.extract import _feature_map
 from tsfresh_spark.functions.codec import encode_series
-from tsfresh_spark.plans.manifest import Manifest
+from tsfresh_spark.plans.manifest import Manifest, hadoop_fs
 from tsfresh_spark.plans.partitioning import one_wave_partitions
 
 DAY = 86400
@@ -110,13 +111,6 @@ class RollupEngine:
     def tier_path(self, tier: str) -> str:
         return f"{self.base_path.rstrip('/')}/tier={tier}"
 
-    def _fs(self):
-        """The Hadoop filesystem of the base path and its ``Path`` class."""
-        jvm = self.spark._jvm
-        conf = self.spark._jsc.hadoopConfiguration()
-        fs = jvm.org.apache.hadoop.fs.Path(self.base_path).getFileSystem(conf)
-        return fs, jvm.org.apache.hadoop.fs.Path
-
     def _write(self, frame: DataFrame, tiers: list[str]) -> None:
         """Persist the ``tiers`` of a :meth:`cascade` frame in one write.
 
@@ -130,7 +124,7 @@ class RollupEngine:
         and the committed tiers alone.  A job with no points gives no tier
         a row, so each then gets a schema-only file and reads back as an
         empty frame."""
-        fs, path = self._fs()
+        fs, path = hadoop_fs(self.spark, self.base_path)
         for name in tiers:
             fs.delete(path(self.tier_path(name)), True)
         doc_col = self.id_cols[0]
@@ -259,7 +253,7 @@ class RollupEngine:
         staging = f"{path}.retention-staging"
         kept.write.mode("overwrite").parquet(staging)
 
-        fs, hpath = self._fs()
+        fs, hpath = hadoop_fs(self.spark, self.base_path)
         fs.delete(hpath(path), True)
         fs.rename(hpath(staging), hpath(path))
 

@@ -17,14 +17,22 @@ resume criterion.  Data is written before its commit record (write-ahead on
 data), so a crash between the two leaves a re-runnable, never a corrupt,
 tier.
 
-A commit costs O(files of the tier): per-file row counts come from the
-Parquet footers and byte counts from the file listing (Hadoop FS API, no
-read-back job), and the rows are appended from an Arrow-built local frame.
+A commit costs O(files of the tier) and runs no Spark job: per-file row
+counts come from the Parquet footers and byte counts from the file listing
+(Hadoop FS API, no read-back job), and the rows go to storage as one
+Parquet file built in memory with pyarrow and created through the Hadoop
+FS API, as a table format commits a snapshot by creating one file.  Files
+written by Spark's own Parquet writer, as earlier versions appended them,
+read together with these as one frame.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import uuid
+from datetime import datetime, timezone
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,9 +41,25 @@ MANIFEST_SCHEMA = (
     "job_id string, tier string, partition_id int, row_count long, "
     "byte_count long, committed_at timestamp, lineage string"
 )
-MANIFEST_COLUMNS = [field.split()[0] for field in MANIFEST_SCHEMA.split(", ")]
+# the same columns as Parquet types: committed_at is a UTC instant, which
+# Spark reads as its session-zone ``timestamp``
+_ARROW_TYPES = {
+    "string": pa.string(),
+    "int": pa.int32(),
+    "long": pa.int64(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+_ARROW_SCHEMA = pa.schema(
+    [(name, _ARROW_TYPES[kind]) for name, kind in map(str.split, MANIFEST_SCHEMA.split(", "))]
+)
 
 COMMIT_PARTITION_ID = -1
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """The Hadoop filesystem of ``path`` and the Hadoop ``Path`` class."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    return hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()), hpath
 
 
 class Manifest:
@@ -47,10 +71,18 @@ class Manifest:
     # -- read side ---------------------------------------------------------
 
     def _read(self) -> DataFrame | None:
-        try:
-            return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
-        except Exception:
+        """The manifest rows, or None when no manifest directory exists.
+
+        Existence is a Hadoop FS ``exists`` check (a few ms, no Spark path
+        resolution), not a catch-all around the read: a manifest that
+        exists but cannot be read raises, where reading the failure as
+        "nothing committed" would make ``run()`` delete and rewrite
+        committed tiers.  A directory that holds only a crashed commit's
+        ``_tmp-`` file reads as no rows."""
+        fs, path = hadoop_fs(self.spark, self.path)
+        if not fs.exists(path(self.path)):
             return None
+        return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def commits(self, job_id: str) -> dict[str, list[str]]:
         """``{tier: [lineage, ...]}`` of every COMMIT record of ``job_id``."""
@@ -124,12 +156,18 @@ class Manifest:
 
         Row counts come from the written files' Parquet footers, so they
         are what is actually on storage, not what the writing job believed;
-        zero-row files get no record.  The rows go through an Arrow-built
-        local frame: one small write job, no Python worker.
+        zero-row files get no record.  The rows of one call are one Parquet
+        file, serialised in memory with pyarrow, created through the Hadoop
+        FS API with overwrite off as ``_tmp-<uuid>.parquet`` and renamed to
+        ``part-<uuid>.parquet``: no Spark job runs.  Spark readers skip
+        ``_``-prefixed files, so a crash before the rename leaves a hidden
+        leftover and no row; on a local filesystem or HDFS the rename makes
+        the file visible whole or not at all.  On an object store a rename
+        is a copy, so a reader racing the commit could see a partial file.
         """
         files = self.footer_counts(data_path)
         # tz-aware, so the stored instant is right whatever the session zone
-        now = pd.Timestamp.now(tz="UTC")
+        now = datetime.now(timezone.utc)
         rows = [
             (job_id, tier, idx, n_rows, n_bytes, now, f"{lineage} file={name}")
             for idx, (name, n_rows, n_bytes) in enumerate(files)
@@ -147,10 +185,15 @@ class Manifest:
                 f"{lineage} COMMIT files={len(files)}",
             )
         )
-        pdf = pd.DataFrame(rows, columns=MANIFEST_COLUMNS)
-        (
-            self.spark.createDataFrame(pdf, MANIFEST_SCHEMA)
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(self.path)
-        )
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.table(list(zip(*rows)), schema=_ARROW_SCHEMA), buf)
+        fs, path = hadoop_fs(self.spark, self.path)
+        name = f"{uuid.uuid4().hex}.parquet"
+        tmp = path(self.path, f"_tmp-{name}")
+        out = fs.create(tmp, False)
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        if not fs.rename(tmp, path(self.path, f"part-{name}")):
+            raise OSError(f"manifest commit: could not rename {tmp.toString()} to part-{name}")

@@ -34,5 +34,32 @@ def pin_group_partitions(df: DataFrame, *keys: str) -> DataFrame:
     is honored by AQE, and the downstream ``groupBy(keys)`` (an
     ``applyInPandas``, or the ``collect_list`` feeding ``mapInArrow`` in the
     long path) reuses the exchange, so no extra shuffle.
-    The count is :func:`one_wave_partitions`."""
-    return df.repartition(one_wave_partitions(df.sparkSession), *keys)
+    The count is :func:`one_wave_partitions`.
+
+    A constant key (a literal kind, ``F.lit("a").alias("kind")``) is left
+    out of the hash: Catalyst folds it into the aggregate's grouping, so a
+    hash on the key's attribute no longer satisfies the aggregate, which
+    then adds a second exchange that AQE coalesces to one task.  A hash on
+    the other keys satisfies the same clustering."""
+    constant = _constant_columns(df, keys)
+    pinned = [k for k in keys if k not in constant] or list(keys)
+    return df.repartition(one_wave_partitions(df.sparkSession), *pinned)
+
+
+def _constant_columns(df: DataFrame, keys) -> set[str]:
+    """The ``keys`` that the optimizer folds to a constant: those the top
+    projection of ``df``'s optimized plan computes as foldable
+    expressions.  The frame keeps its optimized plan, so a frame that is
+    extracted again pays for the optimizer once."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.nodeName() != "Project":
+        return set()
+    exprs, columns = plan.projectList(), df.columns
+    out = set()
+    for key in keys:
+        if key not in columns:
+            continue
+        expr = exprs.apply(columns.index(key))
+        if (expr.child() if expr.nodeName() == "Alias" else expr).foldable():
+            out.add(key)
+    return out
