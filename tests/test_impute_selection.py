@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 
 from tsfresh_spark.operators.impute import (
+    impute_dataframe_range,
     impute_long,
     impute_wide,
     impute_zero,
@@ -29,11 +30,17 @@ def test_impute_wide(spark):
             "c": [NAN, NAN, NAN, NAN],
         }
     )
-    out = impute_wide(spark.createDataFrame(pdf), ["a", "b", "c"]).toPandas()
+    df = spark.createDataFrame(pdf)
+    out = impute_wide(df, ["a", "b", "c"]).toPandas()
     out = out.sort_values("id")
     assert out.a.tolist() == [1.0, 2.0, 2.0, 4.0]  # NaN → median
     assert out.b.tolist() == [5.0, 5.0, 7.0, 7.0]  # ±inf → min/max
     assert out.c.tolist() == [0.0, 0.0, 0.0, 0.0]  # all-non-finite → 0
+    # an explicit range must be finite: NaN, inf or None as min, max or
+    # median raises before any job runs
+    for bad in ((NAN, 1.0, 1.0), (1.0, INF, 1.0), (1.0, 1.0, None)):
+        with pytest.raises(ValueError, match="not finite"):
+            impute_dataframe_range(df, {"a": bad})
 
 
 def test_impute_long_matches_wide(spark):

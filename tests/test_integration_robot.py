@@ -1,18 +1,14 @@
 """End-to-end replica of the reference's robot-execution-failures pipeline
 (/root/reference/tests/integrations/test_full_pipeline.py): wide 88×15×6
-frame → melt → extract → impute → select → augmented matrix.  Hermetic via
-the deterministic clone (FIXTURES.md F4)."""
-
-import numpy as np
-import pandas as pd
-import pytest
+frame → melt → extract → impute → pivot → select.  Hermetic via the
+deterministic clone (FIXTURES.md F4)."""
 
 from pyspark.sql import functions as F
 
 from tsfresh_spark.extract import extract_features_long, melt_wide, pivot_features
 from tsfresh_spark.operators.impute import impute_long
-from tsfresh_spark.operators.transformers import RelevantFeatureAugmenter
-from tsfresh_spark.settings import minimal_settings
+from tsfresh_spark.operators.selection import select_features
+from tsfresh_spark.settings import minimal_settings, settings_from_feature_names
 from tsfresh_spark.sources.synthetic import robot_failures_clone
 
 
@@ -29,13 +25,10 @@ def test_full_pipeline(spark):
         column_sort="time",
     )
     imputed = impute_long(feats)
-    wide_feats = pivot_features(imputed.drop("kind"), id_cols="id")
-    n_rows = wide_feats.count()
-    assert n_rows == 88
+    wide_feats = pivot_features(imputed.drop("kind"), id_cols="id").cache()
+    assert wide_feats.count() == 88
     assert len(wide_feats.columns) == 1 + 6 * len(minimal_settings())
     # feature-name grammar: every column parses back
-    from tsfresh_spark.settings import settings_from_feature_names
-
     rebuilt = settings_from_feature_names([c for c in wide_feats.columns if c != "id"])
     assert set(rebuilt) == {"F_x", "F_y", "F_z", "T_x", "T_y", "T_z"}
 
@@ -45,14 +38,8 @@ def test_full_pipeline(spark):
         wide.groupBy("id").agg(F.avg("F_x").alias("m")).toPandas().set_index("id").m
     )
     y = (fx_mean > fx_mean.median()).astype(int)
-    pipeline = RelevantFeatureAugmenter(
-        minimal_settings(),
-        long_df,
-        column_sort="time",
-    )
-    X = spark.createDataFrame(pd.DataFrame({"id": sorted(y.index)}))
-    out = pipeline.fit_transform(X, y).toPandas()
-    kept = set(out.columns) - {"id"}
+    selected, table = select_features(wide_feats, y, id_col="id")
+    kept = set(selected.columns) - {"id"}
     assert any(c.startswith("F_x__") for c in kept)
-    table = pipeline.selector.relevance_table
     assert (table.p_value.dropna() <= 1).all()
+    wide_feats.unpersist()

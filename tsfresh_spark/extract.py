@@ -135,17 +135,16 @@ def compute_series_features(
     kind: str,
     settings: dict,
     timestamps: pd.Index | None = None,
-    show_warnings: bool = False,
 ) -> Iterator[tuple[str, float]]:
     """Evaluate every configured kernel on one series; yields
     ``(feature_name, value)`` with values coerced to float64.  The plan is
     compiled from ``settings`` as they are now, so a dict changed between
     calls is never served a stale plan."""
-    yield from _run_series(_CompiledPlan(settings, kind), values, timestamps, show_warnings)
+    yield from _run_series(_CompiledPlan(settings, kind), values, timestamps)
 
 
 def _run_series(
-    plan: _CompiledPlan, values, timestamps=None, show_warnings: bool = False
+    plan: _CompiledPlan, values, timestamps=None
 ) -> Iterator[tuple[str, float]]:
     """Run a compiled plan on one series.
 
@@ -158,7 +157,7 @@ def _run_series(
     series = None  # built lazily, only if some kernel needs pandas input
     try:
         with warnings.catch_warnings():
-            warnings.simplefilter("default" if show_warnings else "ignore")
+            warnings.simplefilter("ignore")
             for name, info, parameter_list, prefix, names, batched in plan.entries:
                 if info.requires_timestamps and not isinstance(
                     timestamps, pd.DatetimeIndex
@@ -463,101 +462,6 @@ def melt_wide(
     return df.unpivot(
         ids=fixed, values=value_columns, variableColumnName="kind",
         valueColumnName="value",
-    )
-
-
-def _check_kind_name(kind) -> None:
-    """Kind names feed feature-column names (``kind__calculator__params``),
-    so they must not collide with the ``from_columns`` parser — the
-    reference's ``_check_colname`` contract (data.py:124-146)."""
-    s = str(kind)
-    if s.endswith("_"):
-        raise ValueError(f"Dict keys are not allowed to end with '_': {s}")
-    if "__" in s:
-        raise ValueError(f"Dict keys are not allowed to contain '__': {s}")
-
-
-def union_dict_of_kinds(
-    ts_dict: dict,
-    *,
-    column_id: str,
-    column_value: str,
-    column_sort: str | list[str] | None = None,
-    column_kind: str = "kind",
-) -> DataFrame:
-    """Dict-of-kinds → one long frame: each ``{kind: DataFrame}`` entry
-    contributes its ``(id, sort?, value)`` columns tagged with a literal
-    kind column — the Spark equivalent of the reference's ``TsDictAdapter``
-    (data.py:294-338; dispatch arm at data.py:502-503).
-
-    The union is narrow (no shuffle); the one grouping shuffle happens
-    downstream in :func:`extract_features_long`.  Kind keys are validated
-    against the ``from_columns`` naming contract, and column presence is
-    checked eagerly per frame (schema-only — free), mirroring the
-    adapter's ValueError surface."""
-    if not ts_dict:
-        raise ValueError("ts_dict must contain at least one kind")
-    if column_id is None or column_value is None:
-        raise ValueError(
-            "column_id and column_value are required for dict input"
-        )
-    sort_cols = (
-        []
-        if column_sort is None
-        else ([column_sort] if isinstance(column_sort, str) else list(column_sort))
-    )
-    needed = [column_id, *sort_cols, column_value]
-    if column_kind in needed:
-        raise ValueError(
-            f"column_kind={column_kind!r} collides with an input column"
-        )
-    frames = []
-    for kind, df in ts_dict.items():
-        _check_kind_name(kind)
-        missing = [c for c in needed if c not in df.columns]
-        if missing:
-            raise ValueError(
-                f"Column(s) {missing} missing from the frame for kind {kind!r}"
-            )
-        frames.append(
-            df.select(*needed).withColumn(column_kind, F.lit(str(kind)))
-        )
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def extract_features_dict(
-    ts_dict: dict,
-    settings: dict,
-    *,
-    column_id: str,
-    column_value: str,
-    column_sort: str | list[str] | None = None,
-    column_kind: str = "kind",
-    kind_to_settings: dict | None = None,
-) -> DataFrame:
-    """Extract features from a ``{kind: DataFrame}`` dict — the last
-    ``to_tsdata`` dispatch arm (reference data.py:447-512): per-kind frames
-    are unioned under a literal kind column, then routed through the long
-    grouped path.  Output is the usual long triple frame
-    ``(column_id, column_kind, variable, value)``."""
-    long_df = union_dict_of_kinds(
-        ts_dict,
-        column_id=column_id,
-        column_value=column_value,
-        column_sort=column_sort,
-        column_kind=column_kind,
-    )
-    return extract_features_long(
-        long_df,
-        settings,
-        column_id=column_id,
-        column_kind=column_kind,
-        column_sort=column_sort,
-        column_value=column_value,
-        kind_to_settings=kind_to_settings,
     )
 
 
